@@ -2,8 +2,9 @@
 
 Reference: /root/reference/CorrectOCR/model/hmm.py.
 
-The beam (``hmm.py:165-188``) is re-expressed as vectorized NumPy with
-**identical candidate ordering**, including ties:
+The scalar beam :func:`k_best_beam` (``hmm.py:165-188``) is the oracle.
+It is re-expressed as vectorized NumPy with **identical candidate
+ordering**, including ties:
 
 - the reference sorts path lists with Python's stable ``sorted(...,
   key=prob, reverse=True)``; ``reverse=True`` on a stable sort keeps
@@ -18,13 +19,41 @@ State order = insertion order of the ``init`` mapping (``hmm.py:26-30``:
 Missing chars hit ``defaultdict(float)`` => probability-0 paths that are
 kept when fewer than k nonzero paths exist — we therefore never prune
 zero-probability paths.
+
+**Batched beam** (:func:`kbest_arrays`, :func:`kbest_for_words`): the
+beam after ``t + 1`` characters — its paths, their order and their
+probabilities — depends only on those ``t + 1`` observed characters, or
+more exactly on their emission columns (every char no state matches has
+the same all-zero column). So each distinct observed prefix is stepped
+once, however many words share it:
+
+- prefixes get an id per depth, ``np.unique`` over ``(parent id, char)``;
+  the step at depth ``t`` runs once per distinct depth-``t`` prefix and
+  keeps, per beam slot, the new state and the parent slot it extends;
+- a word's k-best is the beam of its full prefix, decoded by walking the
+  slot back-pointers, one length group at a time; a length-1 word takes
+  the top-k of its depth-0 vector, longer words enumerate all N*N
+  depth-1 pairs from it, exactly as the scalar beam does;
+- the ordering argument is the scalar one, row by row: each step's
+  candidates are laid out in the reference's generation order (i-major
+  at depth 1, ``cand[j, x]`` after) and ranked by
+  :func:`_stable_topk_desc`, which equals the stable argsort prefix;
+- floats stay bitwise equal because every product is the scalar
+  expression on the same operands in the same order — ``(a*T)*e`` at
+  depth 1, ``(p*T[last]).T*e`` after — and nothing is summed or
+  rescaled; sharing a prefix only skips recomputing identical rows;
+- each depth is processed in chunks of 512 prefixes, so the largest
+  temporary is a (512, N, N) array at depth 1;
+- empty words and words holding a multichar key take the scalar path
+  (``hmm.py:194-220``); states of other than one character are decoded
+  with a per-candidate ``"".join``.
 """
 
 from __future__ import annotations
 
 import itertools
 import re
-from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
+from typing import Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -214,95 +243,142 @@ def _stable_topk_desc(flat: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]
     return out, np.take_along_axis(flat, out, axis=1)
 
 
-def _batch_beam_same_length(
-    params: HMMParams, words: List[str], k: int, chunk: int = 512
-) -> List[KBest]:
-    """Beam for a batch of same-length words, one vectorized op per char
-    step. Bitwise-identical to :func:`k_best_beam` (same multiplication
-    order and the same stable-argsort tie handling; enumeration order
-    i-major for the first two chars, j-major/path-minor after —
-    hmm.py:174-175,183-184)."""
+def _char_codes(params: HMMParams, text: str) -> np.ndarray:
+    """Observed-char index per char of ``text``: the state index of a
+    single-char state, or ``n`` (the all-zero emission column) for a char
+    no state matches (``hmm.py:52``)."""
     n = len(params.states)
-    L = len(words[0])
-    out: List[KBest] = []
-    for lo in range(0, len(words), chunk):
-        ws = words[lo : lo + chunk]
-        W = len(ws)
-        # observed-char emission columns per position: E[t] is (W, N)
-        obs = np.full((W, L), -1, dtype=np.int64)
-        for wi, w in enumerate(ws):
-            for t, ch in enumerate(w):
-                obs[wi, t] = params.index.get(ch, -1)
-        emis_ext = np.concatenate(
-            [params.emis, np.zeros((n, 1), dtype=np.float64)], axis=1
-        )  # column -1 = unknown char = all zeros
+    single = sorted((ord(s), i) for s, i in params.index.items() if len(s) == 1)
+    codes = np.array([c for c, _ in single] + [0x110000], dtype=np.int64)
+    idx = np.array([i for _, i in single] + [n], dtype=np.int64)
+    cps = np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    pos = np.searchsorted(codes, cps)
+    return np.where(codes[pos] == cps, idx[pos], n)
 
-        def ecol(t: int) -> np.ndarray:  # (W, N)
-            return emis_ext[:, obs[:, t]].T
 
-        if L == 1:
-            probs = params.init[None, :] * ecol(0)  # (W, N)
-            order = np.argsort(-probs, axis=1, kind="stable")[:, :k]
-            for wi in range(W):
-                out.append(
-                    [
-                        (params.states[j], float(probs[wi, j]))
-                        for j in order[wi]
-                    ]
-                )
+def _prefix_beam(
+    params: HMMParams, words: List[str], k: int, chunk: int = 512
+) -> Iterator[Tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """The beam for non-empty words, each distinct observed prefix once
+    (see module docstring). Yields one ``(word_indices, candidates,
+    probabilities)`` per word length; row ``r`` of the two (M, k') arrays
+    belongs to ``words[word_indices[r]]``."""
+    n = len(params.states)
+    W = len(words)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=W)
+    obs = _char_codes(params, "".join(words))
+    order = np.argsort(-lens, kind="stable")  # longest first
+    starts = (np.cumsum(lens) - lens)[order]
+    lens_sorted = lens[order]
+    # active[t]: words (sorted) with len > t are exactly the first active[t]
+    active = np.searchsorted(-lens_sorted, -np.arange(int(lens_sorted[0])), side="left")
+    E = np.concatenate([params.emis, np.zeros((n, 1))], axis=1).T  # (n+1, n)
+
+    # depth 0: one prefix per observed first char
+    p0_keys, ids = np.unique(obs[starts], return_inverse=True)
+    a0 = params.init[None, :] * E[p0_keys]  # (U0, n)
+    word_ids = [ids]  # word_ids[t][w]: prefix id at depth t, w < active[t]
+    # Per depth t >= 1: each prefix's parent id and, per beam slot, its
+    # state, the parent slot it extends and its probability. Depth 0
+    # keeps only the top-k of a0, which is what length-1 words return.
+    top0, ptop0 = _stable_topk_desc(a0, min(k, n))
+    parents, states, backs, probs = [None], [top0], [None], [ptop0]
+    kk = n  # depth-1 paths extend every depth-0 state
+    for t in range(1, len(active)):
+        A = int(active[t])
+        keys = ids[:A] * (n + 1) + obs[starts[:A] + t]
+        uk, ids = np.unique(keys, return_inverse=True)
+        par, ch = uk // (n + 1), uk % (n + 1)
+        U = len(uk)
+        kn = min(k, n * kk)
+        st = np.empty((U, kn), dtype=np.int64)
+        bk = np.empty((U, kn), dtype=np.int64)
+        pr = np.empty((U, kn))
+        for lo in range(0, U, chunk):
+            hi = min(lo + chunk, U)
+            pc, ec = par[lo:hi], E[ch[lo:hi]]
+            if t == 1:
+                # i-major N*N enumeration (hmm.py:174-175)
+                p2 = (a0[pc][:, :, None] * params.tran[None, :, :]) * ec[:, None, :]
+                o, pr[lo:hi] = _stable_topk_desc(p2.reshape(hi - lo, n * n), kn)
+                bk[lo:hi], st[lo:hi] = o // n, o % n
+            else:
+                # j-major, path-minor (hmm.py:183-184): cand[u, j, x]
+                tr = params.tran[states[t - 1][pc]]  # (C, kk, n)
+                cand = (probs[t - 1][pc][:, :, None] * tr).transpose(0, 2, 1) * ec[:, :, None]
+                o, pr[lo:hi] = _stable_topk_desc(cand.reshape(hi - lo, n * kk), kn)
+                st[lo:hi], bk[lo:hi] = o // kk, o % kk
+        word_ids.append(ids)
+        parents.append(par)
+        states.append(st)
+        backs.append(bk)
+        probs.append(pr)
+        kk = kn
+
+    single = all(len(s) == 1 and s != "\0" for s in params.states)
+    codes = np.array([ord(s) if len(s) == 1 else 0 for s in params.states], dtype=np.uint32)
+    for L in range(1, len(active) + 1):
+        lo, hi = (int(active[L]) if L < len(active) else 0), int(active[L - 1])
+        if lo == hi:
             continue
-
-        a = params.init[None, :] * ecol(0)  # (W, N)
-        p2 = (a[:, :, None] * params.tran[None, :, :]) * ecol(1)[:, None, :]
-        flat = p2.reshape(W, n * n)  # i-major
-        order, probs = _stable_topk_desc(flat, min(k, n * n))
-        kk = order.shape[1]
-        paths = np.empty((W, kk, L), dtype=np.int64)
-        paths[:, :, 0] = order // n
-        paths[:, :, 1] = order % n
-
-        for t in range(2, L):
-            last = paths[:, :, t - 1]  # (W, kk)
-            tr = params.tran[last]  # (W, kk, N): tr[w,x,j]
-            cand = (probs[:, :, None] * tr).transpose(0, 2, 1) * ecol(t)[:, :, None]
-            flat = cand.reshape(W, n * kk)  # j-major, path-minor
-            order, probs = _stable_topk_desc(flat, min(k, n * kk))
-            j_idx = order // kk
-            x_idx = order % kk
-            new_paths = np.empty((W, order.shape[1], L), dtype=np.int64)
-            new_paths[:, :, :t] = paths[np.arange(W)[:, None], x_idx, :t]
-            new_paths[:, :, t] = j_idx
-            paths = new_paths
-            kk = order.shape[1]
-
-        states = params.states
-        for wi in range(W):
-            out.append(
-                [
-                    ("".join(states[s] for s in paths[wi, x, :L]), float(probs[wi, x]))
-                    for x in range(kk)
-                ][:k]
-            )
-    return out
+        final, inv = np.unique(word_ids[L - 1][lo:hi], return_inverse=True)
+        kn = states[L - 1].shape[1]
+        seq = np.empty((len(final), kn, L), dtype=np.int64)
+        pid = final
+        slot = np.broadcast_to(np.arange(kn), (len(final), kn))
+        for d in range(L - 1, 0, -1):
+            seq[:, :, d] = states[d][pid[:, None], slot]
+            slot = backs[d][pid[:, None], slot]
+            pid = parents[d][pid]
+        seq[:, :, 0] = states[0][pid[:, None], slot] if L == 1 else slot
+        if single:
+            strs = codes[seq].view(f"U{L}").reshape(len(final), kn)
+        else:  # multi-character states: join per candidate
+            strs = np.empty((len(final), kn), dtype=object)
+            for (u, x), path in zip(np.ndindex(len(final), kn), seq.reshape(-1, L).tolist()):
+                strs[u, x] = "".join(params.states[s] for s in path)
+        yield order[lo:hi], strs[inv], probs[L - 1][final][inv]
 
 
-def kbest_for_words(params: HMMParams, words: List[str], k: int) -> List[KBest]:
-    """Batched :func:`kbest_for_word`: groups by word length and runs the
-    vectorized beam; multichar-bearing and empty words take the scalar
-    path (rare). Returns results in input order, identical to the scalar
-    function."""
-    results: List[Optional[KBest]] = [None] * len(words)
-    by_len: Dict[int, List[int]] = {}
-    for i, w in enumerate(words):
-        if len(w) == 0 or any(sub in w for sub in params.multichars):
-            results[i] = kbest_for_word(params, w, k)
-        else:
-            by_len.setdefault(len(w), []).append(i)
-    for _length, idxs in by_len.items():
-        batch = _batch_beam_same_length(params, [words[i] for i in idxs], k)
-        for i, kb in zip(idxs, batch):
-            results[i] = kb
-    return results  # type: ignore[return-value]
+def kbest_arrays(
+    params: HMMParams, words: Sequence[str], k: int
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Batched :func:`kbest_for_word` as flat arrays: candidates (object
+    array of str), probabilities and ``offsets``; word ``i`` owns
+    ``[offsets[i], offsets[i+1])``. Bitwise-identical to the scalar
+    function. Empty and multichar-bearing words take the scalar path."""
+    is_scalar = np.array(
+        [len(w) == 0 or not params.states or any(sub in w for sub in params.multichars) for w in words],
+        dtype=bool,
+    )
+    scalar = np.flatnonzero(is_scalar).tolist()
+    beam_idx = np.flatnonzero(~is_scalar)
+    groups = list(_prefix_beam(params, [words[i] for i in beam_idx], k)) if len(beam_idx) else []
+    scalar_kb = [kbest_for_word(params, words[i], k) for i in scalar]
+    counts = np.zeros(len(words), dtype=np.int64)
+    for idx, strs, _pr in groups:
+        counts[beam_idx[idx]] = strs.shape[1]
+    counts[scalar] = [len(kb) for kb in scalar_kb]
+    offsets = np.concatenate([[0], np.cumsum(counts)])
+    cands = np.empty(int(offsets[-1]), dtype=object)
+    probs = np.empty(int(offsets[-1]), dtype=np.float64)
+    for idx, strs, pr in groups:
+        pos = offsets[beam_idx[idx]][:, None] + np.arange(strs.shape[1])
+        cands[pos] = strs
+        probs[pos] = pr
+    for i, kb in zip(scalar, scalar_kb):
+        lo, hi = offsets[i], offsets[i + 1]
+        cands[lo:hi] = [c for c, _ in kb]
+        probs[lo:hi] = [p for _, p in kb]
+    return cands, probs, offsets
+
+
+def kbest_for_words(params: HMMParams, words: Sequence[str], k: int) -> List[KBest]:
+    """Batched :func:`kbest_for_word`, results in input order, identical
+    to the scalar function."""
+    cands, probs, offsets = kbest_arrays(params, words, k)
+    pairs = list(zip(cands.tolist(), probs.tolist()))
+    return [pairs[lo:hi] for lo, hi in zip(offsets[:-1].tolist(), offsets[1:].tolist())]
 
 
 def multichar_variants(word: str, original: str, replacements: List[str]) -> set:

@@ -34,27 +34,33 @@ Two physical strategies for ``corrected()``:
   (k-best join; AQE may broadcast) and by url (finalize). Survives any
   vocabulary size: this is the 100 TB path.
 - ``broadcast`` — two-pass: (a) distinct consolidated words -> beam ->
-  collect the word->kbest map to the driver and broadcast it; (b) ONE
+  fetch the word->kbest map to the driver as Arrow (``toArrow``, built
+  into a dict from its flat columns) and broadcast it; (b) ONE
   ``mapInPandas`` over pages runs the exact per-doc kernel
   (``kernels.pipeline.correct_document``) with the broadcast map. Zero
   shuffles of token data — the Spark realization of the reference's LRU
   cache (hmm.py:82-88). Right whenever the vocabulary fits a broadcast
   (it is Zipf-bounded: ~100k-1M distinct words per language).
-- ``auto`` (default) — count distinct words, pick broadcast below
-  ``max_broadcast_vocab``, else join.
+- ``auto`` (default) — fetch the map as for ``broadcast`` but at most
+  ``max_broadcast_vocab + 1`` rows of it; more rows than the bound pick
+  ``join``, which reuses the persisted k-best table, else broadcast.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ..kernels.hmm import kbest_for_word, kbest_for_words
+from ..kernels.hmm import kbest_arrays
 from ..kernels.pipeline import (
     Tok,
     consolidated,
@@ -255,29 +261,31 @@ class CorrectionPipeline:
         b_res = self._b_res
         k = self.k
 
-        @F.pandas_udf(KBEST_STRUCT)
-        def kbest_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        @F.arrow_udf(KBEST_STRUCT)  # Iterator -> Iterator: SCALAR_ITER
+        def kbest_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
             res: Resources = b_res.value
-            params = res.params
             d = res.dictionary
-            memo = {}
+            out_fields = list(to_arrow_type(KBEST_STRUCT))
+            kbest_type, flags_type = (f.type for f in out_fields)
             for words in batches:
-                fresh = [w for w in dict.fromkeys(words) if w not in memo]
-                if fresh:
-                    # vectorized beam across the batch's new words
-                    # (bitwise-identical to the scalar beam; see
-                    # kernels/hmm.py::kbest_for_words)
-                    for w, kb in zip(fresh, kbest_for_words(params, fresh, k)):
-                        memo[w] = (
-                            [{"candidate": c, "probability": p} for c, p in kb],
-                            [c in d for c, _p in kb],
-                        )
-                kbs, flags = [], []
-                for w in words:
-                    hit = memo[w]
-                    kbs.append(hit[0])
-                    flags.append(hit[1])
-                yield pd.DataFrame({"kbest": kbs, "cand_in_dict": flags})
+                # prefix-shared beam over the batch, bitwise-identical to
+                # the scalar beam (kernels/hmm.py::kbest_arrays)
+                cands, probs, offsets = kbest_arrays(res.params, words.to_pylist(), k)
+                cands = cands.tolist()
+                in_dict = {c: c in d for c in set(cands)}
+                offs = pa.array(offsets, pa.int32())
+                pairs = pa.StructArray.from_arrays(
+                    [pa.array(cands, pa.string()), pa.array(probs)],
+                    fields=list(kbest_type.value_type),
+                )
+                flags = pa.array([in_dict[c] for c in cands], pa.bool_())
+                yield pa.StructArray.from_arrays(
+                    [
+                        pa.ListArray.from_arrays(offs, pairs, type=kbest_type),
+                        pa.ListArray.from_arrays(offs, flags, type=flags_type),
+                    ],
+                    fields=out_fields,
+                )
 
         words = (
             tokens.where(F.col("cons_word").isNotNull())
@@ -479,33 +487,25 @@ class CorrectionPipeline:
         max_broadcast_vocab: int = 2_000_000,
     ) -> DataFrame:
         """Corrected documents. See module docstring for the two physical
-        strategies; ``auto`` counts the vocabulary and picks."""
+        strategies and how ``auto`` picks between them."""
         if strategy == "join":
             return self.finalize(self.tokens(pages))
         kb = self.kbest_table(self.vocab(pages)).persist()
+        # ONE action fetches the map as Arrow (no Row objects); under
+        # auto it also decides: at most max_broadcast_vocab + 1 rows
+        # cross, and more than the bound means the join path.
+        fetch = kb.select("cons_word", "kbest")
         if strategy == "auto":
-            # ONE action decides AND fetches: collect at most
-            # max_broadcast_vocab + 1 rows — len > max is exactly the
-            # former count's n_words > max condition, with the same
-            # driver-memory bound (never more than max + 1 rows cross),
-            # and in the broadcast case the rows are already here, so
-            # the separate count job the old form paid is gone.
-            rows = (
-                kb.select("cons_word", "kbest")
-                .limit(max_broadcast_vocab + 1)
-                .collect()
-            )
-            if len(rows) > max_broadcast_vocab:
-                # Fallback reuses the already-materialized vocabulary
-                # beam (kb stays persisted — the collect above computed
-                # it; recomputing the beam over a huge vocabulary is
-                # the single most expensive stage). The caller may
-                # unpersist kb via the returned plan's lineage once the
-                # result is consumed.
-                return self.finalize(self.tokens(pages, kb=kb))
-            out = self._corrected_broadcast(pages, kb, rows=rows)
-        else:
-            out = self._corrected_broadcast(pages, kb)
+            fetch = fetch.limit(max_broadcast_vocab + 1)
+        table = fetch.toArrow()
+        if strategy == "auto" and table.num_rows > max_broadcast_vocab:
+            # Fallback reuses the already-materialized vocabulary beam
+            # (kb stays persisted — the fetch above computed it;
+            # recomputing the beam over a huge vocabulary is the single
+            # most expensive stage). The caller may unpersist kb via the
+            # returned plan's lineage once the result is consumed.
+            return self.finalize(self.tokens(pages, kb=kb))
+        out = self._corrected_broadcast(pages, _kbest_map(table))
         kb.unpersist()
         return out
 
@@ -561,20 +561,10 @@ class CorrectionPipeline:
             run, schema=T.StructType([T.StructField("cons_word", T.StringType(), False)])
         ).distinct()
 
-    def _corrected_broadcast(
-        self, pages: DataFrame, kbest_table: DataFrame, rows=None
-    ) -> DataFrame:
+    def _corrected_broadcast(self, pages: DataFrame, kb_map: dict) -> DataFrame:
         """One mapInPandas pass with the broadcast word->kbest map running
         the exact reference kernel per document (the differential-test
-        oracle IS the executor code — byte-identity by construction).
-        ``rows`` short-circuits the collect when the caller already
-        fetched the (cons_word, kbest) rows (corrected's auto path)."""
-        if rows is None:
-            rows = kbest_table.select("cons_word", "kbest").collect()
-        kb_map = {
-            r["cons_word"]: [(c["candidate"], c["probability"]) for c in r["kbest"]]
-            for r in rows
-        }
+        oracle IS the executor code — byte-identity by construction)."""
         b_map = self.spark.sparkContext.broadcast(kb_map)
         b_res = self._b_res
         k = self.k
@@ -690,6 +680,24 @@ class CorrectionPipeline:
             )
         )
         return grouped.select("url", fin_udf("toks").alias("o")).select("url", "o.*")
+
+
+def _kbest_map(table: pa.Table) -> dict:
+    """``{cons_word: [(candidate, probability), ...]}`` from a fetched
+    (cons_word, kbest) Arrow table, built from its flat columns."""
+    kbest = table.column("kbest")
+    flat = pc.list_flatten(kbest)
+    pairs = list(
+        zip(
+            pc.struct_field(flat, "candidate").to_pylist(),
+            pc.struct_field(flat, "probability").to_pylist(),
+        )
+    )
+    offsets = np.cumsum(pc.list_value_length(kbest).to_numpy()).tolist()
+    return {
+        w: pairs[lo:hi]
+        for w, lo, hi in zip(table.column("cons_word").to_pylist(), [0] + offsets, offsets)
+    }
 
 
 def _make_texts_of(use_html: bool):

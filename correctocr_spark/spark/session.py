@@ -64,8 +64,11 @@ def get_spark(
     - Arrow on: all pandas UDFs move data in columnar batches;
     - shuffle partitions sized to parallelism (local) — on a real cluster
       leave it to AQE's coalescing from a higher initial value.
+
+    ``cores`` defaults to ``SPARK_GRAFT_CPUS``, else to the CPUs this
+    process may run on.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

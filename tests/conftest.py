@@ -2,6 +2,12 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
+
+# Property tests draw the same examples every run: tier-1 stays
+# deterministic, and a loaded machine cannot trip a per-example deadline.
+settings.register_profile("deterministic", derandomize=True, deadline=None)
+settings.load_profile("deterministic")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

@@ -110,3 +110,77 @@ def test_bin_always_assigned(word, kbest):
     heuristic, selection, number = bin_for_word(word, kbest, d, DEFAULT_SETTINGS)
     assert 1 <= number <= 10
     assert heuristic in ("original", "kbest", "kdict", "annotator")
+
+
+# --- batched beam == scalar beam -------------------------------------------
+
+from correctocr_spark.kernels.hmm import HMMParams, kbest_for_word, kbest_for_words  # noqa: E402
+
+# few distinct values, so equal products (ties) are common
+_PROB = st.sampled_from([0.0, 1e-3, 0.1, 0.25, 0.5, 1.0])
+# "ch" and "\0" are states no observed char emits; "?" and "z" are
+# observed chars no state matches (all-zero emission columns)
+_STATE_POOL = ["a", "b", "c", "d", "e", "ch", "\0"]
+_UNKNOWN = "?z"
+
+
+@st.composite
+def beam_models(draw):
+    states = draw(st.lists(st.sampled_from(_STATE_POOL), min_size=2, max_size=6, unique=True))
+    init = {s: draw(_PROB) for s in states}
+    tran = {a: {b: draw(_PROB) for b in states} for a in states}
+    emis = {a: {b: draw(_PROB) for b in states} for a in states}
+    multichars = draw(st.sampled_from([{}, {"ab": ["c"]}, {"b": ["a", "?"]}]))
+    return HMMParams(init, tran, emis, multichars)
+
+
+def _observed_chars(params):
+    return "".join(s for s in params.states if len(s) == 1) + _UNKNOWN
+
+
+def _hexed(kbs):
+    return [[(c, p.hex()) for c, p in kb] for kb in kbs]
+
+
+@st.composite
+def beam_batches(draw):
+    params = draw(beam_models())
+    text = st.text(alphabet=_observed_chars(params), max_size=8)
+    base = draw(st.lists(text, min_size=1, max_size=25))
+    cuts = draw(st.lists(st.tuples(st.integers(0, len(base) - 1), st.integers(0, 8)), max_size=25))
+    # prefixes of other words (shared across lengths), duplicates, the
+    # empty word, a length-1 word and an unknown-char word, shuffled
+    words = base + [base[i][:j] for i, j in cuts] + [base[0], "", params.states[0][0], _UNKNOWN]
+    words = draw(st.permutations(words))
+    k = draw(st.integers(1, 10))  # k > n*n for 2-3 states at the top
+    return params, words, k
+
+
+@given(beam_batches())
+@settings(max_examples=300)
+def test_batched_beam_equals_scalar_beam(batch):
+    params, words, k = batch
+    assert _hexed(kbest_for_words(params, words, k)) == _hexed(
+        [kbest_for_word(params, w, k) for w in words]
+    )
+
+
+@given(st.integers(0, 2**32 - 1), st.integers(1, 6))
+@settings(max_examples=10)
+def test_batched_beam_equals_scalar_beam_past_one_chunk(seed, k):
+    """More distinct prefixes at one depth than one 512-prefix chunk,
+    mostly of known chars, so that later chunks hold non-zero rows."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    states = list(rng.permutation(list("abcdef")))
+    init = dict(zip(states, rng.random(6)))
+    tran = {a: dict(zip(states, rng.random(6))) for a in states}
+    emis = {a: dict(zip(states, rng.random(6))) for a in states}
+    params = HMMParams(init, tran, emis)
+    chars = np.array(states + ["?"])
+    words = ["".join(rng.choice(chars, size=rng.integers(1, 9))) for _ in range(1500)]
+    assert max(len({w[:d] for w in words if len(w) >= d}) for d in range(1, 9)) > 512
+    assert _hexed(kbest_for_words(params, words, k)) == _hexed(
+        [kbest_for_word(params, w, k) for w in words]
+    )

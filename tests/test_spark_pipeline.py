@@ -110,12 +110,34 @@ def test_adversarial_differential_fuzz(spark, pipeline, resources):
 
 
 def test_strategies_agree(spark, pipeline):
+    """Both strategies agree, and so does ``auto`` on each side of its
+    bound (``max_broadcast_vocab=1`` forces the join fallback)."""
     pages = synth_pages(spark, 40, seed=321).cache()
-    a = {r["url"]: tuple(r) for r in pipeline.corrected(pages, strategy="join").collect()}
-    b = {r["url"]: tuple(r) for r in pipeline.corrected(pages, strategy="broadcast").collect()}
-    c = {r["url"]: tuple(r) for r in pipeline.corrected_two_phase(pages).collect()}
-    assert a == b == c
+
+    def run(out):
+        return {r["url"]: tuple(r) for r in out.collect()}
+
+    join = run(pipeline.corrected(pages, strategy="join"))
+    assert join == run(pipeline.corrected(pages, strategy="broadcast"))
+    assert join == run(pipeline.corrected_two_phase(pages))
+    assert join == run(pipeline.corrected(pages, strategy="auto"))
+    assert join == run(pipeline.corrected(pages, strategy="auto", max_broadcast_vocab=1))
     spark.catalog.clearCache()
+
+
+def test_kbest_table_equals_scalar_beam(spark, pipeline, resources):
+    """The Arrow k-best table holds, per word, the scalar beam's
+    candidates and exact probabilities plus each candidate's
+    dictionary flag."""
+    from correctocr_spark.kernels.hmm import kbest_for_word
+
+    rows = pipeline.kbest_table(pipeline.vocab(synth_pages(spark, 40, seed=5))).collect()
+    assert len(rows) > 100
+    for r in rows:
+        expected = kbest_for_word(resources.params, r["cons_word"], resources.k)
+        got = [(c["candidate"], c["probability"].hex()) for c in r["kbest"]]
+        assert got == [(c, p.hex()) for c, p in expected], r["cons_word"]
+        assert r["cand_in_dict"] == [c in resources.dictionary for c, _p in expected]
 
 
 def test_giant_document_skew(spark, pipeline, resources):
