@@ -404,10 +404,10 @@ def run_scaling() -> dict:
             pages = spark.read.parquet(PAGES_CACHE)
             pipe = _pipeline(spark)
             # warm up JVM / python workers / broadcasts
-            materialize(pipe.corrected(pages.limit(500), strategy="broadcast"))
-            # timed job: extraction materialized as its own stage boundary
+            materialize(pipe.corrected(pages.limit(500)))
+            # timed job: the one-pass correction plan
             t0 = time.monotonic()
-            materialize(pipe.corrected_two_phase(pages, strategy="broadcast"))
+            materialize(pipe.corrected(pages))
             elapsed = time.monotonic() - t0
             times[cores].append(elapsed)
             best[cores] = min(best[cores], elapsed)

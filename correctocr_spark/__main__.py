@@ -57,7 +57,7 @@ def build_parser() -> argparse.ArgumentParser:
     prep.add_argument("--k", type=int, default=int(_env_default("k", "4")))
     prep.add_argument("--settings", choices=["shipped", "aggressive"],
                       default=_env_default("settings", "shipped"))
-    prep.add_argument("--strategy", choices=["auto", "join", "broadcast"],
+    prep.add_argument("--strategy", choices=["auto", "join"],
                       default=_env_default("strategy", "auto"))
     prep.add_argument("--no-dehyphenate", action="store_true")
     prep.add_argument("--no-html", action="store_true",
@@ -96,7 +96,7 @@ def build_parser() -> argparse.ArgumentParser:
     corr.add_argument("--k", type=int, default=int(_env_default("k", "4")))
     corr.add_argument("--settings", choices=["shipped", "aggressive"],
                       default=_env_default("settings", "aggressive"))
-    corr.add_argument("--strategy", choices=["auto", "join", "broadcast"],
+    corr.add_argument("--strategy", choices=["auto", "join"],
                       default=_env_default("strategy", "auto"))
     corr.add_argument("--no-dehyphenate", action="store_true")
     corr.add_argument("--no-html", action="store_true")

@@ -137,7 +137,8 @@ def generate_kbest(
     """model/hmm.py:235-257 — k-best for each consolidated token.
 
     ``lookup`` maps a (merged) original to its rank-ordered candidates —
-    in Spark this is the distinct-word join; standalone it calls the beam.
+    in Spark it reads the task-local map of the one-pass plan; standalone
+    it calls the beam.
     """
     for original, _gold, token in consolidated(tokens):
         if force or not token.kbest or len(token.kbest) != k:
@@ -264,6 +265,36 @@ def doc_stats(tokens: List[Tok]) -> Dict[str, int]:
     return stats
 
 
+def correct_tokens(
+    tokens: List[Tok],
+    lookup: Callable[[str], KBest],
+    dictionary: Dictionary,
+    settings: Dict[int, str],
+    k: int = 4,
+    decision_memo: Optional[dict] = None,
+) -> Dict[str, object]:
+    """The reference chain after tokenization on one document's tokens:
+    k-best, bins, autocorrect, both text surfaces and the stats.
+
+    ``correct_document`` and the Spark executor both run it, so the
+    oracle and the job share one implementation. ``lookup`` maps a
+    consolidated word to its k-best; ``decision_memo`` is shared across
+    documents (see :func:`bin_tokens`). Returns :func:`doc_stats` with
+    ``done`` as a bool, plus ``corrected`` (gold-sink text), ``merged``
+    (``__str__`` text), ``bin_counts`` and ``tokens``.
+    """
+    generate_kbest(tokens, lookup, k)
+    bin_tokens(tokens, dictionary, settings, memo=decision_memo)
+    autocorrect(tokens)
+    out: Dict[str, object] = doc_stats(tokens)  # a fresh dict
+    out["done"] = bool(out["done"])
+    out["corrected"] = gold_sink_text(tokens)
+    out["merged"] = doc_to_string(tokens)
+    out["bin_counts"] = doc_bin_counts(tokens)
+    out["tokens"] = tokens
+    return out
+
+
 def correct_document(
     text: str,
     params: HMMParams,
@@ -276,9 +307,9 @@ def correct_document(
 ) -> Dict[str, object]:
     """The full reference chain on one document (the differential oracle).
 
-    Returns ``{'corrected': gold-sink text, 'merged': __str__ text,
-    'tokens': [Tok]}``. ``kbest_map`` lets the Spark pipeline inject the
-    join-computed candidates; standalone, the beam runs per distinct word.
+    Returns :func:`correct_tokens`' record. ``kbest_map`` injects
+    precomputed candidates; without it the scalar beam runs once per
+    distinct word.
     """
     tokens = tokenize_doc(text)
     if dehyphenate_doc:
@@ -293,11 +324,4 @@ def correct_document(
                 memo[w] = kbest_for_word(params, w, k)
             return memo[w]
 
-    generate_kbest(tokens, lookup, k)
-    bin_tokens(tokens, dictionary, settings, memo=decision_memo)
-    autocorrect(tokens)
-    return {
-        "corrected": gold_sink_text(tokens),
-        "merged": doc_to_string(tokens),
-        "tokens": tokens,
-    }
+    return correct_tokens(tokens, lookup, dictionary, settings, k, decision_memo)

@@ -1,70 +1,74 @@
-"""The correction pipeline as a Spark DataFrame DAG.
+"""The correction pipeline as Spark plans.
 
 Reference chain (document.py:166-242):
-``tokenize -> dehyphenate -> kbest -> bin -> autocorrect -> reassemble``
-re-expressed as:
+``tokenize -> dehyphenate -> kbest -> bin -> autocorrect -> reassemble``.
+``corrected()`` has two plans for it.
 
-1. **extract** (new stage, north rule): ``html binary -> text`` via
-   ``mapInPandas`` over Arrow batches (kernels/extract.py);
-2. **tokenize+dehyphenate** (vectorized pandas UDF -> ``explode``): all
-   doc-local sequence logic — hyphen marks, tail gold-clears, punctuation
-   gold, *merged* consolidated words — is computed inside the UDF, so no
-   window/shuffle is spent on it;
-3. **k-best**: the reference's per-word LRU cache (_cache.py:10-52,
-   hmm.py:194) becomes ``distinct(cons_word) -> beam UDF -> join back``
-   — the central rewrite: the Zipfian word distribution means the beam
-   runs once per distinct word, and AQE turns the join into a broadcast
-   when the vocabulary is small;
-4. **bin** (pandas UDF over (original, k1, candidate-dict-flags)): the
-   dictionary predicate runs once per *distinct word* for candidates (in
-   the k-best stage) and once per token for the raw original; bin
-   selection itself is pure boolean algebra (heuristics.py:317-358);
-5. **tail copy + autocorrect**: native column algebra — ``lag()`` over
-   ``(url, idx)`` copies the head's decision onto the hyphen tail
-   (heuristics.py:105-110), then a ``CASE WHEN`` chain implements
-   document.py:231-239 (whole-stage codegen, no Python);
-6. **finalize**: ``groupBy(url)`` + JVM-native ``sort_array(collect_list)``
-   + one batched pandas UDF reassembles both contract surfaces
-   byte-exactly (gold sink tokens/_text.py:47-54 and the hyphen-merged
-   ``__str__`` _super.py:67-79) plus per-doc stats (A1).
+``auto`` (default) — one ``mapInPandas`` over the pages, and no Spark job
+before the caller's action. Per task, and per Arrow batch:
 
-Two physical strategies for ``corrected()``:
+1. extract each page once (``kernels/extract.py``), or take ``text``
+   when ``use_html=False``;
+2. tokenize and dehyphenate it once;
+3. beam the batch's consolidated words that the task has not seen yet in
+   one ``kbest_for_words`` call (the prefix-shared batched beam, bitwise
+   equal to the scalar beam) into a task-local word -> k-best map;
+4. run ``kernels.pipeline.correct_tokens`` on those same tokens; the
+   differential oracle ``correct_document`` runs the same function.
 
-- ``join`` — the shapes above; the token table is shuffled by word
-  (k-best join; AQE may broadcast) and by url (finalize). Survives any
-  vocabulary size: this is the 100 TB path.
-- ``broadcast`` — two-pass: (a) distinct consolidated words -> beam ->
-  fetch the word->kbest map to the driver as Arrow (``toArrow``, built
-  into a dict from its flat columns) and broadcast it; (b) ONE
-  ``mapInPandas`` over pages runs the exact per-doc kernel
-  (``kernels.pipeline.correct_document``) with the broadcast map. Zero
-  shuffles of token data — the Spark realization of the reference's LRU
-  cache (hmm.py:82-88). Right whenever the vocabulary fits a broadcast
-  (it is Zipf-bounded: ~100k-1M distinct words per language).
-- ``auto`` (default) — fetch the map as for ``broadcast`` but at most
-  ``max_broadcast_vocab + 1`` rows of it; more rows than the bound pick
-  ``join``, which reuses the persisted k-best table, else broadcast.
+The task-local map is the reference's per-process LRU cache
+(hmm.py:82-88) scoped to one task:
+
+- memory: each task holds only its own words, never the corpus
+  vocabulary;
+- beam work: a word is beamed once per task that holds it instead of
+  once per corpus. At seed 1 over perfbench's 4 read partitions that is
+  19,187 beam calls for 10,677 distinct words (1.80x) on ``html_zipf`` and
+  20,280 for 16,451 (1.23x) on ``text_longtail``;
+- scale: under Heaps' law a task's distinct words grow with the task's
+  size, not the corpus's, so the beam's share of per-token work depends
+  on partition size. Hot words are beamed once per task, as the
+  reference beams them once per process.
+
+``join`` — the token table (``tokens()``, which the CLI's report and
+index commands also read), reassembled per url:
+
+1. **extract + tokenize + dehyphenate** (``tokens_raw``, one
+   ``mapInPandas``): all doc-local sequence logic — hyphen marks, tail
+   gold-clears, punctuation gold, *merged* consolidated words — is
+   computed inside the UDF, so no window/shuffle is spent on it;
+2. **k-best**: ``distinct(cons_word) -> beam UDF -> join back``
+   (``kbest_table``, ``with_kbest``); AQE turns the join into a broadcast
+   when the vocabulary is small, and the shuffle join survives any
+   vocabulary size;
+3. **bin** (pandas UDF over (original, k1, candidate-dict-flags)): bin
+   selection is boolean algebra (heuristics.py:317-358);
+4. **tail copy + autocorrect**: ``lag()`` over ``(url, idx)`` copies the
+   head's decision onto the hyphen tail (heuristics.py:105-110), then a
+   ``CASE WHEN`` chain implements document.py:231-239;
+5. **finalize**: ``groupBy(url)`` + ``sort_array(collect_list)`` + one
+   batched pandas UDF reassembles both contract surfaces byte-exactly
+   (gold sink tokens/_text.py:47-54 and the hyphen-merged ``__str__``
+   _super.py:67-79) plus per-doc stats.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from ..kernels.hmm import kbest_arrays
+from ..kernels.hmm import kbest_arrays, kbest_for_words
 from ..kernels.pipeline import (
     Tok,
     consolidated,
-    correct_document,
+    correct_tokens,
     dehyphenate,
     doc_bin_counts,
     doc_stats,
@@ -391,9 +395,9 @@ class CorrectionPipeline:
                 heur = pd.Series(bins).map(settings).to_numpy(dtype=object)
                 # 'kdict' with zero in-dictionary candidates is the
                 # reference's filtids[0] IndexError (heuristics.py:132);
-                # the kernel/broadcast strategy raises there, so this
-                # strategy must too — the two physical plans stay
-                # result-identical for every (settings, input).
+                # the kernel (bin_for_word, run by the ``auto`` plan)
+                # raises there, so this plan must too — the two plans
+                # stay result-identical for every (settings, input).
                 kd_bad = (heur == "kdict") & (n_in == 0) & valid
                 if kd_bad.any():
                     raise IndexError(
@@ -478,63 +482,50 @@ class CorrectionPipeline:
         t = self.with_decisions(t)
         return t.withColumn("gold", self._autocorrect_col())
 
-    # -- stage 6: reassembly ---------------------------------------------------
+    # -- corrected documents ----------------------------------------------------
 
-    def corrected(
-        self,
-        pages: DataFrame,
-        strategy: str = "auto",
-        max_broadcast_vocab: int = 2_000_000,
-    ) -> DataFrame:
-        """Corrected documents. See module docstring for the two physical
-        strategies and how ``auto`` picks between them."""
+    def corrected(self, pages: DataFrame, strategy: str = "auto") -> DataFrame:
+        """Corrected documents, one row per url. ``auto`` is the one-pass
+        plan, ``join`` the token-table plan (see the module docstring)."""
         if strategy == "join":
             return self.finalize(self.tokens(pages))
-        kb = self.kbest_table(self.vocab(pages)).persist()
-        # ONE action fetches the map as Arrow (no Row objects); under
-        # auto it also decides: at most max_broadcast_vocab + 1 rows
-        # cross, and more than the bound means the join path.
-        fetch = kb.select("cons_word", "kbest")
-        if strategy == "auto":
-            fetch = fetch.limit(max_broadcast_vocab + 1)
-        table = fetch.toArrow()
-        if strategy == "auto" and table.num_rows > max_broadcast_vocab:
-            # Fallback reuses the already-materialized vocabulary beam
-            # (kb stays persisted — the fetch above computed it;
-            # recomputing the beam over a huge vocabulary is the single
-            # most expensive stage). The caller may unpersist kb via the
-            # returned plan's lineage once the result is consumed.
-            return self.finalize(self.tokens(pages, kb=kb))
-        out = self._corrected_broadcast(pages, _kbest_map(table))
-        kb.unpersist()
-        return out
+        if strategy != "auto":
+            raise ValueError(f"unknown strategy {strategy!r}: expected 'auto' or 'join'")
+        b_res = self._b_res
+        k = self.k
+        dehyph = self.dehyphenate
+        texts_of = _make_texts_of(self.use_html)
+        columns = [f.name for f in CORRECTED_SCHEMA.fields]
 
-    def corrected_two_phase(
-        self,
-        pages: DataFrame,
-        strategy: str = "broadcast",
-        max_broadcast_vocab: int = 2_000_000,
-    ) -> DataFrame:
-        """Extraction materialized as its own stage boundary (persist),
-        then correction from the text table — html bytes cross Arrow
-        exactly once instead of once per pass. This is the plan shape a
-        cluster job uses (the extracted table is also the natural
-        lineage/resume checkpoint between the two stages); it measured
-        best in the scaling bench. Caller may unpersist via the returned
-        DataFrame's lineage once consumed."""
-        if not self.use_html:
-            return self.corrected(pages, strategy, max_broadcast_vocab)
-        extracted = self.extracted(pages).select("url", "text").persist()
-        extracted.count()
-        text_pipe = CorrectionPipeline(
-            self.spark,
-            self.resources,
-            dehyphenate=self.dehyphenate,
-            use_html=False,
-            broadcast_kbest=self.broadcast_kbest,
-            parallelism=self.parallelism,
-        )
-        return text_pipe.corrected(extracted, strategy, max_broadcast_vocab)
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            res: Resources = b_res.value
+            dictionary = res.dictionary
+            kbest_map: dict = {}  # this task's words only
+            decision_memo: dict = {}
+            for pdf in batches:
+                docs = []
+                fresh: dict = {}  # insertion-ordered set
+                for text in texts_of(pdf):
+                    toks = tokenize_doc(text or "")
+                    if dehyph:
+                        dehyphenate(toks)
+                    docs.append(toks)
+                    for word, _gold, _tok in consolidated(toks):
+                        if word not in kbest_map:
+                            fresh[word] = None
+                if fresh:
+                    kbest_map.update(zip(fresh, kbest_for_words(res.params, list(fresh), k)))
+                out = []
+                for url, toks in zip(pdf["url"], docs):
+                    r = correct_tokens(
+                        toks, kbest_map.__getitem__, dictionary, res.settings, k, decision_memo
+                    )
+                    r["url"] = url
+                    out.append(r)
+                yield pd.DataFrame(out, columns=columns)
+
+        source = "html" if self.use_html else "text"
+        return pages.select("url", source).mapInPandas(run, schema=CORRECTED_SCHEMA)
 
     def vocab(self, pages: DataFrame) -> DataFrame:
         """Distinct consolidated words of the corpus — the k-best input.
@@ -560,62 +551,6 @@ class CorrectionPipeline:
         return pages.select(*self._page_cols()).mapInPandas(
             run, schema=T.StructType([T.StructField("cons_word", T.StringType(), False)])
         ).distinct()
-
-    def _corrected_broadcast(self, pages: DataFrame, kb_map: dict) -> DataFrame:
-        """One mapInPandas pass with the broadcast word->kbest map running
-        the exact reference kernel per document (the differential-test
-        oracle IS the executor code — byte-identity by construction)."""
-        b_map = self.spark.sparkContext.broadcast(kb_map)
-        b_res = self._b_res
-        k = self.k
-        dehyph = self.dehyphenate
-        use_html = self.use_html
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            res: Resources = b_res.value
-            dictionary = res.dictionary
-            kbest_map = b_map.value
-            decision_memo: dict = {}  # shared across the worker's docs
-            for pdf in batches:
-                out = []
-                texts = (
-                    [extract_text(h) for h in pdf["html"]]
-                    if use_html
-                    else pdf["text"]
-                )
-                for url, text in zip(pdf["url"], texts):
-                    r = correct_document(
-                        text or "",
-                        res.params,
-                        dictionary,
-                        res.settings,
-                        k=k,
-                        dehyphenate_doc=dehyph,
-                        kbest_map=kbest_map,
-                        decision_memo=decision_memo,
-                    )
-                    stats = doc_stats(r["tokens"])
-                    bins = doc_bin_counts(r["tokens"])
-                    out.append(
-                        {
-                            "url": url,
-                            "corrected": r["corrected"],
-                            "merged": r["merged"],
-                            "index_count": stats["index_count"],
-                            "token_count": stats["token_count"],
-                            "corrected_count": stats["corrected_count"],
-                            "corrected_by_annotator_count": stats["corrected_by_annotator_count"],
-                            "corrected_by_model_count": stats["corrected_by_model_count"],
-                            "hyphenated_count": stats["hyphenated_count"],
-                            "discarded_count": stats["discarded_count"],
-                            "done": bool(stats["done"]),
-                            "bin_counts": bins,
-                        }
-                    )
-                yield pd.DataFrame(out, columns=[f.name for f in CORRECTED_SCHEMA.fields])
-
-        cols = ["url", "html", "text"] if use_html else ["url", "text"]
-        return pages.select(*cols).mapInPandas(run, schema=CORRECTED_SCHEMA)
 
     FINALIZE_STRUCT = T.StructType([f for f in CORRECTED_SCHEMA.fields if f.name != "url"])
 
@@ -680,24 +615,6 @@ class CorrectionPipeline:
             )
         )
         return grouped.select("url", fin_udf("toks").alias("o")).select("url", "o.*")
-
-
-def _kbest_map(table: pa.Table) -> dict:
-    """``{cons_word: [(candidate, probability), ...]}`` from a fetched
-    (cons_word, kbest) Arrow table, built from its flat columns."""
-    kbest = table.column("kbest")
-    flat = pc.list_flatten(kbest)
-    pairs = list(
-        zip(
-            pc.struct_field(flat, "candidate").to_pylist(),
-            pc.struct_field(flat, "probability").to_pylist(),
-        )
-    )
-    offsets = np.cumsum(pc.list_value_length(kbest).to_numpy()).tolist()
-    return {
-        w: pairs[lo:hi]
-        for w, lo, hi in zip(table.column("cons_word").to_pylist(), [0] + offsets, offsets)
-    }
 
 
 def _make_texts_of(use_html: bool):

@@ -1,7 +1,6 @@
 """One-off large-scale scaling probe (VERDICT r4 item 7): the flagship
 extraction+correction job at 10x the bench's document count, local[2]
-vs local[8] interleaved, with the AUTO strategy so the vocabulary-gated
-broadcast-vs-join switch is exercised and REPORTED at this scale.
+vs local[8] interleaved, through the default one-pass plan.
 
 Usage: python scripts/scale_probe.py [n_docs] — prints one JSON line.
 Not part of bench.py (which the driver runs per-round at 300k docs);
@@ -50,7 +49,6 @@ def main():
 
     out = {"n_docs": N_DOCS, "cores": list(CORES)}
     times = {c: [] for c in CORES}
-    vocab_n = None
     for _rep in range(REPS):
         for cores in CORES:
             spark = get_spark(
@@ -59,20 +57,9 @@ def main():
             )
             pages = spark.read.parquet(CACHE)
             pipe = _pipeline(spark)
-            if vocab_n is None:
-                # which side of the 2M-vocab broadcast gate is this
-                # corpus on? (the gate counts the kbest table, one row
-                # per vocab word — counting the vocab itself is the
-                # same number without running the beam; recorded, not
-                # timed)
-                vocab_n = pipe.vocab(pages).count()
-                out["vocab_words"] = vocab_n
-                out["auto_strategy"] = (
-                    "broadcast" if vocab_n <= 2_000_000 else "join"
-                )
-            materialize(pipe.corrected(pages.limit(500), strategy="broadcast"))
+            materialize(pipe.corrected(pages.limit(500)))
             t0 = time.monotonic()
-            materialize(pipe.corrected_two_phase(pages, strategy="auto"))
+            materialize(pipe.corrected(pages))
             times[cores].append(time.monotonic() - t0)
             spark.stop()
     for c in CORES:

@@ -3,6 +3,7 @@ for ANY input, not just the reference fixtures."""
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -17,6 +18,8 @@ from correctocr_spark.kernels import (
     tokenize_doc,
 )
 from correctocr_spark.kernels.pipeline import consolidated, doc_stats
+
+pytestmark = pytest.mark.engine
 
 # text incl. the special tokens the pipeline treats specially
 _CHARS = st.text(alphabet=list("abcdefABC 123 .,»«-\xad\t\n_"), max_size=60)

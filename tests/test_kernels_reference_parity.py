@@ -17,6 +17,8 @@ from correctocr_spark.kernels import (
 from correctocr_spark.kernels.aligner import alignments, apply_as_gold
 from correctocr_spark.kernels.hmm import HMMParams
 
+pytestmark = pytest.mark.engine
+
 
 # --- cocrtests/model.py ----------------------------------------------------
 

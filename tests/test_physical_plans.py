@@ -9,6 +9,8 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
+pytestmark = pytest.mark.engine
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -73,6 +75,37 @@ def test_pipeline_shuffle_count_join_path(spark):
     # be a broadcast (small table), not a shuffle
     assert len(shuffles) <= 4, f"unexpected shuffle count {len(shuffles)}:\n{p}"
     assert len(broadcasts) >= 1, f"kbest join not broadcast:\n{p}"
+
+
+def test_one_pass_plan_runs_one_job(spark):
+    """``corrected(pages)`` plans without a Spark job and without an
+    exchange, and a noop write runs it as exactly one job."""
+    import time
+
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.synth import synth_pages
+
+    sc = spark.sparkContext
+    pipe = CorrectionPipeline(spark, use_html=True)
+    pages = synth_pages(spark, 50, seed=3)
+    try:
+        sc.setJobGroup("one-pass-plan", "corrected() call")
+        out = pipe.corrected(pages)
+        sc.setJobGroup("one-pass-run", "noop write")
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    # job events reach the tracker through the asynchronous listener bus,
+    # in order: once the write's job shows, any job of the plan call has
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("one-pass-run") and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup("one-pass-plan")) == []
+    assert len(tracker.getJobIdsForGroup("one-pass-run")) == 1
+    p = plan_of(out)
+    assert "Exchange" not in p, p  # also rules out BroadcastExchange
 
 
 def test_asof_query_scan_pruning(spark):

@@ -419,12 +419,12 @@ def test_finalize_balanced_under_host_skew(spark):
     )
     skew_out = {
         r["pid"]: r["corrected"]
-        for r in pipe.corrected(pages, strategy="broadcast")
+        for r in pipe.corrected(pages, strategy="auto")
         .select(page_id.alias("pid"), "corrected").collect()
     }
     bal_out = {
         r["pid"]: r["corrected"]
-        for r in pipe.corrected(balanced, strategy="broadcast")
+        for r in pipe.corrected(balanced, strategy="auto")
         .select(page_id.alias("pid"), "corrected").collect()
     }
     assert skew_out == bal_out and len(skew_out) == 600

@@ -4,6 +4,8 @@ import pytest
 
 from correctocr_spark.spark import session
 
+pytestmark = pytest.mark.engine
+
 
 class _Stop(Exception):
     pass

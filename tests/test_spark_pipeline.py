@@ -9,6 +9,8 @@ from correctocr_spark.kernels.pipeline import correct_document
 from correctocr_spark.spark.resources import default_resources
 from correctocr_spark.spark.synth import make_page, synth_pages
 
+pytestmark = pytest.mark.engine
+
 N_DOCS = 80
 SEED = 1234
 
@@ -47,7 +49,7 @@ def test_extract_recovers_body():
         assert extract_text(page["html"]) == page["text"], page["url"]
 
 
-@pytest.mark.parametrize("strategy", ["join", "broadcast"])
+@pytest.mark.parametrize("strategy", ["join", "auto"])
 def test_pipeline_byte_identical(spark, pipeline, resources, strategy):
     pages = synth_pages(spark, N_DOCS, seed=SEED)
     got = {
@@ -94,7 +96,7 @@ def test_adversarial_differential_fuzz(spark, pipeline, resources):
     from correctocr_spark.spark.pipeline import CorrectionPipeline
 
     pipe = CorrectionPipeline(spark, resources, use_html=False)
-    for strategy in ("join", "broadcast"):
+    for strategy in ("join", "auto"):
         got = {
             r["url"]: (r["corrected"], r["merged"])
             for r in pipe.corrected(pages, strategy=strategy).collect()
@@ -110,19 +112,86 @@ def test_adversarial_differential_fuzz(spark, pipeline, resources):
 
 
 def test_strategies_agree(spark, pipeline):
-    """Both strategies agree, and so does ``auto`` on each side of its
-    bound (``max_broadcast_vocab=1`` forces the join fallback)."""
+    """Both plans give the same rows, stats columns included."""
     pages = synth_pages(spark, 40, seed=321).cache()
 
     def run(out):
         return {r["url"]: tuple(r) for r in out.collect()}
 
     join = run(pipeline.corrected(pages, strategy="join"))
-    assert join == run(pipeline.corrected(pages, strategy="broadcast"))
-    assert join == run(pipeline.corrected_two_phase(pages))
     assert join == run(pipeline.corrected(pages, strategy="auto"))
-    assert join == run(pipeline.corrected(pages, strategy="auto", max_broadcast_vocab=1))
     spark.catalog.clearCache()
+
+
+def test_unknown_strategy_rejected(spark, pipeline):
+    pages = synth_pages(spark, 5, seed=1)
+    for strategy in ("broadcast", "Auto", ""):
+        with pytest.raises(ValueError, match="strategy"):
+            pipeline.corrected(pages, strategy=strategy)
+
+
+@pytest.mark.parametrize("use_html", [False, True])
+def test_one_pass_across_tasks_and_batches(spark, resources, use_html):
+    """The one-pass plan equals the scalar-beam kernel url by url, on
+    every output column, when hot words recur across tasks and across the
+    Arrow batches of one task (3 partitions of 40 pages, batches of 7).
+    The pages hold hyphenated heads ending a document, empty and null
+    text, characters no state emits and words holding a multichar key."""
+    import datetime
+
+    import numpy as np
+
+    from correctocr_spark.kernels.heuristics import AGGRESSIVE_SETTINGS
+    from correctocr_spark.kernels.hmm import HMMParams
+    from correctocr_spark.spark.pipeline import CORRECTED_SCHEMA, CorrectionPipeline
+    from correctocr_spark.spark.resources import Resources
+    from correctocr_spark.spark.synth import PAGES_SCHEMA
+
+    params = HMMParams.from_dicts(resources.params.to_dicts(), multichars={"rn": ["m"]})
+    res = Resources(params, resources.dictionary, AGGRESSIVE_SETTINGS, k=resources.k)
+    rng = np.random.RandomState(20261017)
+    pieces = [
+        "the", "the", "the", "and", "word", "w0rd", "modern", "corner", "tbe",
+        "str-", "te-st", "ÿÿ", "✓x", "_NEWLINE_N_", ".", "(word)", "A4",
+    ]
+    texts = []
+    for i in range(120):
+        words = [pieces[rng.randint(len(pieces))] for _ in range(rng.randint(1, 25))]
+        if i % 9 == 0:
+            words.append("str-")  # hyphenated head ending the document
+        texts.append(" ".join(words))
+    texts[5], texts[50], texts[95] = "", None, "modern-"
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (
+            f"u://one-pass/{i}",
+            ts,
+            f"<html><body><p>{t}</p></body></html>".encode() if use_html and t is not None else None,
+            t,
+            "en",
+        )
+        for i, t in enumerate(texts)
+    ]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA).repartition(3)
+    sizes = pages.rdd.glom().map(len).collect()
+    assert len(sizes) == 3 and min(sizes) > 7, sizes
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        pipe = CorrectionPipeline(spark, res, use_html=use_html)
+        got = {r["url"]: r.asDict() for r in pipe.corrected(pages).collect()}
+    finally:
+        spark.conf.set(key, saved)
+
+    columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
+    assert len(got) == len(texts)
+    for url, html, text in ((r[0], r[2], r[3]) for r in rows):
+        source = extract_text(html) if use_html else text
+        exp = correct_document(source or "", res.params, res.dictionary, res.settings, k=res.k)
+        assert {c: got[url][c] for c in columns} == {c: exp[c] for c in columns}, url
 
 
 def test_kbest_table_equals_scalar_beam(spark, pipeline, resources):
@@ -170,7 +239,7 @@ def test_empty_corpus(spark, pipeline):
     from correctocr_spark.spark.synth import PAGES_SCHEMA
 
     pages = spark.createDataFrame([], PAGES_SCHEMA)
-    for strategy in ("join", "broadcast"):
+    for strategy in ("join", "auto"):
         assert pipeline.corrected(pages, strategy=strategy).count() == 0
 
 
