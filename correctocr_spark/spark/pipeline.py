@@ -30,39 +30,47 @@ The task-local map is the reference's per-process LRU cache
   on partition size. Hot words are beamed once per task, as the
   reference beams them once per process.
 
-``join`` — the token table (``tokens()``, which the CLI's report and
-index commands also read), reassembled per url:
+``join`` — the token plan: three Python passes over one token stream,
+shared by ``corrected(strategy="join")`` and the token table
+(``tokens()``, which the CLI's report and index commands read):
 
-1. **extract + tokenize + dehyphenate** (``tokens_raw``, one
-   ``mapInPandas``): all doc-local sequence logic — hyphen marks, tail
-   gold-clears, punctuation gold, *merged* consolidated words — is
-   computed inside the UDF, so no window/shuffle is spent on it;
-2. **k-best**: ``distinct(cons_word) -> beam UDF -> join back``
-   (``kbest_table``, ``with_kbest``); AQE turns the join into a broadcast
-   when the vocabulary is small, and the shuffle join survives any
-   vocabulary size;
-3. **bin** (pandas UDF over (original, k1, candidate-dict-flags)): bin
-   selection is boolean algebra (heuristics.py:317-358);
-4. **tail copy + autocorrect**: ``lag()`` over ``(url, idx)`` copies the
-   head's decision onto the hyphen tail (heuristics.py:105-110), then a
-   ``CASE WHEN`` chain implements document.py:231-239;
-5. **finalize**: ``groupBy(url)`` + ``sort_array(collect_list)`` + one
-   batched pandas UDF reassembles both contract surfaces byte-exactly
-   (gold sink tokens/_text.py:47-54 and the hyphen-merged ``__str__``
-   _super.py:67-79) plus per-doc stats.
+1. **tokenize** (``tokens_raw``, one ``mapInPandas`` over the pages):
+   extract, tokenize and dehyphenate each page once. All doc-local
+   sequence logic — hyphen marks, tail gold-clears, punctuation gold,
+   *merged* consolidated words — is computed here, one row per token and
+   one all-null placeholder row per token-less page;
+2. **beam** (``repartition(parallelism, coalesce(cons_word, url))`` + one
+   ``mapInArrow``): each task beams the words new to it in one
+   ``kbest_for_words`` call per Arrow batch and attaches each row's
+   k-best and candidate dictionary flags. Hashing on the word co-locates
+   a word's rows, so each corpus word is beamed once, with no
+   ``distinct`` and no join; correctness does not depend on it. A Zipf-hot
+   word puts its rows in one task, but costs one beam there; ``tokens(salt=n)``
+   adds ``n`` row-hash buckets to the key to spread them;
+3. **correct** (``repartition(parallelism, url)`` +
+   ``sortWithinPartitions(url, idx)`` + one ``mapInArrow``): each url's
+   rows rebuild its ``Tok`` list, and ``correct_tokens`` — the function
+   ``auto`` and the oracle run — bins, autocorrects and reassembles it,
+   emitting one ``CORRECTED_SCHEMA`` row per url or the token table's
+   decision columns per token. The candidates' dictionary flags from
+   pass 2 answer the kernel's dictionary probes.
+
+Passes 2 and 3 are ``mapInArrow``: the k-best column crosses as Arrow,
+and only a word's first row in a task becomes Python objects.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+import json
+from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from ..kernels.hmm import kbest_arrays, kbest_for_words
 from ..kernels.pipeline import (
@@ -108,15 +116,6 @@ KBEST_STRUCT = T.StructType(
     ]
 )
 
-DECISION_STRUCT = T.StructType(
-    [
-        T.StructField("bin", T.IntegerType(), True),
-        T.StructField("heuristic", T.StringType(), True),
-        T.StructField("sel_rank", T.IntegerType(), True),
-        T.StructField("selection", T.StringType(), True),
-    ]
-)
-
 CORRECTED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -131,6 +130,35 @@ CORRECTED_SCHEMA = T.StructType(
         T.StructField("discarded_count", T.LongType(), False),
         T.StructField("done", T.BooleanType(), False),
         T.StructField("bin_counts", T.MapType(T.IntegerType(), T.LongType()), False),
+    ]
+)
+
+
+_KBEST_FIELDS = list(to_arrow_type(KBEST_STRUCT))
+
+# tokens_raw's rows; every column is nullable for the placeholder rows
+RAW_TOKENS_SCHEMA = T.StructType(
+    [T.StructField("url", T.StringType(), False)]
+    + [T.StructField(f.name, f.dataType, True) for f in TOKEN_STRUCT.fields]
+)
+
+# the beam pass's rows: k-best is null on hyphen tails and placeholders
+KBEST_TOKENS_SCHEMA = T.StructType(
+    RAW_TOKENS_SCHEMA.fields
+    + [T.StructField("discarded", T.BooleanType(), False)]
+    + [T.StructField(f.name, f.dataType, True) for f in KBEST_STRUCT.fields]
+)
+_KBEST_TOKENS_ARROW = to_arrow_schema(KBEST_TOKENS_SCHEMA)
+
+# the token table: the beam pass's rows plus the kernel's decisions
+TOKEN_TABLE_SCHEMA = T.StructType(
+    KBEST_TOKENS_SCHEMA.fields
+    + [
+        T.StructField("bin", T.IntegerType(), True),
+        T.StructField("heuristic", T.StringType(), True),
+        T.StructField("sel_rank", T.IntegerType(), True),
+        T.StructField("selection", T.StringType(), True),
+        T.StructField("gold", T.StringType(), True),
     ]
 )
 
@@ -176,7 +204,6 @@ class CorrectionPipeline:
         resources: Optional[Resources] = None,
         dehyphenate: bool = True,
         use_html: bool = True,
-        broadcast_kbest: Optional[bool] = None,
         parallelism: int = 0,
     ):
         self.spark = spark
@@ -184,7 +211,6 @@ class CorrectionPipeline:
         self.k = self.resources.k
         self.use_html = use_html
         self.dehyphenate = dehyphenate
-        self.broadcast_kbest = broadcast_kbest
         # CPU-dense UDF stages must NOT be partitioned by shuffle bytes:
         # AQE's coalescing targets ~64MB/partition, which serializes a
         # stage whose cost is compute-per-row (the beam runs ~10^4 flops
@@ -230,7 +256,7 @@ class CorrectionPipeline:
         fields = [f.name for f in TOKEN_STRUCT.fields]
         empty_row = {f: None for f in fields}
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def tokenize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 rows = []
                 for url, text in zip(pdf["url"], texts_of(pdf)):
@@ -246,49 +272,31 @@ class CorrectionPipeline:
                         rows.append(r)
                 yield pd.DataFrame(rows, columns=["url"] + fields)
 
-        schema = T.StructType(
-            [T.StructField("url", T.StringType(), False)]
-            + [
-                T.StructField(f.name, f.dataType, True)  # nullable: placeholder rows
-                for f in TOKEN_STRUCT.fields
-            ]
-        )
         return (
             pages.select(*self._page_cols())
-            .mapInPandas(run, schema=schema)
+            .mapInPandas(tokenize, schema=RAW_TOKENS_SCHEMA)
             .withColumn("discarded", F.lit(False))
         )
 
-    # -- stage 3: distinct-word k-best + join back ---------------------------
+    # -- the k-best table of a vocabulary ---------------------------------------
 
     def kbest_table(self, tokens: DataFrame) -> DataFrame:
+        """``(cons_word, kbest, cand_in_dict)`` for the distinct non-null
+        ``cons_word`` values of ``tokens``, one beam per word."""
         b_res = self._b_res
         k = self.k
 
         @F.arrow_udf(KBEST_STRUCT)  # Iterator -> Iterator: SCALAR_ITER
         def kbest_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
             res: Resources = b_res.value
-            d = res.dictionary
-            out_fields = list(to_arrow_type(KBEST_STRUCT))
-            kbest_type, flags_type = (f.type for f in out_fields)
+            in_dict = _InDict(res.dictionary)
             for words in batches:
                 # prefix-shared beam over the batch, bitwise-identical to
                 # the scalar beam (kernels/hmm.py::kbest_arrays)
                 cands, probs, offsets = kbest_arrays(res.params, words.to_pylist(), k)
-                cands = cands.tolist()
-                in_dict = {c: c in d for c in set(cands)}
-                offs = pa.array(offsets, pa.int32())
-                pairs = pa.StructArray.from_arrays(
-                    [pa.array(cands, pa.string()), pa.array(probs)],
-                    fields=list(kbest_type.value_type),
-                )
-                flags = pa.array([in_dict[c] for c in cands], pa.bool_())
                 yield pa.StructArray.from_arrays(
-                    [
-                        pa.ListArray.from_arrays(offs, pairs, type=kbest_type),
-                        pa.ListArray.from_arrays(offs, flags, type=flags_type),
-                    ],
-                    fields=out_fields,
+                    _kbest_lists(cands.tolist(), probs, offsets, in_dict),
+                    fields=_KBEST_FIELDS,
                 )
 
         words = (
@@ -301,194 +309,125 @@ class CorrectionPipeline:
             "cons_word", kbest_udf(F.col("cons_word")).alias("kb")
         ).select("cons_word", "kb.kbest", "kb.cand_in_dict")
 
-    def with_kbest(
-        self, tokens: DataFrame, salt: int = 0, kb: Optional[DataFrame] = None
-    ) -> DataFrame:
-        """Join the per-distinct-word k-best back onto the token table.
+    # -- the token plan: the token table and corrected(strategy="join") ---------
 
-        Word keys are Zipf-skewed ('the' is a meaningful fraction of all
-        tokens); with a broadcast the skew is irrelevant, and AQE's
-        skew-join splitting handles the sort-merge case. ``salt > 0``
-        adds *explicit* salting for clusters without AQE: the token side
-        gets a random-ish salt from (url, idx), the k-best side is
-        exploded x salt, and the join key becomes (word, salt) — hot
-        words spread over ``salt`` reducers.
-
-        ``kb``: a precomputed (cons_word, kbest, cand_in_dict) table —
-        the auto->join fallback passes the already-persisted vocabulary
-        beam so it is never recomputed (one beam pass per corpus)."""
-        if kb is None:
-            kb = self.kbest_table(tokens)
-        if self.broadcast_kbest:
-            kb = F.broadcast(kb)
-        if salt <= 0:
-            return tokens.join(kb, on="cons_word", how="left")
-        salted = tokens.withColumn(
-            "_salt", F.pmod(F.xxhash64("url", "idx"), F.lit(salt)).cast("int")
-        )
-        kb_salted = kb.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        return salted.join(kb_salted, on=["cons_word", "_salt"], how="left").drop("_salt")
-
-    # -- stage 4: heuristic bins ---------------------------------------------
-
-    def with_decisions(self, tokens: DataFrame) -> DataFrame:
-        b_res = self._b_res
-
-        @F.pandas_udf(DECISION_STRUCT)
-        def bin_udf(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import json
-
-            import numpy as np
-
-            res: Resources = b_res.value
-            d = res.dictionary
-            settings = res.settings
-            in_dict_memo: dict = {}
-
-            for pdf in batches:
-                n = len(pdf)
-                orig = pdf["original"]
-                k1 = pdf["k1"]
-                valid = k1.notna().to_numpy()
-                # candidate dict flags -> (n, k) matrix; invalid rows
-                # all-False. Models with fewer than k states return
-                # SHORTER k-best lists — fill the prefix and track the
-                # per-row candidate count (dcode compares n_in against
-                # len(kbest), heuristics.py:116-121, not against k).
-                kk = res.k
-                flags = np.zeros((n, kk), dtype=bool)
-                n_cand = np.full(n, kk, dtype=np.int64)
-                for i, f in enumerate(pdf["cand_in_dict"]):
-                    if f is not None:
-                        m = min(len(f), kk)
-                        flags[i, :m] = f[:m]
-                        n_cand[i] = len(f)
-                n_in = flags.sum(axis=1)
-                first_rank = flags.argmax(axis=1) + 1  # first in-dict rank
-                o_eq_k = (orig == k1).to_numpy(dtype=bool)
-                # dictionary predicate per distinct raw original (memoized)
-                uniq = orig[valid].unique()
-                for w in uniq:
-                    if w not in in_dict_memo:
-                        in_dict_memo[w] = w in d
-                o_in_d = orig.map(in_dict_memo).to_numpy(dtype=bool, na_value=False)
-                k_in_d = flags[:, 0]
-                zerokd = n_in == 0
-                somekd = (n_in > 0) & (n_in < n_cand)
-                # heuristics.py:317-358 as np.select (first match wins)
-                conds = [
-                    o_eq_k & o_in_d,
-                    o_eq_k & ~o_in_d & zerokd,
-                    o_eq_k & ~o_in_d & somekd,
-                    ~o_eq_k & ~o_in_d & k_in_d,
-                    ~o_eq_k & ~o_in_d & zerokd,
-                    ~o_eq_k & ~k_in_d & ~o_in_d & somekd,
-                    ~o_eq_k & o_in_d & k_in_d,
-                    ~o_eq_k & o_in_d & zerokd,
-                    ~o_eq_k & o_in_d & ~k_in_d & somekd,
-                ]
-                bins = np.select(conds, list(range(1, 10)), default=10)
-                heur = pd.Series(bins).map(settings).to_numpy(dtype=object)
-                # 'kdict' with zero in-dictionary candidates is the
-                # reference's filtids[0] IndexError (heuristics.py:132);
-                # the kernel (bin_for_word, run by the ``auto`` plan)
-                # raises there, so this plan must too — the two plans
-                # stay result-identical for every (settings, input).
-                kd_bad = (heur == "kdict") & (n_in == 0) & valid
-                if kd_bad.any():
-                    raise IndexError(
-                        "kdict heuristic selected for a token with no "
-                        "in-dictionary candidates (reference "
-                        "heuristics.py:132 filtids[0])"
-                    )
-                sel_rank = np.select(
-                    [heur == "kbest", heur == "kdict"], [np.ones(n, dtype=np.int64), first_rank], default=0
-                )
-                out = pd.DataFrame(
-                    {
-                        "bin": pd.array(np.where(valid, bins, 0), dtype="Int32"),
-                        "heuristic": pd.Series(np.where(valid, heur, None), dtype=object),
-                        "sel_rank": pd.array(np.where(valid, sel_rank, 0), dtype="Int32"),
-                    }
-                )
-                out.loc[~valid, "bin"] = None
-                out.loc[out["sel_rank"] == 0, "sel_rank"] = None
-                # selection repr (token-table parity column; cheap paths
-                # vectorized, annotator filtids JSON only where needed)
-                selection = np.where(heur == "original", orig, None)
-                selection = np.where(heur == "kbest", "1", selection)
-                kd = heur == "kdict"
-                if kd.any():
-                    selection[kd] = first_rank[kd].astype(str)
-                ann = (heur == "annotator") & valid
-                if ann.any():
-                    for i in np.flatnonzero(ann):
-                        selection[i] = json.dumps((np.flatnonzero(flags[i]) + 1).tolist())
-                out["selection"] = pd.Series(np.where(valid, selection, None), dtype=object)
-                yield out
-
-        with_k1 = tokens.withColumn("k1", F.element_at("kbest", 1)["candidate"])
-        dec = with_k1.withColumn(
-            "dec",
-            bin_udf(F.struct("original", "k1", "cand_in_dict")),
-        ).select("*", "dec.*").drop("dec", "k1")
-
-        # heuristics.py:105-110 — tail inherits the head's decision.
-        # One struct-valued lag (single pass); the explicit repartition
-        # pins parallelism for this exchange AND the finalize groupBy,
-        # which reuses the same hash partitioning (one shuffle total).
-        dec = dec.repartition(self.parallelism, "url")
-        w = Window.partitionBy("url").orderBy("idx")
-        prev = F.lag(F.struct("bin", "heuristic", "sel_rank", "selection")).over(w)
-        tail = F.col("tail")
-        return (
-            dec.withColumn("_prev", prev)
-            .withColumn("bin", F.when(tail, F.col("_prev.bin")).otherwise(F.col("bin")))
-            .withColumn("heuristic", F.when(tail, F.col("_prev.heuristic")).otherwise(F.col("heuristic")))
-            .withColumn("sel_rank", F.when(tail, F.col("_prev.sel_rank")).otherwise(F.col("sel_rank")))
-            .withColumn("selection", F.when(tail, F.col("_prev.selection")).otherwise(F.col("selection")))
-            .drop("_prev")
-        )
-
-    # -- stage 5: autocorrect (native CASE WHEN; document.py:231-239) --------
-
-    @staticmethod
-    def _autocorrect_col() -> Column:
-        gold0 = F.col("gold0")
-        return (
-            F.when(gold0.isNotNull() & (gold0 != F.lit("")), gold0)
-            .when(
-                F.col("heuristic").isin("kbest", "kdict"),
-                F.coalesce(
-                    F.element_at("kbest", F.col("sel_rank"))["candidate"], F.lit("")
-                ),
-            )
-            .when(F.col("heuristic") == "original", F.col("original"))
-            .otherwise(gold0)
-        )
-
-    def tokens(
-        self, pages: DataFrame, salt: int = 0, kb: Optional[DataFrame] = None
-    ) -> DataFrame:
+    def tokens(self, pages: DataFrame, salt: int = 0) -> DataFrame:
         """The full token table — the engine's relational data model
         (FIXTURES.md §6; mirrors the reference DDL with kbest as an
-        ordered array column instead of a joined table)."""
-        t = self.tokens_raw(pages)
-        t = self.with_kbest(t, salt=salt, kb=kb)
-        t = self.with_decisions(t)
-        return t.withColumn("gold", self._autocorrect_col())
+        ordered array column instead of a joined table), one row per
+        token and one all-null placeholder row per token-less page.
+
+        ``salt > 0`` spreads each word's rows over up to ``salt`` word
+        shuffle partitions (a hot word is then beamed once per partition
+        that holds it); the table is the same for every ``salt``."""
+        return self._correct_by_url(self._tokens_kbest(pages, salt), per_token=True)
+
+    def _tokens_kbest(self, pages: DataFrame, salt: int) -> DataFrame:
+        """Passes 1 and 2: ``tokens_raw``, then the word shuffle and the
+        beam pass, which attaches each row's k-best (null on hyphen tails
+        and placeholder rows)."""
+        b_res = self._b_res
+        k = self.k
+
+        def attach_kbest(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            res: Resources = b_res.value
+            in_dict = _InDict(res.dictionary)
+            kbest_map: dict = {}  # this task's words only
+            for batch in batches:
+                slot: dict = {}  # the batch's distinct words -> position
+                rows = [
+                    None if w is None else slot.setdefault(w, len(slot))
+                    for w in _pylist(batch.column("cons_word"))
+                ]
+                fresh = [w for w in slot if w not in kbest_map]
+                if fresh:
+                    kbest_map.update(zip(fresh, kbest_for_words(res.params, fresh, k)))
+                cands, probs, offsets = [], [], [0]
+                for w in slot:
+                    for c, p in kbest_map[w]:
+                        cands.append(c)
+                        probs.append(p)
+                    offsets.append(len(cands))
+                take = pa.array(rows, pa.int32())
+                columns = [a.take(take) for a in _kbest_lists(cands, probs, offsets, in_dict)]
+                yield pa.RecordBatch.from_arrays(batch.columns + columns, schema=_KBEST_TOKENS_ARROW)
+
+        raw = self.tokens_raw(pages)
+        # co-locate each word's rows, so that a word is beamed by one task;
+        # the result does not depend on where a row lands
+        key = [F.coalesce("cons_word", "url")]
+        if salt > 0:
+            key.append(F.pmod(F.xxhash64("url", "idx"), F.lit(salt)))
+        return raw.repartition(self.parallelism, *key).mapInArrow(attach_kbest, schema=KBEST_TOKENS_SCHEMA)
+
+    def _correct_by_url(self, tokens: DataFrame, per_token: bool) -> DataFrame:
+        """Pass 3: each url's rows in ``idx`` order rebuild its ``Tok``
+        list, and ``correct_tokens`` (the kernel ``auto`` and the oracle
+        run) corrects it. Emits the token table (``per_token``) or one
+        ``CORRECTED_SCHEMA`` row per url."""
+        b_res = self._b_res
+        k = self.k
+        schema = TOKEN_TABLE_SCHEMA if per_token else CORRECTED_SCHEMA
+        arrow_schema = to_arrow_schema(schema)
+
+        def correct(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            res: Resources = b_res.value
+            in_dict = _InDict(res.dictionary)
+            kbest_map: dict = {}  # this task's words only
+            decision_memo: dict = {}
+            for table in _whole_urls(batches):
+                url, original, gold0, words = (
+                    _pylist(table.column(c)) for c in ("url", "original", "gold0", "cons_word")
+                )
+                idx = _pylist(table.column("idx").fill_null(-1))
+                head = _pylist(table.column("head").fill_null(False))
+                # the k-best of each word new to the task, from its first row;
+                # its candidates' flags answer the kernel's dictionary probes
+                first: dict = {}
+                for i, w in enumerate(words):
+                    if w is not None and w not in kbest_map and w not in first:
+                        first[w] = i
+                if first:
+                    kbests, cands, flags = _rows_kbest(table, list(first.values()))
+                    kbest_map.update(zip(first, kbests))
+                    in_dict.update(zip(cands, flags))
+                docs: List[Tuple[str, List[Tok]]] = []
+                row_toks: List[Optional[Tok]] = []
+                for i, u in enumerate(url):
+                    if not docs or docs[-1][0] != u:
+                        docs.append((u, []))
+                    t = None
+                    if original[i] is not None:  # else a token-less page's placeholder
+                        t = _restored_tok(idx[i], original[i], gold0[i], head[i])
+                        docs[-1][1].append(t)
+                    row_toks.append(t)
+                out = []
+                for u, toks in docs:
+                    r = correct_tokens(
+                        toks, kbest_map.__getitem__, in_dict, res.settings, k, decision_memo
+                    )
+                    r["url"] = u
+                    out.append(r)
+                if per_token:
+                    decided = zip(*(_token_decision(t) for t in row_toks))
+                    added = [pa.array(c, f.type) for c, f in zip(decided, list(arrow_schema)[-5:])]
+                    yield from pa.Table.from_arrays(table.columns + added, schema=arrow_schema).to_batches()
+                else:  # the schema picks its columns from each record
+                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+
+        return (
+            tokens.repartition(self.parallelism, "url")
+            .sortWithinPartitions("url", "idx")
+            .mapInArrow(correct, schema=schema)
+        )
 
     # -- corrected documents ----------------------------------------------------
 
     def corrected(self, pages: DataFrame, strategy: str = "auto") -> DataFrame:
         """Corrected documents, one row per url. ``auto`` is the one-pass
-        plan, ``join`` the token-table plan (see the module docstring)."""
+        plan, ``join`` the token plan (see the module docstring)."""
         if strategy == "join":
-            return self.finalize(self.tokens(pages))
+            return self._correct_by_url(self._tokens_kbest(pages, 0), per_token=False)
         if strategy != "auto":
             raise ValueError(f"unknown strategy {strategy!r}: expected 'auto' or 'join'")
         b_res = self._b_res
@@ -569,20 +508,15 @@ class CorrectionPipeline:
                     original = r["original"]
                     if original is None:  # explode_outer placeholder
                         continue
-                    t = Tok.__new__(Tok)
-                    t.index = int(r["idx"])
-                    t.original = original
                     gold = r["gold"]
-                    t.gold = gold if isinstance(gold, str) else None
-                    t.is_hyphenated = bool(r["head"])
+                    t = _restored_tok(
+                        int(r["idx"]), original, gold if isinstance(gold, str) else None, bool(r["head"])
+                    )
                     t.is_discarded = bool(r["discarded"])
-                    t.has_error = False
-                    t.kbest = []
                     b = r["bin"]
                     t.bin = int(b) if b is not None else None
                     h = r["heuristic"]
                     t.heuristic = h if isinstance(h, str) else None
-                    t.selection = None
                     toks.append(t)
                 stats = doc_stats(toks)
                 out.append(
@@ -638,3 +572,112 @@ def _tokenize_rows_nodehyph(text: Optional[str]):
         }
         for t in toks
     ]
+
+
+class _InDict(dict):
+    """A ``Dictionary``'s membership answers, memoized per word:
+    ``word in memo`` and ``memo[word]`` ask the dictionary once per word
+    (its predicate cleans the word with regexes on every call), so the
+    kernel takes a memo wherever it takes the dictionary."""
+
+    __slots__ = ("dictionary",)
+
+    def __init__(self, dictionary):
+        super().__init__()
+        self.dictionary = dictionary
+
+    def __missing__(self, word: str) -> bool:
+        hit = self[word] = word in self.dictionary
+        return hit
+
+    def __contains__(self, word: str) -> bool:
+        return self[word]
+
+
+def _kbest_lists(cands, probs, offsets, in_dict: _InDict) -> List[pa.Array]:
+    """The ``kbest`` and ``cand_in_dict`` list arrays of words whose
+    rank-ordered candidates lie at ``cands[offsets[i]:offsets[i + 1]]``."""
+    kbest_type, flags_type = (f.type for f in _KBEST_FIELDS)
+    offs = pa.array(offsets, pa.int32())
+    pairs = pa.StructArray.from_arrays(
+        [pa.array(cands, pa.string()), pa.array(probs, pa.float64())],
+        fields=list(kbest_type.value_type),
+    )
+    flags = pa.array([in_dict[c] for c in cands], pa.bool_())
+    return [
+        pa.ListArray.from_arrays(offs, pairs, type=kbest_type),
+        pa.ListArray.from_arrays(offs, flags, type=flags_type),
+    ]
+
+
+def _pylist(values) -> list:
+    """``values.to_pylist()`` for a flat column without integer nulls,
+    through numpy: an order of magnitude faster."""
+    return values.to_numpy(zero_copy_only=False).tolist()
+
+
+def _rows_kbest(table: pa.Table, rows: List[int]):
+    """The k-best lists on ``rows`` of a beam-pass table, plus the flat
+    candidates and their ``cand_in_dict`` flags."""
+    take = pa.array(rows, pa.int64())
+    kbest = table.column("kbest").take(take).combine_chunks()
+    cands, probs = (_pylist(a) for a in kbest.flatten().flatten())
+    flags = _pylist(table.column("cand_in_dict").take(take).combine_chunks().flatten())
+    pairs = list(zip(cands, probs))
+    kbests, lo = [], 0
+    for n in _pylist(kbest.value_lengths()):
+        kbests.append(pairs[lo : lo + n])
+        lo += n
+    return kbests, cands, flags
+
+
+def _whole_urls(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
+    """Regroup url-sorted batches so that no url's rows are split between
+    two yielded tables (a document may span Arrow batches)."""
+    held: List[pa.RecordBatch] = []
+    for batch in batches:
+        urls = _pylist(batch.column("url"))
+        if not urls:
+            continue
+        cut = len(urls)  # first row of the batch's last url
+        while cut and urls[cut - 1] == urls[-1]:
+            cut -= 1
+        if cut:
+            held.append(batch.slice(0, cut))
+            yield pa.Table.from_batches(held)
+            held = []
+        held.append(batch.slice(cut))
+    if held:
+        yield pa.Table.from_batches(held)
+
+
+def _restored_tok(index: int, original: str, gold: Optional[str], head: bool) -> Tok:
+    """A token as ``tokens_raw`` left it: tokenized and dehyphenated,
+    without the constructor's punctuation probe (``gold`` carries it)."""
+    t = Tok.__new__(Tok)
+    t.index = index
+    t.original = original
+    t.gold = gold
+    t.is_hyphenated = head
+    t.is_discarded = False
+    t.has_error = False
+    t.kbest = []
+    t.bin = None
+    t.heuristic = None
+    t.selection = None
+    return t
+
+
+def _token_decision(t: Optional[Tok]) -> tuple:
+    """A corrected token's ``(bin, heuristic, sel_rank, selection, gold)``
+    token-table columns; all null for a placeholder row."""
+    if t is None:
+        return (None,) * 5
+    h, sel = t.heuristic, t.selection
+    if h in ("kbest", "kdict"):
+        sel_rank, selection = sel, str(sel)
+    elif h == "annotator":
+        sel_rank, selection = None, json.dumps(sel)
+    else:
+        sel_rank, selection = None, sel
+    return t.bin, h, sel_rank, selection, t.gold

@@ -179,8 +179,8 @@ class KbestStore:
     the SAME ``cons_word`` in two files. Reads therefore dedup on the
     key (``dropDuplicates("cons_word")``): the beam is deterministic per
     word, so duplicate rows are value-identical and any survivor is
-    correct — without the guard, ``with_kbest``'s left join would
-    silently DUPLICATE every token of a twice-appended word downstream
+    correct — without the guard, a join of the store onto a token table
+    would silently DUPLICATE every token of a twice-appended word
     (pinned by test_kbest_store_double_append)."""
 
     def __init__(self, spark: SparkSession, path: str):

@@ -1,4 +1,4 @@
-"""CLI surface (python -m correctocr_spark) + salted-join equivalence."""
+"""CLI surface (python -m correctocr_spark)."""
 
 import json
 import os
@@ -48,19 +48,6 @@ def test_cli_dictionary(tmp_path, spark):
     assert r.returncode == 0, r.stderr[-2000:]
     words = open(out).read().split("\n")
     assert "newworld" in words and "hello" in words
-
-
-def test_salted_join_equivalent(spark):
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.synth import synth_pages
-
-    pipe = CorrectionPipeline(spark, use_html=False)
-    pages = synth_pages(spark, 30, seed=72).cache()
-    plain = pipe.finalize(pipe.tokens(pages, salt=0))
-    salted = pipe.finalize(pipe.tokens(pages, salt=4))
-    a = {r["url"]: tuple(r) for r in plain.collect()}
-    b = {r["url"]: tuple(r) for r in salted.collect()}
-    assert a == b
 
 
 @pytest.mark.slow

@@ -60,21 +60,27 @@ def test_kbest_stage_parallelism_pinned(spark):
 
 
 def test_pipeline_shuffle_count_join_path(spark):
-    """Join path: exactly the designed exchanges — words distinct,
-    kbest join, url repartition (reused by window+groupBy)."""
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.synth import synth_pages
+    """Join path: three Python passes (tokenize once, beam, correct) and
+    exactly the two designed exchanges, the word shuffle and the url
+    repartition; no window, no join, no aggregate, no collect_list."""
+    import datetime
 
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.synth import PAGES_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"u://{i}", ts, None, "a t3st str- ing", "en") for i in range(5)], PAGES_SCHEMA
+    )
     pipe = CorrectionPipeline(spark, use_html=False)
-    pages = synth_pages(spark, 50, seed=3)
     p = plan_of(pipe.corrected(pages, strategy="join"))
-    shuffles = set(re.findall(r"\((\d+)\) Exchange", p))
-    broadcasts = set(re.findall(r"\((\d+)\) BroadcastExchange", p))
-    # designed exchanges: words distinct, words repartition, url
-    # repartition (reused by window+groupBy); the kbest join side should
-    # be a broadcast (small table), not a shuffle
-    assert len(shuffles) <= 4, f"unexpected shuffle count {len(shuffles)}:\n{p}"
-    assert len(broadcasts) >= 1, f"kbest join not broadcast:\n{p}"
+    nodes = re.findall(r"^\(\d+\) (\w+)", p, flags=re.M)
+    python_ops = sorted(n for n in nodes if re.search("Python|Pandas|Arrow", n))
+    assert python_ops == ["MapInArrow", "MapInArrow", "MapInPandas"], p
+    assert [p.count(f"{udf}(") for udf in ("tokenize", "attach_kbest", "correct")] == [1, 1, 1], p
+    assert nodes.count("Exchange") == 2 and "BroadcastExchange" not in nodes, p
+    assert not [n for n in nodes if re.search("Window|Join|Aggregate", n)], p
+    assert "collect_list" not in p
 
 
 def test_one_pass_plan_runs_one_job(spark):

@@ -6,7 +6,6 @@
 - weighted-count HMM training == stream training
 - resume anti-join not force-broadcast (AQE decides)
 - correction-feedback roundtrip (tracked in run 1 -> auto-applied in run 2)
-- bin_udf short-kbest handling matches the kernel (dcode vs len(kbest))
 - is_numeric (P6, tokens/_super.py:140-144)
 """
 
@@ -295,67 +294,6 @@ def test_correction_feedback_roundtrip(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "tracking")).collect()
     }
     assert t[("teh", "the")] == 4 and t[("teh", "tho")] == 2
-
-
-# ---------------------------------------------------------------------------
-# bin_udf short-kbest + kdict-zero agreement
-# ---------------------------------------------------------------------------
-
-
-def test_join_strategy_short_kbest_matches_kernel(spark):
-    """A model with fewer than k states yields short k-best lists; the
-    join strategy's dcode must use the actual candidate count
-    (heuristics.py:116-121), agreeing with the kernel/broadcast path."""
-    from correctocr_spark.kernels.heuristics import DEFAULT_SETTINGS
-    from correctocr_spark.kernels.hmm import build_hmm_params
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.resources import Resources
-    from correctocr_spark.kernels.dictionary import Dictionary
-
-    # 3-state model -> beam yields < 4 candidates for 1-char words
-    params = build_hmm_params(
-        ["ab", "ba"], 1e-4, "ab", {"a": {"a": 10, "b": 1}, "b": {"b": 10}},
-        [], ["ab", "ba", "ab"],
-    )
-    res = Resources(params, Dictionary({"ab", "ba"}), DEFAULT_SETTINGS, k=4)
-    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
-    pages = spark.createDataFrame([("u1", "ab ba aa b")], ["url", "text"])
-
-    join_rows = {
-        r["idx"]: (r["bin"], r["heuristic"])
-        for r in pipe.tokens(pages).collect()
-    }
-    # kernel truth
-    from correctocr_spark.kernels.pipeline import correct_document
-
-    ker = correct_document("ab ba aa b", params, res.dictionary, res.settings, k=4)
-    ker_rows = {t.index: (t.bin, t.heuristic) for t in ker["tokens"]}
-    assert join_rows == ker_rows
-
-
-def test_join_strategy_kdict_zero_in_dict_raises(spark):
-    """kdict with zero in-dictionary candidates = reference filtids[0]
-    IndexError; both physical strategies must fail, not silently pick
-    rank 1."""
-    from correctocr_spark.kernels.heuristics import normalize_settings
-    from correctocr_spark.kernels.hmm import build_hmm_params
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.resources import Resources
-    from correctocr_spark.kernels.dictionary import Dictionary
-
-    params = build_hmm_params(
-        ["ab"], 1e-4, "ab", {"a": {"a": 10}, "b": {"b": 10}}, [], ["ab"]
-    )
-    # bin 5 (k1 != original, nothing in dict) mapped to kdict
-    settings = normalize_settings({5: "d", 2: "d"})
-    res = Resources(params, Dictionary(set()), settings, k=2)
-    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
-    pages = spark.createDataFrame([("u1", "zz qq")], ["url", "text"])
-    from py4j.protocol import Py4JJavaError
-
-    with pytest.raises(Exception) as exc:
-        pipe.tokens(pages).collect()
-    assert "kdict" in str(exc.value) or "IndexError" in str(exc.value)
 
 
 # ---------------------------------------------------------------------------

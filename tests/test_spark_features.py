@@ -146,32 +146,6 @@ def test_heuristics_report(spark, pipeline):
 # --- sources (S7/S10/S15, S14, J7) ---------------------------------------------
 
 
-def test_token_table_roundtrip(spark, pipeline, tmp_path):
-    from correctocr_spark.spark.sources import read_tokens, write_tokens
-    from correctocr_spark.spark.synth import synth_pages
-
-    tokens = pipeline.tokens(synth_pages(spark, 15, seed=31))
-    write_tokens(tokens, str(tmp_path / "tok"))
-    back = read_tokens(spark, str(tmp_path / "tok"))
-    assert back.count() == tokens.count()
-    assert "kbest" in back.columns and "pkey" in back.columns
-
-
-def test_tokens_csv_roundtrip(spark, pipeline, tmp_path):
-    from correctocr_spark.spark.sources import export_tokens_csv, import_tokens_csv
-    from correctocr_spark.spark.synth import synth_pages
-
-    tokens = pipeline.tokens(synth_pages(spark, 10, seed=32)).where(F.col("idx").isNotNull())
-    export_tokens_csv(tokens, str(tmp_path / "csv"))
-    back = import_tokens_csv(spark, str(tmp_path / "csv"))
-    assert back.count() == tokens.count()
-    a = {(r["url"], r["idx"]): (r["original"], r["gold"]) for r in tokens.collect()}
-    b = {(r["url"], r["idx"]): (r["original"], r["gold"]) for r in back.collect()}
-    # gold may be empty-string vs null through CSV; normalize
-    norm = lambda d: {k: (o, g or None) for k, (o, g) in d.items()}
-    assert norm(a) == norm(b)
-
-
 def test_build_dictionary_df(spark):
     from correctocr_spark.spark.sources import build_dictionary_df
 

@@ -2,7 +2,13 @@
 byte-identical per-url output vs the reference-semantics kernel executed
 directly on the same inputs (SURVEY.md §5 strategy (b))."""
 
+import contextlib
+import datetime
+import json
+
 import pytest
+
+from pyspark.sql import functions as F
 
 from correctocr_spark.kernels.extract import extract_text
 from correctocr_spark.kernels.pipeline import correct_document
@@ -130,20 +136,16 @@ def test_unknown_strategy_rejected(spark, pipeline):
             pipeline.corrected(pages, strategy=strategy)
 
 
-@pytest.mark.parametrize("use_html", [False, True])
-def test_one_pass_across_tasks_and_batches(spark, resources, use_html):
-    """The one-pass plan equals the scalar-beam kernel url by url, on
-    every output column, when hot words recur across tasks and across the
-    Arrow batches of one task (3 partitions of 40 pages, batches of 7).
-    The pages hold hyphenated heads ending a document, empty and null
-    text, characters no state emits and words holding a multichar key."""
-    import datetime
-
+def hard_pages(spark, resources, use_html):
+    """A multichar model under aggressive settings, and 120 pages over 3
+    partitions where hot words recur across tasks and Arrow batches. The
+    pages hold hyphenated heads ending a document, empty and null text,
+    characters no state emits and words holding a multichar key.
+    Returns ``(resources, rows, pages)``."""
     import numpy as np
 
     from correctocr_spark.kernels.heuristics import AGGRESSIVE_SETTINGS
     from correctocr_spark.kernels.hmm import HMMParams
-    from correctocr_spark.spark.pipeline import CORRECTED_SCHEMA, CorrectionPipeline
     from correctocr_spark.spark.resources import Resources
     from correctocr_spark.spark.synth import PAGES_SCHEMA
 
@@ -176,22 +178,145 @@ def test_one_pass_across_tasks_and_batches(spark, resources, use_html):
     pages = spark.createDataFrame(rows, PAGES_SCHEMA).repartition(3)
     sizes = pages.rdd.glom().map(len).collect()
     assert len(sizes) == 3 and min(sizes) > 7, sizes
+    return res, rows, pages
 
+
+@contextlib.contextmanager
+def arrow_batches_of(spark, n):
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
-    spark.conf.set(key, "7")
+    spark.conf.set(key, str(n))
     try:
-        pipe = CorrectionPipeline(spark, res, use_html=use_html)
-        got = {r["url"]: r.asDict() for r in pipe.corrected(pages).collect()}
+        yield
     finally:
         spark.conf.set(key, saved)
 
+
+def page_sources(rows, use_html):
+    """``(url, text the pipeline corrects)`` per page row."""
+    for url, _ts, html, text, _lang in rows:
+        yield url, (extract_text(html) if use_html else text) or ""
+
+
+@pytest.mark.parametrize("use_html", [False, True])
+def test_one_pass_across_tasks_and_batches(spark, resources, use_html):
+    """The one-pass plan equals the scalar-beam kernel url by url, on
+    every output column, when hot words recur across tasks and across the
+    Arrow batches of one task (3 partitions of 40 pages, batches of 7)."""
+    from correctocr_spark.spark.pipeline import CORRECTED_SCHEMA, CorrectionPipeline
+
+    res, rows, pages = hard_pages(spark, resources, use_html)
+    with arrow_batches_of(spark, 7):
+        pipe = CorrectionPipeline(spark, res, use_html=use_html)
+        got = {r["url"]: r.asDict() for r in pipe.corrected(pages).collect()}
+
     columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
-    assert len(got) == len(texts)
-    for url, html, text in ((r[0], r[2], r[3]) for r in rows):
-        source = extract_text(html) if use_html else text
-        exp = correct_document(source or "", res.params, res.dictionary, res.settings, k=res.k)
+    assert len(got) == len(rows)
+    for url, source in page_sources(rows, use_html):
+        exp = correct_document(source, res.params, res.dictionary, res.settings, k=res.k)
         assert {c: got[url][c] for c in columns} == {c: exp[c] for c in columns}, url
+
+
+@pytest.mark.parametrize("use_html", [False, True])
+def test_join_plan_across_tasks_and_batches(spark, resources, use_html):
+    """The token plan over 3 tasks and Arrow batches of 7 rows (so urls
+    span batches) equals the one-pass plan and the scalar-beam kernel url
+    by url, on every output column."""
+    from correctocr_spark.spark.pipeline import CORRECTED_SCHEMA, CorrectionPipeline
+
+    res, rows, pages = hard_pages(spark, resources, use_html)
+    with arrow_batches_of(spark, 7):
+        pipe = CorrectionPipeline(spark, res, use_html=use_html, parallelism=3)
+        join = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="join").collect()}
+        auto = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="auto").collect()}
+
+    assert join == auto
+    columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
+    assert len(join) == len(rows)
+    for url, source in page_sources(rows, use_html):
+        exp = correct_document(source, res.params, res.dictionary, res.settings, k=res.k)
+        assert {c: join[url][c] for c in columns} == {c: exp[c] for c in columns}, url
+
+
+def test_token_table_equals_kernel(spark, resources):
+    """Every token-table row holds the kernel's k-best, candidate
+    dictionary flags, bin, heuristic, selection and gold: one row per
+    token, null k-best on hyphen tails, one all-null row per token-less
+    page."""
+    from correctocr_spark.kernels.pipeline import consolidated
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+
+    res, rows, pages = hard_pages(spark, resources, use_html=False)
+    with arrow_batches_of(spark, 7):
+        pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=3)
+        table = pipe.tokens(pages).collect()
+
+    columns = ["kbest", "cand_in_dict", "bin", "heuristic", "sel_rank", "selection", "gold"]
+    got = {}
+    for r in table:
+        row = {c: r[c] for c in columns}
+        if row["kbest"] is not None:
+            row["kbest"] = [(c["candidate"], c["probability"]) for c in r["kbest"]]
+        got[(r["url"], r["idx"])] = row
+
+    expected = {}
+    for url, text in page_sources(rows, use_html=False):
+        toks = correct_document(text, res.params, res.dictionary, res.settings, k=res.k)["tokens"]
+        if not toks:
+            expected[(url, None)] = dict.fromkeys(columns)
+        beamed = {id(t) for _w, _g, t in consolidated(toks)}  # not hyphen tails
+        for t in toks:
+            sel = t.selection
+            expected[(url, t.index)] = {
+                "kbest": t.kbest if id(t) in beamed else None,
+                "cand_in_dict": [c in res.dictionary for c, _p in t.kbest] if id(t) in beamed else None,
+                "bin": t.bin,
+                "heuristic": t.heuristic,
+                "sel_rank": sel if t.heuristic in ("kbest", "kdict") else None,
+                "selection": json.dumps(sel) if t.heuristic == "annotator" else str(sel),
+                "gold": t.gold,
+            }
+    assert len(got) == len(table)
+    assert got == expected
+    tails = [key for key, row in expected.items() if key[1] is not None and row["kbest"] is None]
+    assert tails and (("u://one-pass/5", None) in got) and (("u://one-pass/50", None) in got)
+
+
+def test_hot_word_join_and_salting(spark, resources):
+    """One word is a third of all tokens: the token plan equals the
+    one-pass plan on every column, and salting the word shuffle leaves the
+    token table and its reassembly unchanged."""
+    import numpy as np
+
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.synth import PAGES_SCHEMA
+
+    rng = np.random.RandomState(20261018)
+    pieces = ["word", "w0rd", "tbe", "str-", "modern", "and", "(word)", "A4", "."]
+    texts = []
+    for _ in range(80):
+        n = rng.randint(5, 40)
+        texts.append(" ".join("the" if rng.rand() < 0.4 else pieces[rng.randint(len(pieces))] for _ in range(n)))
+    words = " ".join(texts).split()
+    assert words.count("the") >= 0.3 * len(words)
+
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"u://hot/{i}", ts, None, t, "en") for i, t in enumerate(texts)], PAGES_SCHEMA
+    ).cache()
+    pipe = CorrectionPipeline(spark, resources, use_html=False)
+    join = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="join").collect()}
+    auto = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="auto").collect()}
+    assert len(join) == len(texts) and join == auto
+
+    tables = [pipe.tokens(pages, salt=salt) for salt in (0, 4)]
+    plain, salted = (
+        {(r["url"], r["idx"]): r.asDict(recursive=True) for r in t.collect()} for t in tables
+    )
+    assert plain == salted
+    plain, salted = ({r["url"]: r.asDict() for r in pipe.finalize(t).collect()} for t in tables)
+    assert plain == salted == join
+    pages.unpersist()
 
 
 def test_kbest_table_equals_scalar_beam(spark, pipeline, resources):
@@ -286,3 +411,98 @@ def test_audited_resume(spark, pipeline, tmp_path):
     assert {"pkey", "bin", "token_count", "run_id"} <= set(bins.columns)
     total_binned = sum(r["token_count"] for r in bins.collect())
     assert total_binned > 0
+
+
+def test_salted_join_equivalent(spark):
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.synth import synth_pages
+
+    pipe = CorrectionPipeline(spark, use_html=False)
+    pages = synth_pages(spark, 30, seed=72).cache()
+    plain = pipe.finalize(pipe.tokens(pages, salt=0))
+    salted = pipe.finalize(pipe.tokens(pages, salt=4))
+    a = {r["url"]: tuple(r) for r in plain.collect()}
+    b = {r["url"]: tuple(r) for r in salted.collect()}
+    assert a == b
+
+
+def test_join_strategy_short_kbest_matches_kernel(spark):
+    """A model with fewer than k states yields short k-best lists; the
+    join strategy's dcode must use the actual candidate count
+    (heuristics.py:116-121), agreeing with the kernel/broadcast path."""
+    from correctocr_spark.kernels.heuristics import DEFAULT_SETTINGS
+    from correctocr_spark.kernels.hmm import build_hmm_params
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.resources import Resources
+    from correctocr_spark.kernels.dictionary import Dictionary
+
+    # 3-state model -> beam yields < 4 candidates for 1-char words
+    params = build_hmm_params(
+        ["ab", "ba"], 1e-4, "ab", {"a": {"a": 10, "b": 1}, "b": {"b": 10}},
+        [], ["ab", "ba", "ab"],
+    )
+    res = Resources(params, Dictionary({"ab", "ba"}), DEFAULT_SETTINGS, k=4)
+    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
+    pages = spark.createDataFrame([("u1", "ab ba aa b")], ["url", "text"])
+
+    join_rows = {
+        r["idx"]: (r["bin"], r["heuristic"])
+        for r in pipe.tokens(pages).collect()
+    }
+    # kernel truth
+    from correctocr_spark.kernels.pipeline import correct_document
+
+    ker = correct_document("ab ba aa b", params, res.dictionary, res.settings, k=4)
+    ker_rows = {t.index: (t.bin, t.heuristic) for t in ker["tokens"]}
+    assert join_rows == ker_rows
+
+
+def test_join_strategy_kdict_zero_in_dict_raises(spark):
+    """kdict with zero in-dictionary candidates = reference filtids[0]
+    IndexError; both physical strategies must fail, not silently pick
+    rank 1."""
+    from correctocr_spark.kernels.heuristics import normalize_settings
+    from correctocr_spark.kernels.hmm import build_hmm_params
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.resources import Resources
+    from correctocr_spark.kernels.dictionary import Dictionary
+
+    params = build_hmm_params(
+        ["ab"], 1e-4, "ab", {"a": {"a": 10}, "b": {"b": 10}}, [], ["ab"]
+    )
+    # bin 5 (k1 != original, nothing in dict) mapped to kdict
+    settings = normalize_settings({5: "d", 2: "d"})
+    res = Resources(params, Dictionary(set()), settings, k=2)
+    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
+    pages = spark.createDataFrame([("u1", "zz qq")], ["url", "text"])
+    from py4j.protocol import Py4JJavaError
+
+    with pytest.raises(Exception) as exc:
+        pipe.tokens(pages).collect()
+    assert "kdict" in str(exc.value) or "IndexError" in str(exc.value)
+
+
+def test_token_table_roundtrip(spark, pipeline, tmp_path):
+    from correctocr_spark.spark.sources import read_tokens, write_tokens
+    from correctocr_spark.spark.synth import synth_pages
+
+    tokens = pipeline.tokens(synth_pages(spark, 15, seed=31))
+    write_tokens(tokens, str(tmp_path / "tok"))
+    back = read_tokens(spark, str(tmp_path / "tok"))
+    assert back.count() == tokens.count()
+    assert "kbest" in back.columns and "pkey" in back.columns
+
+
+def test_tokens_csv_roundtrip(spark, pipeline, tmp_path):
+    from correctocr_spark.spark.sources import export_tokens_csv, import_tokens_csv
+    from correctocr_spark.spark.synth import synth_pages
+
+    tokens = pipeline.tokens(synth_pages(spark, 10, seed=32)).where(F.col("idx").isNotNull())
+    export_tokens_csv(tokens, str(tmp_path / "csv"))
+    back = import_tokens_csv(spark, str(tmp_path / "csv"))
+    assert back.count() == tokens.count()
+    a = {(r["url"], r["idx"]): (r["original"], r["gold"]) for r in tokens.collect()}
+    b = {(r["url"], r["idx"]): (r["original"], r["gold"]) for r in back.collect()}
+    # gold may be empty-string vs null through CSV; normalize
+    norm = lambda d: {k: (o, g or None) for k, (o, g) in d.items()}
+    assert norm(a) == norm(b)
