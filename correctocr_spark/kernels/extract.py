@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from html import unescape
 from html.parser import HTMLParser
-from typing import List, Optional, Union
+from typing import Dict, List, Optional, Union
 
 _PRUNE_TAGS = frozenset(
     "script style noscript template head nav header footer aside form "
@@ -210,12 +210,17 @@ def extract_text(
 # jusText-style block classification (optional alternative extractor)
 # ---------------------------------------------------------------------------
 
-#: default classification stopwords: union of the engine's language
-#: profiles (ops.textstats.STOPWORDS is the single authority; imported
-#: lazily to keep the kernel layer Spark-free)
-def _default_stopwords() -> frozenset:
-    from ..ops.textstats import STOPWORDS
+#: tiny deterministic stopword profiles per language: the jusText
+#: classifier's default stopword set (their union), the language id of
+#: ``spark.warc.extract_pages`` and ``ops.textstats.language_id``
+STOPWORDS: Dict[str, List[str]] = {
+    "en": "the of and to in is was for that with on as at by from this be are he she it they we you not".split(),
+    "da": "og i at det er en til på de som med han af for ikke der var den hun et men sig jeg".split(),
+    "es": "el la de que y en un ser se no haber por con su para como estar tener le lo todo".split(),
+}
 
+
+def _default_stopwords() -> frozenset:
     return frozenset(w for ws in STOPWORDS.values() for w in ws)
 
 

@@ -15,6 +15,7 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..spark.warc import A_TAG_RE, ANCHOR_RE, HREF_RE
 from .dedup import ensure_parallelism, normalized_words
 
 #: PII patterns — deliberately simple, anchored forms valid in BOTH
@@ -668,13 +669,6 @@ def canonicalize_urls(
         F.col(url_col).alias("url"),
         canonical_url_col(F.col(url_col)).alias("canonical_url"),
     )
-
-
-#: link extraction — RE2∩Java-safe: no lazy quantifiers, anchor text via
-#: [^<]* (flat anchors; nested-markup anchors are the HTML kernel's job)
-A_TAG_RE = r'<a [^>]*href="[^"]+"[^>]*>[^<]*</a>'
-HREF_RE = r'href="([^"]+)"'
-ANCHOR_RE = r">([^<]*)</a>"
 
 
 def extract_links(

@@ -11,108 +11,18 @@ materializes; only same-bucket candidates are verified).
 
 from __future__ import annotations
 
-import re as _re
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spark.warc import _is_scan_rooted, ensure_parallelism  # noqa: F401
 from .cache import register_intermediates
 
 
 def normalized_words(text_col: str = "text"):
     """Whitespace word array (empty tokens dropped)."""
     return F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != "")
-
-
-#: ALLOWLIST of logical-plan node names known to be narrow (no shuffle,
-#: no job on ``df.rdd``). The guard used to be a denylist of
-#: shuffle-inducing names, but any wide node NOT in that set —
-#: typed-API MapGroups/AppendColumns, or nodes added in a future Spark —
-#: silently passed it and re-enabled the early-AQE-execution ``df.rdd``
-#: hazard with no error signal. Inverted: anything unrecognized is
-#: treated as non-scan-rooted, failing SAFE (ensure_parallelism becomes
-#: a no-op, never an early job).
-_NARROW_NODES = frozenset(
-    {
-        "Relation",          # file-source scan (parquet/csv/...)
-        "LogicalRDD",        # localCheckpoint output / createDataFrame(rdd)
-        "LocalRelation",     # driver-local literal data
-        "OneRowRelation",
-        "Range",             # spark.range
-        "Project",
-        "Filter",
-        "Generate",          # explode/posexplode
-        "SubqueryAlias",
-        "View",
-        "Union",
-        "LocalLimit",
-        "Sample",
-        "ResolvedHint",
-        "UnresolvedHint",
-        # MapInPandas/mapPartitions outputs are narrow too, but .rdd on
-        # them spins Python workers per probe — cheaper to no-op, so
-        # they are deliberately NOT listed.
-    }
-)
-_NODE_NAME_RE = _re.compile(r"^[\s:+\-]*'?([A-Za-z]+)")
-
-
-def _is_scan_rooted(df: DataFrame) -> bool:
-    """True iff EVERY node of the analyzed logical plan is a known
-    narrow operator (scan/project/filter/generate/union/coalesce ...),
-    for which materializing ``df.rdd`` runs no job. Inspection is
-    driver-side string parsing of the analyzed plan (NOT the executed
-    plan, whose construction is exactly the AQE finalization we must
-    avoid). Unrecognized node names fail safe (False)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    for line in plan.splitlines():
-        if not line.strip():
-            continue
-        m = _NODE_NAME_RE.match(line)
-        if not m:
-            return False
-        node = m.group(1)
-        if node == "Repartition":
-            # `Repartition n, false` is coalesce — narrow, allowed;
-            # `true` is a full shuffle
-            if "true" in line:
-                return False
-        elif node not in _NARROW_NODES:
-            return False
-    return True
-
-
-def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
-    """Repartition iff the plan has fewer partitions than the session's
-    default parallelism.
-
-    The compute-dense projections in this module (shingle explode + md5,
-    SimHash vote columns, span hashing, interpreted shingle-array HOFs)
-    run at the UPSTREAM partition count — for a small local parquet file
-    that is ONE scan split, so the work serializes onto one core however
-    many the session has (measured 3-6x on the sf0.1 bench). At cluster
-    scale the input already has thousands of splits and this is a no-op,
-    so the extra text shuffle is never paid where it would actually hurt.
-
-    SCAN-ROOTED inputs only: ``df.rdd`` (needed for the partition
-    count) finalizes the AQE plan, which EXECUTES any shuffle stages in
-    it — on a join/aggregate output that silently runs the job early
-    and again at the real action. That precondition is now ENFORCED,
-    not conventional: the analyzed logical plan is inspected first and
-    any shuffle-inducing node (join/aggregate/window/sort/distinct/
-    repartition/…) makes this a no-op — such plans already have a
-    shuffle whose partition count AQE sizes itself, so the fix-up is
-    both unsafe to probe and unnecessary. Sites that need a repartition
-    on a wide plan use a plain ``repartition`` (see
-    jaccard_verify_candidates).
-    """
-    if not _is_scan_rooted(df):
-        return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _read_parquet_or_none(spark, path: str) -> Optional[DataFrame]:

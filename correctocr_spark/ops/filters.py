@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..spark.warc import _CONTENT_RE, _META_TAG_RE, page_meta_cols
 from .dedup import ensure_parallelism, normalized_words
 
 __all__ = [
@@ -410,11 +411,10 @@ def wordlist_density(
     )
 
 
-#: meta-tag grammar, shared verbatim with the DuckDB oracle — Java∩RE2
-#: subset (no backreferences/lookaround), case folded via (?i)
-_META_TAG_RE = r"(?i)<meta\b[^>]*>"
+#: robots meta name (Java∩RE2, shared verbatim with the DuckDB oracle);
+#: the meta-tag and content grammar is spark.warc's, shared with
+#: page_meta_cols
 _ROBOTS_NAME_RE = r"(?i)name\s*=\s*['\"]?robots"
-_CONTENT_RE = r"(?i)content\s*=\s*['\"]([^'\"]*)"
 
 
 def robots_directives(
@@ -675,38 +675,6 @@ def robots_txt_gate(
         .otherwise(best["allow"])
         .alias("allowed"),
     )
-
-
-#: page-metadata grammar (Java∩RE2, shared with the oracle): same
-#: attribute-order-independent meta matching as robots_directives
-_TITLE_RE = r"(?is)<title[^>]*>([^<]*)</title>"
-_DESC_NAME_RE = r"(?i)name\s*=\s*['\"]?description"
-_LINK_TAG_RE = r"(?i)<link\b[^>]*>"
-_CANONICAL_REL_RE = r"(?i)rel\s*=\s*['\"]?canonical"
-_HREF_ATTR_RE = r"""(?i)href\s*=\s*['\"]([^'\"]*)"""
-
-
-def page_meta_cols(html: Column) -> dict:
-    """The title / meta-description / canonical-link expressions over a
-    raw-HTML column, in output order — shared by :func:`page_metadata`
-    and the WAT metadata sink (``spark.warc.wat_records``) so the two
-    surfaces are value-identical by construction."""
-    # coalesce: a NULL html column must still yield '' fields
-    title = F.coalesce(
-        F.trim(
-            F.regexp_replace(F.regexp_extract(html, _TITLE_RE, 1), r"\s+", " ")
-        ),
-        F.lit(""),
-    )
-    metas = F.regexp_extract_all(html, F.lit(_META_TAG_RE), 0)
-    # F.get (0-based) not element_at: ANSI mode makes element_at
-    # THROW on an empty array; get returns NULL out of bounds
-    desc_tag = F.get(F.filter(metas, lambda m: m.rlike(_DESC_NAME_RE)), 0)
-    desc = F.coalesce(F.regexp_extract(desc_tag, _CONTENT_RE, 1), F.lit(""))
-    links = F.regexp_extract_all(html, F.lit(_LINK_TAG_RE), 0)
-    canon_tag = F.get(F.filter(links, lambda m: m.rlike(_CANONICAL_REL_RE)), 0)
-    canon = F.coalesce(F.regexp_extract(canon_tag, _HREF_ATTR_RE, 1), F.lit(""))
-    return {"title": title, "meta_description": desc, "canonical_url": canon}
 
 
 def page_metadata(

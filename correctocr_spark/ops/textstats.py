@@ -12,14 +12,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import ensure_parallelism, normalized_words
-
 #: tiny deterministic stopword profiles (n-gram/stopword heuristic)
-STOPWORDS: Dict[str, List[str]] = {
-    "en": "the of and to in is was for that with on as at by from this be are he she it they we you not".split(),
-    "da": "og i at det er en til på de som med han af for ikke der var den hun et men sig jeg".split(),
-    "es": "el la de que y en un ser se no haber por con su para como estar tener le lo todo".split(),
-}
+from ..kernels.extract import STOPWORDS
+from .dedup import ensure_parallelism, normalized_words
 
 def _lit_str_array(words):
     """One parsed array literal instead of a py4j round trip per

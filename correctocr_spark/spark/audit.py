@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,11 +91,16 @@ class AuditedRun:
         self.bin_metrics_path = os.path.join(output_dir, "audit_bins")
 
     def completed_urls(self) -> Optional[DataFrame]:
+        """The urls already written, or ``None`` when ``corrected/`` does
+        not exist yet. Every other read error raises: read as "nothing
+        done", it would reprocess and duplicate every url."""
         try:
             done = self.spark.read.parquet(self.corrected_path)
-            return done.select("url")
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+        return done.select("url")
 
     def pending(self, pages: DataFrame) -> DataFrame:
         """Checkpoint-resume: left-anti join against completed urls.

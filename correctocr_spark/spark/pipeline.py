@@ -13,8 +13,10 @@ before the caller's action. Per task, and per Arrow batch:
 3. beam the batch's consolidated words that the task has not seen yet in
    one ``kbest_for_words`` call (the prefix-shared batched beam, bitwise
    equal to the scalar beam) into a task-local word -> k-best map;
-4. run ``kernels.pipeline.correct_tokens`` on those same tokens; the
-   differential oracle ``correct_document`` runs the same function.
+4. run ``kernels.pipeline.correct_tokens`` on those same tokens, with
+   the task's dictionary answers memoized per word (``_InDict``, as in
+   the join plan); the differential oracle ``correct_document`` runs the
+   same function.
 
 The task-local map is the reference's per-process LRU cache
 (hmm.py:82-88) scoped to one task:
@@ -438,7 +440,7 @@ class CorrectionPipeline:
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             res: Resources = b_res.value
-            dictionary = res.dictionary
+            in_dict = _InDict(res.dictionary)
             kbest_map: dict = {}  # this task's words only
             decision_memo: dict = {}
             for pdf in batches:
@@ -457,7 +459,7 @@ class CorrectionPipeline:
                 out = []
                 for url, toks in zip(pdf["url"], docs):
                     r = correct_tokens(
-                        toks, kbest_map.__getitem__, dictionary, res.settings, k, decision_memo
+                        toks, kbest_map.__getitem__, in_dict, res.settings, k, decision_memo
                     )
                     r["url"] = url
                     out.append(r)

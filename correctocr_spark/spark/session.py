@@ -20,9 +20,9 @@ def ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files``; here we zip the package once (content-
     hashed, idempotent) and ``addPyFile`` it.
     """
-    # Memoized per SparkContext: queries()/bench call this once per query
-    # construction, and the walk + md5 + addPyFile RPC (a few ms each) is
-    # pure driver-side overhead after the first call on a context. The
+    # Memoized per SparkContext: each query of the driver contract calls
+    # this on construction, and the walk + md5 + addPyFile RPC (a few ms
+    # each) is pure driver-side overhead after the first call on a context. The
     # guard lives on the context object so a restarted session re-ships.
     sc = spark.sparkContext
     if getattr(sc, "_correctocr_pkg_shipped", False):

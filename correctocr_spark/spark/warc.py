@@ -22,11 +22,12 @@ the exact (url, warc_ts, html) set (pinned by tests/test_warc.py).
 from __future__ import annotations
 
 import os
+import re
 from typing import Iterator, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -86,8 +87,7 @@ def extract_pages(
     default link-density heuristic — the flagship pipeline's contract)
     or ``"justext"`` (jusText-style stopword-density classification
     with context promotion, :func:`~..kernels.extract.justext_extract`)."""
-    from ..kernels.extract import extract_text, justext_extract
-    from ..ops.textstats import STOPWORDS
+    from ..kernels.extract import STOPWORDS, extract_text, justext_extract
 
     if extractor not in ("density", "justext"):
         raise ValueError(f"unknown extractor: {extractor!r}")
@@ -315,6 +315,134 @@ WAT_SCHEMA = T.StructType(
 )
 
 
+#: ALLOWLIST of logical-plan node names known to be narrow (no shuffle,
+#: no job on ``df.rdd``). The guard used to be a denylist of
+#: shuffle-inducing names, but any wide node NOT in that set —
+#: typed-API MapGroups/AppendColumns, or nodes added in a future Spark —
+#: silently passed it and re-enabled the early-AQE-execution ``df.rdd``
+#: hazard with no error signal. Inverted: anything unrecognized is
+#: treated as non-scan-rooted, failing SAFE (ensure_parallelism becomes
+#: a no-op, never an early job).
+_NARROW_NODES = frozenset(
+    {
+        "Relation",          # file-source scan (parquet/csv/...)
+        "LogicalRDD",        # localCheckpoint output / createDataFrame(rdd)
+        "LocalRelation",     # driver-local literal data
+        "OneRowRelation",
+        "Range",             # spark.range
+        "Project",
+        "Filter",
+        "Generate",          # explode/posexplode
+        "SubqueryAlias",
+        "View",
+        "Union",
+        "LocalLimit",
+        "Sample",
+        "ResolvedHint",
+        "UnresolvedHint",
+        # MapInPandas/mapPartitions outputs are narrow too, but .rdd on
+        # them spins Python workers per probe — cheaper to no-op, so
+        # they are deliberately NOT listed.
+    }
+)
+_NODE_NAME_RE = re.compile(r"^[\s:+\-]*'?([A-Za-z]+)")
+
+
+def _is_scan_rooted(df: DataFrame) -> bool:
+    """True iff EVERY node of the analyzed logical plan is a known
+    narrow operator (scan/project/filter/generate/union/coalesce ...),
+    for which materializing ``df.rdd`` runs no job. Inspection is
+    driver-side string parsing of the analyzed plan (NOT the executed
+    plan, whose construction is exactly the AQE finalization we must
+    avoid). Unrecognized node names fail safe (False)."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    for line in plan.splitlines():
+        if not line.strip():
+            continue
+        m = _NODE_NAME_RE.match(line)
+        if not m:
+            return False
+        node = m.group(1)
+        if node == "Repartition":
+            # `Repartition n, false` is coalesce — narrow, allowed;
+            # `true` is a full shuffle
+            if "true" in line:
+                return False
+        elif node not in _NARROW_NODES:
+            return False
+    return True
+
+
+def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
+    """Repartition iff the plan has fewer partitions than the session's
+    default parallelism.
+
+    Row-local projections (the regex columns of :func:`wat_records`,
+    the shingle/hash/HOF projections of ``ops/``) run at the UPSTREAM partition count — for a small local parquet file
+    that is ONE scan split, so the work serializes onto one core however
+    many the session has (measured 3-6x on the sf0.1 bench). At cluster
+    scale the input already has thousands of splits and this is a no-op,
+    so the extra text shuffle is never paid where it would actually hurt.
+
+    SCAN-ROOTED inputs only: ``df.rdd`` (needed for the partition
+    count) finalizes the AQE plan, which EXECUTES any shuffle stages in
+    it — on a join/aggregate output that silently runs the job early
+    and again at the real action. That precondition is now ENFORCED,
+    not conventional: the analyzed logical plan is inspected first and
+    any shuffle-inducing node (join/aggregate/window/sort/distinct/
+    repartition/…) makes this a no-op — such plans already have a
+    shuffle whose partition count AQE sizes itself, so the fix-up is
+    both unsafe to probe and unnecessary. Sites that need a repartition
+    on a wide plan use a plain ``repartition``.
+    """
+    if not _is_scan_rooted(df):
+        return df
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+#: link extraction — RE2∩Java-safe: no lazy quantifiers, anchor text via
+#: [^<]* (flat anchors; nested-markup anchors are the HTML kernel's job)
+A_TAG_RE = r'<a [^>]*href="[^"]+"[^>]*>[^<]*</a>'
+HREF_RE = r'href="([^"]+)"'
+ANCHOR_RE = r">([^<]*)</a>"
+
+#: page-metadata grammar (Java∩RE2): attribute-order-independent tag
+#: matching, case folded via (?i)
+_TITLE_RE = r"(?is)<title[^>]*>([^<]*)</title>"
+_META_TAG_RE = r"(?i)<meta\b[^>]*>"
+_DESC_NAME_RE = r"(?i)name\s*=\s*['\"]?description"
+_CONTENT_RE = r"(?i)content\s*=\s*['\"]([^'\"]*)"
+_LINK_TAG_RE = r"(?i)<link\b[^>]*>"
+_CANONICAL_REL_RE = r"(?i)rel\s*=\s*['\"]?canonical"
+_HREF_ATTR_RE = r"""(?i)href\s*=\s*['\"]([^'\"]*)"""
+
+
+def page_meta_cols(html: Column) -> dict:
+    """The title / meta-description / canonical-link expressions over a
+    raw-HTML column, in output order — shared by :func:`wat_records` and
+    ``ops.filters.page_metadata`` so the two surfaces are value-identical
+    by construction."""
+    # coalesce: a NULL html column must still yield '' fields
+    title = F.coalesce(
+        F.trim(
+            F.regexp_replace(F.regexp_extract(html, _TITLE_RE, 1), r"\s+", " ")
+        ),
+        F.lit(""),
+    )
+    metas = F.regexp_extract_all(html, F.lit(_META_TAG_RE), 0)
+    # F.get (0-based) not element_at: ANSI mode makes element_at
+    # THROW on an empty array; get returns NULL out of bounds
+    desc_tag = F.get(F.filter(metas, lambda m: m.rlike(_DESC_NAME_RE)), 0)
+    desc = F.coalesce(F.regexp_extract(desc_tag, _CONTENT_RE, 1), F.lit(""))
+    links = F.regexp_extract_all(html, F.lit(_LINK_TAG_RE), 0)
+    canon_tag = F.get(F.filter(links, lambda m: m.rlike(_CANONICAL_REL_RE)), 0)
+    canon = F.coalesce(F.regexp_extract(canon_tag, _HREF_ATTR_RE, 1), F.lit(""))
+    return {"title": title, "meta_description": desc, "canonical_url": canon}
+
+
 def wat_records(
     pages: DataFrame,
     url_col: str = "url",
@@ -322,20 +450,14 @@ def wat_records(
     html_col: str = "html",
 ) -> DataFrame:
     """The WAT metadata table for a pages corpus: title / description /
-    canonical link (the exact :func:`~..ops.filters.page_metadata`
-    expressions, shared via ``page_meta_cols`` so the two surfaces
-    cannot drift) plus the per-page outlink array (the
-    :func:`~..ops.cleaning.extract_links` grammar kept IN-ROW as an
+    canonical link (:func:`page_meta_cols`) plus the per-page outlink
+    array (``A_TAG_RE``/``HREF_RE``/``ANCHOR_RE`` kept IN-ROW as an
     ``array<struct<href, anchor>>`` — no explode, no shuffle; WAT is a
     per-record format, so the row stays page-grained).
 
     Entirely row-local column algebra at scan speed — the metadata half
     of the crawl ecosystem's WARC (raw) / WET (text) / WAT (metadata)
     triple; :func:`write_wat_shards` serializes it."""
-    from ..ops.cleaning import A_TAG_RE, ANCHOR_RE, HREF_RE
-    from ..ops.dedup import ensure_parallelism
-    from ..ops.filters import page_meta_cols
-
     html = F.col(html_col)
     meta = page_meta_cols(html)
     links = F.transform(

@@ -808,14 +808,3 @@ def test_oracled_queries_precede_rows_only():
         f"window: {sorted(overflow)}"
     )
 
-
-def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE entry must exist in queries() — a renamed
-    or dropped query would otherwise only surface as a KeyError inside
-    the driver's per-round bench run."""
-    import bench
-
-    missing = [n for n in bench.HEADLINE if n not in QUERIES]
-    assert not missing, f"bench HEADLINE names not in queries(): {missing}"
-    dupes = [n for n in set(bench.HEADLINE) if bench.HEADLINE.count(n) > 1]
-    assert not dupes, f"duplicate bench HEADLINE entries: {dupes}"
