@@ -1,6 +1,6 @@
 """Character-level HMM: k-best beam search + parameter training.
 
-Reference: /root/reference/CorrectOCR/model/hmm.py.
+Reference: CorrectOCR, ``model/hmm.py``.
 
 The scalar beam :func:`k_best_beam` (``hmm.py:165-188``) is the oracle.
 It is re-expressed as vectorized NumPy with **identical candidate
@@ -32,21 +32,53 @@ once, however many words share it:
   keeps, per beam slot, the new state and the parent slot it extends;
 - a word's k-best is the beam of its full prefix, decoded by walking the
   slot back-pointers, one length group at a time; a length-1 word takes
-  the top-k of its depth-0 vector, longer words enumerate all N*N
-  depth-1 pairs from it, exactly as the scalar beam does;
-- the ordering argument is the scalar one, row by row: each step's
-  candidates are laid out in the reference's generation order (i-major
-  at depth 1, ``cand[j, x]`` after) and ranked by
-  :func:`_stable_topk_desc`, which equals the stable argsort prefix;
+  the top-k of its depth-0 vector, longer words extend every depth-0
+  state at depth 1, exactly as the scalar beam does;
+- the ordering argument is the scalar one, row by row: each step ranks
+  its candidates by (probability desc, index in the reference's
+  generation order asc) — i-major ``i*N + j`` at depth 1, j-major
+  ``j*kk + x`` after — which is the stable argsort prefix;
 - floats stay bitwise equal because every product is the scalar
   expression on the same operands in the same order — ``(a*T)*e`` at
-  depth 1, ``(p*T[last]).T*e`` after — and nothing is summed or
-  rescaled; sharing a prefix only skips recomputing identical rows;
-- each depth is processed in chunks of 512 prefixes, so the largest
-  temporary is a (512, N, N) array at depth 1;
+  depth 1, ``(p*T[last])*e`` after — and nothing is summed or rescaled;
+  sharing a prefix only skips recomputing identical rows;
+- each depth is processed in chunks of 512 prefixes;
 - empty words and words holding a multichar key take the scalar path
   (``hmm.py:194-220``); states of other than one character are decoded
   with a per-candidate ``"".join``.
+
+**Sparse step** (:func:`_sparse_step`). The dense step scores every
+extension of every path: N*N candidates at depth 1, N*k after. Yet a
+path ``x`` (probability ``p_x``, last state ``s_x``) extended by the
+observed char ``c`` reaches state ``j`` with ``p_x * tran[s_x, j] *
+emis[j, c]``, so of its N extensions at most the k best by
+``tran[s_x, j] * emis[j, c]`` can be among the step's top k: a global
+top-k candidate is always among its own path's k best extensions.
+:func:`_tables` precomputes per model and ``k``, for every ``(c, s)``,
+those k states ``J[c, s]`` (ties to the lower ``j``) and the (k+1)-th
+largest product ``G[c, s]``; the step scores only the k per path, with
+the expressions above, and ranks them by the same key. Rounding can
+reorder near-equal products, so the result of a row stands only when
+its k-th kept probability ``v`` certifies that no excluded candidate
+can rank above it:
+
+- ``v > max_x p_x * G[c, s_x] * (1 + 1e-9)``: each excluded candidate's
+  exact product is at most ``p_x * G[c, s_x]``, and its computed value
+  and the computed bound are each within a few ulps (relative
+  ``2**-53``) of exact, far inside the ``1e-9`` margin; strict, so a
+  tie with an excluded candidate is never certified;
+- ``v >= 2**-1022`` (the smallest normal float): below it the products
+  underflow, the error is absolute rather than relative, and the margin
+  proves nothing.
+
+Every other row is redone by the dense step (:func:`_full_step`, the
+same function the scalar-order argument above covers): boundary ties,
+chars no state emits (all products 0), underflow to subnormals or 0. All
+rows take the dense step when ``k >= N`` (nothing is excluded) or when a
+model entry lies outside ``[0, 1]`` (the error bounds assume
+probabilities); then :func:`_tables` is ``None``. With perfbench's
+74-state model and k = 4, 2 of the 14,296 rows stepped for 3,565
+``html_zipf`` words fall back.
 """
 
 from __future__ import annotations
@@ -66,10 +98,12 @@ class HMMParams:
     ``init: {char->p}``, ``tran: {char->{char->p}}``,
     ``emis: {char->{char->p}}`` (``hmm.py:67-70``); state order is the
     ``init`` key order. Designed to be built once on the driver and
-    broadcast to executors.
+    broadcast to executors; treated as immutable once built, because the
+    beam caches per-``k`` tables derived from it in ``_beam_tables``
+    (not pickled: each process rebuilds its own).
     """
 
-    __slots__ = ("states", "index", "init", "tran", "emis", "multichars")
+    __slots__ = ("states", "index", "init", "tran", "emis", "multichars", "_beam_tables")
 
     def __init__(
         self,
@@ -103,6 +137,15 @@ class HMMParams:
                 if ib is not None:
                     self.emis[ia, ib] = p
         self.multichars = dict(multichars or {})
+        self._beam_tables: Dict[int, Optional[tuple]] = {}
+
+    def __getstate__(self):
+        return None, {s: getattr(self, s) for s in self.__slots__ if s != "_beam_tables"}
+
+    def __setstate__(self, state):
+        for s, v in state[1].items():
+            setattr(self, s, v)
+        self._beam_tables = {}
 
     # -- (de)serialization: the reference's JSON artifact shape -----------
 
@@ -145,32 +188,6 @@ class HMMParams:
         if i is None:
             return np.zeros(len(self.states), dtype=np.float64)
         return self.emis[:, i]
-
-
-def viterbi(params: HMMParams, char_seq: str) -> str:
-    """``hmm.py:132-163`` — max-probability state path.
-
-    Dead code in the reference (no call sites); implemented for API
-    parity, vectorized. Tie-breaking matches the reference's
-    ``max(dict.items(), key=...)``/``max(dict, key=...)`` behavior:
-    first-encountered maximum wins == lowest state index wins.
-    """
-    n = len(params.states)
-    L = len(char_seq)
-    if n == 0 or L == 0:
-        return ""
-    delta = params.init * params._emis_col(char_seq[0])
-    back = np.zeros((L, n), dtype=np.int64)
-    for t in range(1, L):
-        cand = delta[:, None] * params.tran  # cand[i, j]
-        best_i = cand.argmax(axis=0)  # first max wins, as dict-max does
-        delta = cand[best_i, np.arange(n)] * params._emis_col(char_seq[t])
-        back[t] = best_i
-    best_state = int(delta.argmax())
-    states_rev = [best_state]
-    for t in range(L - 1, 0, -1):
-        states_rev.append(int(back[t, states_rev[-1]]))
-    return "".join(params.states[i] for i in reversed(states_rev))
 
 
 def k_best_beam(params: HMMParams, word: str, k: int) -> KBest:
@@ -243,6 +260,13 @@ def _stable_topk_desc(flat: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]
     return out, np.take_along_axis(flat, out, axis=1)
 
 
+def _emis_rows(params: HMMParams) -> np.ndarray:
+    """(N+1, N): row ``c`` is the emission column of observed char code
+    ``c`` (see :func:`_char_codes`); row N, of unknown chars, is zero."""
+    n = len(params.states)
+    return np.concatenate([params.emis, np.zeros((n, 1))], axis=1).T
+
+
 def _char_codes(params: HMMParams, text: str) -> np.ndarray:
     """Observed-char index per char of ``text``: the state index of a
     single-char state, or ``n`` (the all-zero emission column) for a char
@@ -254,6 +278,87 @@ def _char_codes(params: HMMParams, text: str) -> np.ndarray:
     cps = np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
     pos = np.searchsorted(codes, cps)
     return np.where(codes[pos] == cps, idx[pos], n)
+
+
+#: A sparse row stands only when its k-th kept probability exceeds the
+#: bound on every excluded candidate by this relative margin and is a
+#: normal float (see module docstring).
+_MARGIN = 1e-9
+_TINY = np.finfo(np.float64).tiny
+
+
+def _tables(params: HMMParams, k: int) -> Optional[tuple]:
+    """The sparse step's per-model tables for beam width ``k``, built once
+    per process and cached on ``params``; ``None`` when every row takes
+    the full step (``k >= N``, or entries outside ``[0, 1]``).
+
+    For observed char code ``c`` and predecessor state ``s``: ``J[c, s]``
+    are the ``k`` states ``j`` with the largest ``tran[s, j] * emis[j, c]``
+    (ties to the lower ``j``), ascending; ``TJ``/``EJ`` their ``tran`` and
+    ``emis`` entries; ``G[c, s]`` the (k+1)-th largest product."""
+    cache = params._beam_tables
+    if k not in cache:
+        n = len(params.states)
+        cache[k] = None
+        if 0 < k < n and all(((a >= 0) & (a <= 1)).all() for a in (params.init, params.tran, params.emis)):
+            E = _emis_rows(params)
+            w = params.tran[None, :, :] * E[:, None, :]  # w[c, s, j]
+            best = np.argsort(-w, axis=2, kind="stable")[:, :, : k + 1]
+            J = np.sort(best[:, :, :k], axis=2)
+            G = np.take_along_axis(w, best[:, :, k:], axis=2)[:, :, 0]
+            TJ = params.tran[np.arange(n)[:, None], J]
+            EJ = E[np.arange(n + 1)[:, None, None], J]
+            cache[k] = (J, TJ, EJ, G)
+    return cache[k]
+
+
+def _full_step(
+    tran: np.ndarray, P: np.ndarray, S: np.ndarray, ec: np.ndarray, kn: int, first: bool
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One beam step for C prefixes over every extension of their paths
+    (probabilities ``P`` and last states ``S``, both (C, kk); at depth 1
+    the paths are the N states themselves), emission rows ``ec`` (C, N).
+    Returns the top-``kn`` (state, parent slot, probability), each
+    (C, kn), in the reference's generation order."""
+    cand = (P[:, :, None] * tran[S]) * ec[:, None, :]  # cand[u, x, j]
+    C, kk, n = cand.shape
+    if first:  # i-major N*N enumeration (hmm.py:174-175)
+        o, pr = _stable_topk_desc(cand.reshape(C, kk * n), kn)
+        return o % n, o // n, pr
+    # j-major, path-minor (hmm.py:183-184)
+    o, pr = _stable_topk_desc(cand.transpose(0, 2, 1).reshape(C, n * kk), kn)
+    return o // kk, o % kk, pr
+
+
+def _sparse_step(
+    tables: tuple, P: np.ndarray, S: np.ndarray, cc: np.ndarray, kn: int, first: bool
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`_full_step` over only each path's ``k`` best extensions
+    (``cc``: observed char codes, (C,)), plus a per-row flag: where it is
+    ``False`` the result is not certified and the row must be redone."""
+    J, TJ, EJ, G = tables
+    n, k = J.shape[1:]
+    row = cc[:, None] * n + S  # (C, kk): table row of each path's (char, last state)
+    Js = J.reshape(-1, k).take(row, axis=0)  # (C, kk, k)
+    cand = (P[:, :, None] * TJ.reshape(-1, k).take(row, axis=0)) * EJ.reshape(-1, k).take(row, axis=0)
+    bound = (P * G.take(row)).max(axis=1)
+    C, kk, _ = Js.shape
+    cand = cand.reshape(C, kk * k)
+    if first:  # slot-major with ascending j: already the i-major flat order
+        o, pr = _stable_topk_desc(cand, kn)
+    else:  # rank by (probability desc, j-major flat index asc)
+        o = np.argsort(-cand, axis=1)[:, : kn + 1]
+        pr = np.take_along_axis(cand, o, axis=1)
+        # the unstable sort is exact where the first kn + 1 values are
+        # distinct; rows with a tie there are ranked by the full key
+        for u in np.flatnonzero((pr[:, 1:] == pr[:, :-1]).any(axis=1)):
+            flat = (Js[u] * kk + np.arange(kk)[:, None]).ravel()
+            o[u, :kn] = np.lexsort((flat, -cand[u]))[:kn]
+        o = o[:, :kn]
+        pr = np.take_along_axis(cand, o, axis=1)
+    st = np.take_along_axis(Js.reshape(C, -1), o, axis=1)
+    ok = (pr[:, -1] > bound * (1 + _MARGIN)) & (pr[:, -1] >= _TINY)
+    return st, o // k, pr, ok
 
 
 def _prefix_beam(
@@ -272,7 +377,8 @@ def _prefix_beam(
     lens_sorted = lens[order]
     # active[t]: words (sorted) with len > t are exactly the first active[t]
     active = np.searchsorted(-lens_sorted, -np.arange(int(lens_sorted[0])), side="left")
-    E = np.concatenate([params.emis, np.zeros((n, 1))], axis=1).T  # (n+1, n)
+    E = _emis_rows(params)
+    tables = _tables(params, k)
 
     # depth 0: one prefix per observed first char
     p0_keys, ids = np.unique(obs[starts], return_inverse=True)
@@ -296,18 +402,20 @@ def _prefix_beam(
         pr = np.empty((U, kn))
         for lo in range(0, U, chunk):
             hi = min(lo + chunk, U)
-            pc, ec = par[lo:hi], E[ch[lo:hi]]
+            pc, cc = par[lo:hi], ch[lo:hi]
             if t == 1:
-                # i-major N*N enumeration (hmm.py:174-175)
-                p2 = (a0[pc][:, :, None] * params.tran[None, :, :]) * ec[:, None, :]
-                o, pr[lo:hi] = _stable_topk_desc(p2.reshape(hi - lo, n * n), kn)
-                bk[lo:hi], st[lo:hi] = o // n, o % n
+                P, S = a0[pc], np.arange(n)[None, :]
             else:
-                # j-major, path-minor (hmm.py:183-184): cand[u, j, x]
-                tr = params.tran[states[t - 1][pc]]  # (C, kk, n)
-                cand = (probs[t - 1][pc][:, :, None] * tr).transpose(0, 2, 1) * ec[:, :, None]
-                o, pr[lo:hi] = _stable_topk_desc(cand.reshape(hi - lo, n * kk), kn)
-                st[lo:hi], bk[lo:hi] = o // kk, o % kk
+                P, S = probs[t - 1][pc], states[t - 1][pc]
+            redo = np.arange(hi - lo)
+            if tables is not None:
+                st[lo:hi], bk[lo:hi], pr[lo:hi], ok = _sparse_step(tables, P, S, cc, kn, t == 1)
+                redo = redo[~ok]
+            if len(redo):
+                rows = lo + redo
+                st[rows], bk[rows], pr[rows] = _full_step(
+                    params.tran, P[redo], S if t == 1 else S[redo], E[cc[redo]], kn, t == 1
+                )
         word_ids.append(ids)
         parents.append(par)
         states.append(st)

@@ -117,6 +117,8 @@ def test_bin_always_assigned(word, kbest):
 
 # --- batched beam == scalar beam -------------------------------------------
 
+import numpy as np  # noqa: E402
+
 from correctocr_spark.kernels.hmm import HMMParams, kbest_for_word, kbest_for_words  # noqa: E402
 
 # few distinct values, so equal products (ties) are common
@@ -187,3 +189,129 @@ def test_batched_beam_equals_scalar_beam_past_one_chunk(seed, k):
     assert _hexed(kbest_for_words(params, words, k)) == _hexed(
         [kbest_for_word(params, w, k) for w in words]
     )
+
+
+# --- the certified sparse step -------------------------------------------
+
+SMOOTHING = 1e-4  # perfbench's: every emission has a non-zero floor
+_LETTERS = "abcdefghijkl"  # up to 12 states; "?" and "z" stay unknown
+
+
+def _smoothed(counts, smoothing=SMOOTHING):
+    denom = sum(counts.values()) + smoothing * len(counts)
+    return {b: (c + smoothing) / denom for b, c in counts.items()}
+
+
+def _smoothed_model(states, tran_counts, confusions, init_scale=1.0):
+    """Smoothed counts as the trainer makes them: a dominant emission
+    diagonal, a few confusions and a floor everywhere else."""
+    init = {s: p * init_scale for s, p in _smoothed({s: 1 for s in states}).items()}
+    tran = {a: _smoothed(dict(zip(states, row))) for a, row in zip(states, tran_counts)}
+    emis = {}
+    for a in states:
+        counts = {b: 0 for b in states}
+        counts[a] = 1000
+        counts.update((read, n) for gold, read, n in confusions if gold == a)
+        emis[a] = _smoothed(counts)
+    return HMMParams(init, tran, emis)
+
+
+@st.composite
+def sparse_beam_batches(draw):
+    n = draw(st.integers(8, 12))
+    states = list(_LETTERS[:n])
+    # few count values, and some all-zero (uniform) rows: tied and
+    # identical transition rows
+    row = st.one_of(
+        st.just([0] * n), st.lists(st.sampled_from([0, 0, 1, 3, 20]), min_size=n, max_size=n)
+    )
+    tran_counts = draw(st.lists(row, min_size=n, max_size=n))
+    confusions = draw(
+        st.lists(st.tuples(st.sampled_from(states), st.sampled_from(states), st.sampled_from([5, 30])), max_size=4)
+    )
+    # a tiny initial probability underflows short words into subnormals
+    params = _smoothed_model(states, tran_counts, confusions, draw(st.sampled_from([1.0, 1e-300])))
+    observed = "".join(states) + _UNKNOWN
+    words = draw(st.lists(st.text(alphabet=observed, min_size=1, max_size=10), min_size=1, max_size=30))
+    words += [w[:j] for w in words[:10] for j in (2, 4)]  # shared prefixes
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    letters = np.array(states)
+    # normal -> subnormal -> 0 along a 300-char word
+    words.append("".join(rng.choice(letters, size=300)))
+    if draw(st.booleans()):  # more than one 512-prefix chunk at depth 3
+        words += ["".join(rng.choice(letters, size=rng.integers(4, 8))) for _ in range(800)]
+    k = draw(st.integers(1, n + 2))
+    return params, draw(st.permutations(words)), k
+
+
+@given(sparse_beam_batches())
+@settings(max_examples=25, deadline=None)
+def test_sparse_beam_equals_scalar_beam(batch):
+    params, words, k = batch
+    assert _hexed(kbest_for_words(params, words, k)) == _hexed(
+        [kbest_for_word(params, w, k) for w in words]
+    )
+
+
+@pytest.mark.parametrize(
+    "states, p, kept, excluded",
+    [
+        # equal tran*emis products whose computed p*tran*emis differ: the
+        # excluded extension (higher j, dropped on the tie) computes larger
+        # and the bound equals the kept value
+        ("xyz", float.fromhex("0x1.a9f4760b83f69p-1"), (0.3, 0.2), (0.2, 0.3)),
+        # a smaller product whose computed value exceeds the kept one,
+        # which in turn exceeds the computed bound by less than the margin
+        (
+            "xyz",
+            float.fromhex("0x1.f225d56d3bae2p-3"),
+            (float.fromhex("0x1.29d81622f437ap-1"), float.fromhex("0x1.7bd2ab71dd33bp-1")),
+            (float.fromhex("0x1.08fa18d45fda3p-1"), float.fromhex("0x1.aaef70bd16ae1p-1")),
+        ),
+        # a smaller tran*emis product that, in subnormals, computes equal
+        # to the kept one and wins the tie by its lower index
+        (
+            "xzy",
+            float.fromhex("0x0.00000000001c0p-1022"),
+            (float.fromhex("0x1.2dd451dab0dd9p-2"), float.fromhex("0x1.5bec202273e14p-1")),
+            (float.fromhex("0x1.9d454c8630e82p-2"), float.fromhex("0x1.faabac53a40aep-2")),
+        ),
+    ],
+    ids=["tie", "margin", "subnormal"],
+)
+def test_sparse_beam_uncertified_rows(states, p, kept, excluded):
+    """Hand-made rows whose top-1 is not the best extension of its path
+    by ``tran * emis`` (kept: state y, excluded: state z): only the
+    certificate, the margin over the bound and the normal-float guard,
+    sends them to the full step."""
+    init = {s: (p if s == "x" else 0.0) for s in states}
+    tran = {a: {b: 0.0 for b in states} for a in states}
+    emis = {a: {b: float(a == b) for b in states} for a in states}
+    (tran["x"]["y"], emis["y"]["z"]), (tran["x"]["z"], emis["z"]["z"]) = kept, excluded
+    params = HMMParams(init, tran, emis)
+    assert kbest_for_word(params, "xz", 1)[0][0] == "xz"
+    words = ["xz", "z", "x", "xzz"]
+    assert _hexed(kbest_for_words(params, words, 1)) == _hexed([kbest_for_word(params, w, 1) for w in words])
+
+
+def test_sparse_step_carries_the_beam(monkeypatch):
+    """On a smoothed model with N > k and transition counts as varied as
+    a trained model's, the full-step fallback redoes at most 1% of the
+    (prefix, depth) rows: a bound that never certifies would pass every
+    equality test while running the dense step. (Transition rows of a
+    few distinct counts tie far more often and fall back on ~3%.)"""
+    from correctocr_spark.kernels import hmm
+
+    rng = np.random.default_rng(5)
+    n = len(_LETTERS)
+    tran_counts = (rng.integers(1, 60, size=(n, n)) * (rng.random((n, n)) < 0.6)).tolist()
+    confusions = [("a", "e", 30), ("c", "e", 5), ("h", "b", 30), ("l", "i", 30)]
+    params = _smoothed_model(list(_LETTERS), tran_counts, confusions)
+    letters = np.array(list(_LETTERS))
+    words = sorted({"".join(rng.choice(letters, size=rng.integers(2, 12))) for _ in range(2000)})
+    redone = []
+    full_step = hmm._full_step
+    monkeypatch.setattr(hmm, "_full_step", lambda *a: redone.append(len(a[1])) or full_step(*a))
+    kbest_for_words(params, words, 4)
+    rows = len({w[:d] for w in words for d in range(2, len(w) + 1)})
+    assert rows > 5_000 and sum(redone) <= rows // 100, (sum(redone), rows)

@@ -49,15 +49,6 @@ class TestModel:
         # hmm.py:204-205
         assert kbest_for_word(mini_hmm, "", 4) == [("", 0.0)] * 4
 
-    def test_viterbi(self, mini_hmm):
-        # hmm.py:132-163 (dead code in the reference; API parity): the
-        # max-prob path for a noisy read of a trained word recovers it
-        from correctocr_spark.kernels.hmm import viterbi
-
-        assert viterbi(mini_hmm, "Slring") == "String"
-        assert viterbi(mini_hmm, "String") == "String"
-        assert viterbi(mini_hmm, "") == ""
-
     def test_batched_beam_bitwise_parity(self, mini_hmm):
         """kbest_for_words must equal the scalar beam bitwise, incl.
         zero-probability tie ordering (unknown chars) and length-1 words."""
