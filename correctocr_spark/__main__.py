@@ -57,8 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
     prep.add_argument("--k", type=int, default=int(_env_default("k", "4")))
     prep.add_argument("--settings", choices=["shipped", "aggressive"],
                       default=_env_default("settings", "shipped"))
-    prep.add_argument("--strategy", choices=["auto", "join"],
-                      default=_env_default("strategy", "auto"))
     prep.add_argument("--no-dehyphenate", action="store_true")
     prep.add_argument("--no-html", action="store_true",
                       help="use the pre-extracted text column")
@@ -96,8 +94,6 @@ def build_parser() -> argparse.ArgumentParser:
     corr.add_argument("--k", type=int, default=int(_env_default("k", "4")))
     corr.add_argument("--settings", choices=["shipped", "aggressive"],
                       default=_env_default("settings", "aggressive"))
-    corr.add_argument("--strategy", choices=["auto", "join"],
-                      default=_env_default("strategy", "auto"))
     corr.add_argument("--no-dehyphenate", action="store_true")
     corr.add_argument("--no-html", action="store_true")
     corr.add_argument("--resources", default=_env_default("resources", ""))
@@ -423,7 +419,7 @@ def main(argv=None) -> int:
             )
             run = AuditedRun(spark, args.output, run_id=args.run_id)
             pending = pages if args.no_resume else run.pending(pages)
-            run.write(pipe.corrected(pending, strategy=args.strategy))
+            run.write(pipe.corrected(pending))
             done = spark.read.parquet(run.corrected_path).count()
             print(f"prepared: {done} documents at {run.corrected_path}")
         elif args.command == "model":
@@ -491,7 +487,7 @@ def main(argv=None) -> int:
                     dehyphenate=not args.no_dehyphenate,
                     use_html=not args.no_html,
                 )
-                corrected = pipe.corrected(spark.read.parquet(args.input), strategy=args.strategy)
+                corrected = pipe.corrected(spark.read.parquet(args.input))
             if args.gold_ready_only:
                 corrected = corrected.where(F.col("done"))
             corrected = corrected.persist()

@@ -455,10 +455,13 @@ def kbest_arrays(
     array of str), probabilities and ``offsets``; word ``i`` owns
     ``[offsets[i], offsets[i+1])``. Bitwise-identical to the scalar
     function. Empty and multichar-bearing words take the scalar path."""
-    is_scalar = np.array(
-        [len(w) == 0 or not params.states or any(sub in w for sub in params.multichars) for w in words],
-        dtype=bool,
-    )
+    subs = list(params.multichars)
+    if not params.states:
+        is_scalar = np.ones(len(words), dtype=bool)
+    elif subs:
+        is_scalar = np.array([not w or any(sub in w for sub in subs) for w in words], dtype=bool)
+    else:  # no multichar keys: only empty words take the scalar path
+        is_scalar = np.array([not w for w in words], dtype=bool)
     scalar = np.flatnonzero(is_scalar).tolist()
     beam_idx = np.flatnonzero(~is_scalar)
     groups = list(_prefix_beam(params, [words[i] for i in beam_idx], k)) if len(beam_idx) else []

@@ -1,11 +1,11 @@
-"""The correction pipeline as Spark plans.
+"""The correction pipeline as one Spark plan.
 
 Reference chain (document.py:166-242):
 ``tokenize -> dehyphenate -> kbest -> bin -> autocorrect -> reassemble``.
-``corrected()`` has two plans for it.
 
-``auto`` (default) — one ``mapInPandas`` over the pages, and no Spark job
-before the caller's action. Per task, and per Arrow batch:
+``corrected()`` and ``tokens()`` are the same plan: one ``mapInPandas``
+over the pages, and no Spark job before the caller's action. Per task,
+and per Arrow batch:
 
 1. extract each page once (``kernels/extract.py``), or take ``text``
    when ``use_html=False``;
@@ -14,9 +14,13 @@ before the caller's action. Per task, and per Arrow batch:
    one ``kbest_for_words`` call (the prefix-shared batched beam, bitwise
    equal to the scalar beam) into a task-local word -> k-best map;
 4. run ``kernels.pipeline.correct_tokens`` on those same tokens, with
-   the task's dictionary answers memoized per word (``_InDict``, as in
-   the join plan); the differential oracle ``correct_document`` runs the
-   same function.
+   the task's dictionary answers memoized per word (``_InDict``); the
+   differential oracle ``correct_document`` runs the same function.
+
+``corrected()`` emits one ``CORRECTED_SCHEMA`` row per url. ``tokens()``
+emits the token table instead: one ``TOKEN_TABLE_SCHEMA`` row per token
+from the same ``correct_tokens`` call (null k-best on hyphen tails) and
+one all-null placeholder row per token-less page.
 
 The task-local map is the reference's per-process LRU cache
 (hmm.py:82-88) scoped to one task:
@@ -30,41 +34,14 @@ The task-local map is the reference's per-process LRU cache
 - scale: under Heaps' law a task's distinct words grow with the task's
   size, not the corpus's, so the beam's share of per-token work depends
   on partition size. Hot words are beamed once per task, as the
-  reference beams them once per process.
-
-``join`` — the token plan: three Python passes over one token stream,
-shared by ``corrected(strategy="join")`` and the token table
-(``tokens()``, which the CLI's report and index commands read):
-
-1. **tokenize** (``tokens_raw``, one ``mapInPandas`` over the pages):
-   extract, tokenize and dehyphenate each page once. All doc-local
-   sequence logic — hyphen marks, tail gold-clears, punctuation gold,
-   *merged* consolidated words — is computed here, one row per token and
-   one all-null placeholder row per token-less page;
-2. **beam** (``repartition(parallelism, coalesce(cons_word, url))`` + one
-   ``mapInArrow``): each task beams the words new to it in one
-   ``kbest_for_words`` call per Arrow batch and attaches each row's
-   k-best and candidate dictionary flags. Hashing on the word co-locates
-   a word's rows, so each corpus word is beamed once, with no
-   ``distinct`` and no join; correctness does not depend on it. A Zipf-hot
-   word puts its rows in one task, but costs one beam there; ``tokens(salt=n)``
-   adds ``n`` row-hash buckets to the key to spread them;
-3. **correct** (``repartition(parallelism, url)`` +
-   ``sortWithinPartitions(url, idx)`` + one ``mapInArrow``): each url's
-   rows rebuild its ``Tok`` list, and ``correct_tokens`` — the function
-   ``auto`` and the oracle run — bins, autocorrects and reassembles it,
-   emitting one ``CORRECTED_SCHEMA`` row per url or the token table's
-   decision columns per token. The candidates' dictionary flags from
-   pass 2 answer the kernel's dictionary probes.
-
-Passes 2 and 3 are ``mapInArrow``: the k-best column crosses as Arrow,
-and only a word's first row in a task becomes Python objects.
+  reference beams them once per process; there is no shuffle key for a
+  hot word to skew.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, List, Optional
 
 import pandas as pd
 import pyarrow as pa
@@ -72,7 +49,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..kernels.hmm import kbest_arrays, kbest_for_words
 from ..kernels.pipeline import (
@@ -88,17 +65,6 @@ from ..kernels.pipeline import (
 )
 from ..kernels.extract import extract_text
 from .resources import Resources, default_resources
-
-TOKEN_STRUCT = T.StructType(
-    [
-        T.StructField("idx", T.IntegerType(), False),
-        T.StructField("original", T.StringType(), False),
-        T.StructField("gold0", T.StringType(), True),
-        T.StructField("head", T.BooleanType(), False),
-        T.StructField("tail", T.BooleanType(), False),
-        T.StructField("cons_word", T.StringType(), True),
-    ]
-)
 
 KBEST_STRUCT = T.StructType(
     [
@@ -138,23 +104,20 @@ CORRECTED_SCHEMA = T.StructType(
 
 _KBEST_FIELDS = list(to_arrow_type(KBEST_STRUCT))
 
-# tokens_raw's rows; every column is nullable for the placeholder rows
-RAW_TOKENS_SCHEMA = T.StructType(
-    [T.StructField("url", T.StringType(), False)]
-    + [T.StructField(f.name, f.dataType, True) for f in TOKEN_STRUCT.fields]
-)
-
-# the beam pass's rows: k-best is null on hyphen tails and placeholders
-KBEST_TOKENS_SCHEMA = T.StructType(
-    RAW_TOKENS_SCHEMA.fields
-    + [T.StructField("discarded", T.BooleanType(), False)]
-    + [T.StructField(f.name, f.dataType, True) for f in KBEST_STRUCT.fields]
-)
-_KBEST_TOKENS_ARROW = to_arrow_schema(KBEST_TOKENS_SCHEMA)
-
-# the token table: the beam pass's rows plus the kernel's decisions
+# one row per token; every token column is null on a placeholder row, and
+# the k-best columns are null on hyphen tails too
 TOKEN_TABLE_SCHEMA = T.StructType(
-    KBEST_TOKENS_SCHEMA.fields
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("idx", T.IntegerType(), True),
+        T.StructField("original", T.StringType(), True),
+        T.StructField("gold0", T.StringType(), True),
+        T.StructField("head", T.BooleanType(), True),
+        T.StructField("tail", T.BooleanType(), True),
+        T.StructField("cons_word", T.StringType(), True),
+        T.StructField("discarded", T.BooleanType(), False),
+    ]
+    + [T.StructField(f.name, f.dataType, True) for f in KBEST_STRUCT.fields]
     + [
         T.StructField("bin", T.IntegerType(), True),
         T.StructField("heuristic", T.StringType(), True),
@@ -163,40 +126,6 @@ TOKEN_TABLE_SCHEMA = T.StructType(
         T.StructField("gold", T.StringType(), True),
     ]
 )
-
-
-def _tokenize_rows(text: Optional[str]):
-    """Doc-local stages 2: tokenize, dehyphenate, consolidated originals."""
-    toks = tokenize_doc(text or "")
-    dehyphenate(toks)
-    n = len(toks)
-    rows = []
-    i = 0
-    tail_flags = [False] * n
-    # a tail is the token immediately after a head (consumed by the
-    # iterator in dehyphenate/consolidated — cannot itself be a head)
-    for t in toks:
-        if t.is_hyphenated and t.index + 1 < n:
-            tail_flags[t.index + 1] = True
-    for t in toks:
-        if tail_flags[t.index]:
-            cons = None
-        elif t.is_hyphenated:
-            nxt = toks[t.index + 1].original if t.index + 1 < n else "-"
-            cons = t.original + nxt
-        else:
-            cons = t.original
-        rows.append(
-            {
-                "idx": t.index,
-                "original": t.original,
-                "gold0": t.gold,
-                "head": t.is_hyphenated,
-                "tail": tail_flags[t.index],
-                "cons_word": cons,
-            }
-        )
-    return rows
 
 
 class CorrectionPipeline:
@@ -216,8 +145,8 @@ class CorrectionPipeline:
         # CPU-dense UDF stages must NOT be partitioned by shuffle bytes:
         # AQE's coalescing targets ~64MB/partition, which serializes a
         # stage whose cost is compute-per-row (the beam runs ~10^4 flops
-        # per word on a few dozen bytes). Explicit repartition pins the
-        # parallelism for those exchanges.
+        # per word on a few dozen bytes). An explicit repartition pins the
+        # parallelism of kbest_table's exchange.
         self.parallelism = parallelism or spark.sparkContext.defaultParallelism * 2
         self._b_res = spark.sparkContext.broadcast(self.resources)
 
@@ -235,50 +164,6 @@ class CorrectionPipeline:
                 yield pdf
 
         return pages.mapInPandas(run, schema=pages.schema)
-
-    # -- stage 2: extract + tokenize + dehyphenate ---------------------------
-
-    def _page_cols(self):
-        return ["url", "html", "text"] if self.use_html else ["url", "text"]
-
-    def tokens_raw(self, pages: DataFrame) -> DataFrame:
-        """One mapInPandas for extract+tokenize+dehyphenate.
-
-        A single Python UDF per stage matters: Spark gives each Python
-        UDF in a pipelined stage its *own* worker process per task, so
-        chaining extract|tokenize as two UDFs doubles the Python process
-        count and oversubscribes the box at high ``local[N]``.
-
-        Token-less docs (empty/unextractable pages) keep one all-null
-        placeholder row so they still reach the output + audit —
-        otherwise resume would re-process them forever.
-        """
-        dehyph = self.dehyphenate
-        texts_of = _make_texts_of(self.use_html)
-        fields = [f.name for f in TOKEN_STRUCT.fields]
-        empty_row = {f: None for f in fields}
-
-        def tokenize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for url, text in zip(pdf["url"], texts_of(pdf)):
-                    trs = (
-                        _tokenize_rows(text) if dehyph else _tokenize_rows_nodehyph(text)
-                    )
-                    if not trs:
-                        r = dict(empty_row)
-                        r["url"] = url
-                        rows.append(r)
-                    for r in trs:
-                        r["url"] = url
-                        rows.append(r)
-                yield pd.DataFrame(rows, columns=["url"] + fields)
-
-        return (
-            pages.select(*self._page_cols())
-            .mapInPandas(tokenize, schema=RAW_TOKENS_SCHEMA)
-            .withColumn("discarded", F.lit(False))
-        )
 
     # -- the k-best table of a vocabulary ---------------------------------------
 
@@ -311,132 +196,34 @@ class CorrectionPipeline:
             "cons_word", kbest_udf(F.col("cons_word")).alias("kb")
         ).select("cons_word", "kb.kbest", "kb.cand_in_dict")
 
-    # -- the token plan: the token table and corrected(strategy="join") ---------
+    # -- the one plan: corrected documents and the token table ---------------
 
-    def tokens(self, pages: DataFrame, salt: int = 0) -> DataFrame:
+    def corrected(self, pages: DataFrame, strategy: str = "auto") -> DataFrame:
+        """Corrected documents, one ``CORRECTED_SCHEMA`` row per url.
+
+        ``strategy`` accepts ``"auto"`` and ``"join"``, which both run the
+        one plan (see the module docstring); any other name raises."""
+        if strategy not in ("auto", "join"):
+            raise ValueError(f"unknown strategy {strategy!r}: expected 'auto' or 'join'")
+        return self._correct(pages, per_token=False)
+
+    def tokens(self, pages: DataFrame) -> DataFrame:
         """The full token table — the engine's relational data model
         (FIXTURES.md §6; mirrors the reference DDL with kbest as an
         ordered array column instead of a joined table), one row per
-        token and one all-null placeholder row per token-less page.
+        token and one all-null placeholder row per token-less page."""
+        return self._correct(pages, per_token=True)
 
-        ``salt > 0`` spreads each word's rows over up to ``salt`` word
-        shuffle partitions (a hot word is then beamed once per partition
-        that holds it); the table is the same for every ``salt``."""
-        return self._correct_by_url(self._tokens_kbest(pages, salt), per_token=True)
-
-    def _tokens_kbest(self, pages: DataFrame, salt: int) -> DataFrame:
-        """Passes 1 and 2: ``tokens_raw``, then the word shuffle and the
-        beam pass, which attaches each row's k-best (null on hyphen tails
-        and placeholder rows)."""
-        b_res = self._b_res
-        k = self.k
-
-        def attach_kbest(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            res: Resources = b_res.value
-            in_dict = _InDict(res.dictionary)
-            kbest_map: dict = {}  # this task's words only
-            for batch in batches:
-                slot: dict = {}  # the batch's distinct words -> position
-                rows = [
-                    None if w is None else slot.setdefault(w, len(slot))
-                    for w in _pylist(batch.column("cons_word"))
-                ]
-                fresh = [w for w in slot if w not in kbest_map]
-                if fresh:
-                    kbest_map.update(zip(fresh, kbest_for_words(res.params, fresh, k)))
-                cands, probs, offsets = [], [], [0]
-                for w in slot:
-                    for c, p in kbest_map[w]:
-                        cands.append(c)
-                        probs.append(p)
-                    offsets.append(len(cands))
-                take = pa.array(rows, pa.int32())
-                columns = [a.take(take) for a in _kbest_lists(cands, probs, offsets, in_dict)]
-                yield pa.RecordBatch.from_arrays(batch.columns + columns, schema=_KBEST_TOKENS_ARROW)
-
-        raw = self.tokens_raw(pages)
-        # co-locate each word's rows, so that a word is beamed by one task;
-        # the result does not depend on where a row lands
-        key = [F.coalesce("cons_word", "url")]
-        if salt > 0:
-            key.append(F.pmod(F.xxhash64("url", "idx"), F.lit(salt)))
-        return raw.repartition(self.parallelism, *key).mapInArrow(attach_kbest, schema=KBEST_TOKENS_SCHEMA)
-
-    def _correct_by_url(self, tokens: DataFrame, per_token: bool) -> DataFrame:
-        """Pass 3: each url's rows in ``idx`` order rebuild its ``Tok``
-        list, and ``correct_tokens`` (the kernel ``auto`` and the oracle
-        run) corrects it. Emits the token table (``per_token``) or one
-        ``CORRECTED_SCHEMA`` row per url."""
-        b_res = self._b_res
-        k = self.k
-        schema = TOKEN_TABLE_SCHEMA if per_token else CORRECTED_SCHEMA
-        arrow_schema = to_arrow_schema(schema)
-
-        def correct(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            res: Resources = b_res.value
-            in_dict = _InDict(res.dictionary)
-            kbest_map: dict = {}  # this task's words only
-            decision_memo: dict = {}
-            for table in _whole_urls(batches):
-                url, original, gold0, words = (
-                    _pylist(table.column(c)) for c in ("url", "original", "gold0", "cons_word")
-                )
-                idx = _pylist(table.column("idx").fill_null(-1))
-                head = _pylist(table.column("head").fill_null(False))
-                # the k-best of each word new to the task, from its first row;
-                # its candidates' flags answer the kernel's dictionary probes
-                first: dict = {}
-                for i, w in enumerate(words):
-                    if w is not None and w not in kbest_map and w not in first:
-                        first[w] = i
-                if first:
-                    kbests, cands, flags = _rows_kbest(table, list(first.values()))
-                    kbest_map.update(zip(first, kbests))
-                    in_dict.update(zip(cands, flags))
-                docs: List[Tuple[str, List[Tok]]] = []
-                row_toks: List[Optional[Tok]] = []
-                for i, u in enumerate(url):
-                    if not docs or docs[-1][0] != u:
-                        docs.append((u, []))
-                    t = None
-                    if original[i] is not None:  # else a token-less page's placeholder
-                        t = _restored_tok(idx[i], original[i], gold0[i], head[i])
-                        docs[-1][1].append(t)
-                    row_toks.append(t)
-                out = []
-                for u, toks in docs:
-                    r = correct_tokens(
-                        toks, kbest_map.__getitem__, in_dict, res.settings, k, decision_memo
-                    )
-                    r["url"] = u
-                    out.append(r)
-                if per_token:
-                    decided = zip(*(_token_decision(t) for t in row_toks))
-                    added = [pa.array(c, f.type) for c, f in zip(decided, list(arrow_schema)[-5:])]
-                    yield from pa.Table.from_arrays(table.columns + added, schema=arrow_schema).to_batches()
-                else:  # the schema picks its columns from each record
-                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-        return (
-            tokens.repartition(self.parallelism, "url")
-            .sortWithinPartitions("url", "idx")
-            .mapInArrow(correct, schema=schema)
-        )
-
-    # -- corrected documents ----------------------------------------------------
-
-    def corrected(self, pages: DataFrame, strategy: str = "auto") -> DataFrame:
-        """Corrected documents, one row per url. ``auto`` is the one-pass
-        plan, ``join`` the token plan (see the module docstring)."""
-        if strategy == "join":
-            return self._correct_by_url(self._tokens_kbest(pages, 0), per_token=False)
-        if strategy != "auto":
-            raise ValueError(f"unknown strategy {strategy!r}: expected 'auto' or 'join'")
+    def _correct(self, pages: DataFrame, per_token: bool) -> DataFrame:
+        """The one plan: a ``mapInPandas`` that corrects each page with
+        ``correct_tokens`` and emits its ``CORRECTED_SCHEMA`` row, or its
+        ``TOKEN_TABLE_SCHEMA`` rows when ``per_token``."""
         b_res = self._b_res
         k = self.k
         dehyph = self.dehyphenate
         texts_of = _make_texts_of(self.use_html)
-        columns = [f.name for f in CORRECTED_SCHEMA.fields]
+        schema = TOKEN_TABLE_SCHEMA if per_token else CORRECTED_SCHEMA
+        columns = [f.name for f in schema.fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             res: Resources = b_res.value
@@ -458,15 +245,19 @@ class CorrectionPipeline:
                     kbest_map.update(zip(fresh, kbest_for_words(res.params, list(fresh), k)))
                 out = []
                 for url, toks in zip(pdf["url"], docs):
+                    gold0 = [t.gold for t in toks] if per_token else None
                     r = correct_tokens(
                         toks, kbest_map.__getitem__, in_dict, res.settings, k, decision_memo
                     )
-                    r["url"] = url
-                    out.append(r)
+                    if per_token:
+                        out.extend(_token_rows(url, toks, gold0, in_dict))
+                    else:
+                        r["url"] = url
+                        out.append(r)
                 yield pd.DataFrame(out, columns=columns)
 
         source = "html" if self.use_html else "text"
-        return pages.select("url", source).mapInPandas(run, schema=CORRECTED_SCHEMA)
+        return pages.select("url", source).mapInPandas(run, schema=schema)
 
     def vocab(self, pages: DataFrame) -> DataFrame:
         """Distinct consolidated words of the corpus — the k-best input.
@@ -489,7 +280,7 @@ class CorrectionPipeline:
                 seen |= fresh
                 yield pd.DataFrame({"cons_word": sorted(fresh)})
 
-        return pages.select(*self._page_cols()).mapInPandas(
+        return pages.select("html" if self.use_html else "text").mapInPandas(
             run, schema=T.StructType([T.StructField("cons_word", T.StringType(), False)])
         ).distinct()
 
@@ -561,21 +352,6 @@ def _make_texts_of(use_html: bool):
     return lambda pdf: pdf["text"]
 
 
-def _tokenize_rows_nodehyph(text: Optional[str]):
-    toks = tokenize_doc(text or "")
-    return [
-        {
-            "idx": t.index,
-            "original": t.original,
-            "gold0": t.gold,
-            "head": False,
-            "tail": False,
-            "cons_word": t.original,
-        }
-        for t in toks
-    ]
-
-
 class _InDict(dict):
     """A ``Dictionary``'s membership answers, memoized per word:
     ``word in memo`` and ``memo[word]`` ask the dictionary once per word
@@ -612,50 +388,10 @@ def _kbest_lists(cands, probs, offsets, in_dict: _InDict) -> List[pa.Array]:
     ]
 
 
-def _pylist(values) -> list:
-    """``values.to_pylist()`` for a flat column without integer nulls,
-    through numpy: an order of magnitude faster."""
-    return values.to_numpy(zero_copy_only=False).tolist()
-
-
-def _rows_kbest(table: pa.Table, rows: List[int]):
-    """The k-best lists on ``rows`` of a beam-pass table, plus the flat
-    candidates and their ``cand_in_dict`` flags."""
-    take = pa.array(rows, pa.int64())
-    kbest = table.column("kbest").take(take).combine_chunks()
-    cands, probs = (_pylist(a) for a in kbest.flatten().flatten())
-    flags = _pylist(table.column("cand_in_dict").take(take).combine_chunks().flatten())
-    pairs = list(zip(cands, probs))
-    kbests, lo = [], 0
-    for n in _pylist(kbest.value_lengths()):
-        kbests.append(pairs[lo : lo + n])
-        lo += n
-    return kbests, cands, flags
-
-
-def _whole_urls(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
-    """Regroup url-sorted batches so that no url's rows are split between
-    two yielded tables (a document may span Arrow batches)."""
-    held: List[pa.RecordBatch] = []
-    for batch in batches:
-        urls = _pylist(batch.column("url"))
-        if not urls:
-            continue
-        cut = len(urls)  # first row of the batch's last url
-        while cut and urls[cut - 1] == urls[-1]:
-            cut -= 1
-        if cut:
-            held.append(batch.slice(0, cut))
-            yield pa.Table.from_batches(held)
-            held = []
-        held.append(batch.slice(cut))
-    if held:
-        yield pa.Table.from_batches(held)
-
-
 def _restored_tok(index: int, original: str, gold: Optional[str], head: bool) -> Tok:
-    """A token as ``tokens_raw`` left it: tokenized and dehyphenated,
-    without the constructor's punctuation probe (``gold`` carries it)."""
+    """A token-table row's token before correction: tokenized and
+    dehyphenated, without the constructor's punctuation probe (``gold``
+    carries it)."""
     t = Tok.__new__(Tok)
     t.index = index
     t.original = original
@@ -670,16 +406,31 @@ def _restored_tok(index: int, original: str, gold: Optional[str], head: bool) ->
     return t
 
 
-def _token_decision(t: Optional[Tok]) -> tuple:
-    """A corrected token's ``(bin, heuristic, sel_rank, selection, gold)``
-    token-table columns; all null for a placeholder row."""
-    if t is None:
-        return (None,) * 5
-    h, sel = t.heuristic, t.selection
-    if h in ("kbest", "kdict"):
-        sel_rank, selection = sel, str(sel)
-    elif h == "annotator":
-        sel_rank, selection = None, json.dumps(sel)
-    else:
-        sel_rank, selection = None, sel
-    return t.bin, h, sel_rank, selection, t.gold
+def _token_rows(url: str, toks: List[Tok], gold0: List[Optional[str]], in_dict: _InDict) -> list:
+    """One corrected document's token-table rows in ``TOKEN_TABLE_SCHEMA``
+    order; ``gold0`` holds each token's gold before correction. A hyphen
+    tail (a token ``consolidated`` does not yield) has no consolidated
+    word and null k-best columns. A token-less page has one placeholder
+    row."""
+    if not toks:
+        return [(url,) + (None,) * 6 + (False,) + (None,) * 7]
+    merged = {t.index: w for w, _g, t in consolidated(toks)}
+    rows = []
+    for t, g0 in zip(toks, gold0):
+        word = merged.get(t.index)
+        kbest = flags = None
+        if word is not None:
+            kbest = t.kbest
+            flags = [in_dict[c] for c, _p in kbest]
+        h, sel = t.heuristic, t.selection
+        if h in ("kbest", "kdict"):
+            sel_rank, selection = sel, str(sel)
+        elif h == "annotator":
+            sel_rank, selection = None, json.dumps(sel)
+        else:
+            sel_rank, selection = None, sel
+        rows.append(
+            (url, t.index, t.original, g0, t.is_hyphenated, word is None, word, t.is_discarded)
+            + (kbest, flags, t.bin, h, sel_rank, selection, t.gold)
+        )
+    return rows

@@ -169,47 +169,6 @@ def term_index(
     )
 
 
-class KbestStore:
-    """Cross-run persistence of the distinct-word k-best table — the
-    durable form of the reference's ``PickledLRUCache`` (§2.13,
-    _cache.py:10-47): new runs anti-join their vocabulary against the
-    store and compute the beam only for unseen words.
-
-    The store is append-only, so a crashed or concurrent run can leave
-    the SAME ``cons_word`` in two files. Reads therefore dedup on the
-    key (``dropDuplicates("cons_word")``): the beam is deterministic per
-    word, so duplicate rows are value-identical and any survivor is
-    correct — without the guard, a join of the store onto a token table
-    would silently DUPLICATE every token of a twice-appended word
-    (pinned by test_kbest_store_double_append)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def existing(self) -> Optional[DataFrame]:
-        try:
-            return self._read()
-        except Exception:
-            return None
-
-    def _read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path).dropDuplicates(["cons_word"])
-
-    def kbest_table(self, pipeline, vocab: DataFrame) -> DataFrame:
-        """Resolve k-best for ``vocab`` using the store; computes and
-        appends only the unseen words."""
-        old = self.existing()
-        if old is None:
-            fresh = pipeline.kbest_table(vocab)
-            fresh.write.mode("append").parquet(self.path)
-        else:
-            unseen = vocab.join(old, on="cons_word", how="left_anti")
-            fresh = pipeline.kbest_table(unseen)
-            fresh.write.mode("append").parquet(self.path)
-        return self._read().join(vocab, on="cons_word", how="left_semi")
-
-
 def apply_memoized_corrections(tokens: DataFrame, memo: dict) -> DataFrame:
     """J7: ``memoized_corrections`` map-side lookup (correcter.py:130-131)
     — resolve annotator-deferred tokens whose original has a known

@@ -1,9 +1,12 @@
 """CLI surface (python -m correctocr_spark)."""
 
+import io
 import json
 import os
 import subprocess
 import sys
+import traceback
+from contextlib import redirect_stderr, redirect_stdout
 
 import pytest
 
@@ -12,12 +15,45 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_cli(*args):
+def run_cli_process(*args):
+    """``python -m correctocr_spark`` in a fresh process on its own session."""
     return subprocess.run(
         [sys.executable, "-m", "correctocr_spark", "--cores", "4", *args],
         capture_output=True, text=True, cwd=REPO, timeout=400,
         env={**os.environ, "PYTHONPATH": REPO},
     )
+
+
+def run_cli(*args):
+    """Run the CLI's ``main()`` in this process, on the ``spark`` fixture's
+    session, and return its exit code and output as ``run_cli_process``
+    does.
+
+    ``--master from-submit`` makes ``main()`` take the active session and
+    leave it running, so a command costs its own jobs and not a JVM and
+    session start (12-15 s on 4 vCPUs). Callers must hold the ``spark``
+    fixture. ``test_cli_prepare_and_resume`` keeps the process boundary.
+    """
+    from pyspark.sql import SparkSession
+
+    from correctocr_spark.__main__ import main
+
+    assert SparkSession.getActiveSession() is not None, "run_cli needs the spark fixture"
+    out, err = io.StringIO(), io.StringIO()
+    with redirect_stdout(out), redirect_stderr(err):
+        try:
+            code = main(["--master", "from-submit", *args])
+        except SystemExit as e:  # the interpreter's own exit-code rules
+            code = e.code
+            if code is None:
+                code = 0
+            elif not isinstance(code, int):
+                print(code, file=sys.stderr)
+                code = 1
+        except Exception:
+            traceback.print_exc()
+            code = 1
+    return subprocess.CompletedProcess(list(args), code, out.getvalue(), err.getvalue())
 
 
 @pytest.mark.slow
@@ -28,12 +64,12 @@ def test_cli_prepare_and_resume(tmp_path, spark):
     synth_pages(spark, 30, seed=71).write.parquet(inp)
 
     out = str(tmp_path / "out")
-    r = run_cli("prepare", "--input", inp, "--output", out, "--settings", "aggressive")
+    r = run_cli_process("prepare", "--input", inp, "--output", out, "--settings", "aggressive")
     assert r.returncode == 0, r.stderr[-2000:]
     assert "prepared: 30 documents" in r.stdout
 
     # resume: nothing pending, still idempotent
-    r = run_cli("prepare", "--input", inp, "--output", out)
+    r = run_cli_process("prepare", "--input", inp, "--output", out)
     assert r.returncode == 0, r.stderr[-2000:]
     assert "prepared: 30 documents" in r.stdout
 
@@ -51,10 +87,7 @@ def test_cli_dictionary(tmp_path, spark):
 
 
 @pytest.mark.slow
-def test_cli_prepare_pdf_format(tmp_path):
-    # NOTE: CLI tests must go through run_cli (a subprocess): in-process
-    # main() would getOrCreate the session-scoped fixture session and
-    # stop() it in its finally, killing every later test.
+def test_cli_prepare_pdf_format(tmp_path, spark):
     import glob
     import shutil
 
@@ -72,7 +105,7 @@ def test_cli_prepare_pdf_format(tmp_path):
 
 
 @pytest.mark.slow
-def test_cli_dictionary_corpus_dir(tmp_path):
+def test_cli_dictionary_corpus_dir(tmp_path, spark):
     root = tmp_path / "corpus"
     (root / "g1").mkdir(parents=True)
     (root / "g1" / "a.txt").write_text("Zebra apple apple banana")
@@ -542,7 +575,7 @@ def test_cli_skew_report(tmp_path, spark):
 
 
 @pytest.mark.slow
-def test_cli_plan_audit():
+def test_cli_plan_audit(spark):
     # registry listing marks oracled vs rows-only
     r = run_cli("plan", "list")
     assert r.returncode == 0, r.stderr[-2000:]

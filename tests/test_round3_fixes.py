@@ -5,8 +5,6 @@
 - connected components: pointer jumping (O(log diameter) rounds — a
   100-node chain converges inside the default budget) and a RAISE on
   non-convergence instead of silently wrong labels
-- KbestStore survives duplicate appends (dedup-on-read; no silent token
-  duplication downstream)
 - embedding_dup_pairs_bucketed no longer runs a driver-side `.first()`
   dim probe (planes are required)
 - streaming LSH star-pairing: connected components over the star pair
@@ -110,39 +108,6 @@ def test_connected_components_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iterations=2)
-
-
-# ---------------------------------------------------------------------------
-# KbestStore duplicate appends
-# ---------------------------------------------------------------------------
-
-
-def test_kbest_store_double_append(spark, tmp_path):
-    """A crashed/concurrent run re-appending the same vocabulary must NOT
-    duplicate keys: the store's read returns each word once."""
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.sources import KbestStore
-    from correctocr_spark.spark.synth import synth_pages
-
-    pipeline = CorrectionPipeline(spark, use_html=True)
-    store = KbestStore(spark, str(tmp_path / "kb"))
-    pages = synth_pages(spark, 8, seed=43).cache()
-    vocab = pipeline.vocab(pages).cache()
-
-    kb1 = store.kbest_table(pipeline, vocab)
-    n_vocab = vocab.count()
-    assert kb1.count() == n_vocab
-
-    # simulate the crash/concurrency hazard: the same vocabulary's rows
-    # land in the store a second time
-    pipeline.kbest_table(vocab).write.mode("append").parquet(str(tmp_path / "kb"))
-    raw = spark.read.parquet(str(tmp_path / "kb"))
-    assert raw.count() == 2 * n_vocab  # the hazard is real...
-
-    kb2 = store.kbest_table(pipeline, vocab)
-    assert kb2.count() == n_vocab  # ...and the read-side guard absorbs it
-    pages.unpersist()
-    vocab.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -16,22 +16,11 @@
 """
 
 import hashlib
-import os
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def run_cli(*args):
-    return subprocess.run(
-        [sys.executable, "-m", "correctocr_spark", "--cores", "4", *args],
-        capture_output=True, text=True, cwd=REPO, timeout=400,
-        env={**os.environ, "PYTHONPATH": REPO},
-    )
+from tests.test_cli import run_cli
 
 STOPWORDS = ["the", "of", "and", "to", "in", "is", "was", "for", "that", "with"]
 

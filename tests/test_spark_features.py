@@ -201,31 +201,6 @@ def test_encoding_detection():
     assert extract_text(html_cp1252) == "café crème"
 
 
-def test_kbest_store_incremental(spark, pipeline, tmp_path):
-    from correctocr_spark.spark.sources import KbestStore
-    from correctocr_spark.spark.synth import synth_pages
-
-    store = KbestStore(spark, str(tmp_path / "kb"))
-    pages1 = synth_pages(spark, 10, seed=41).cache()
-    v1 = pipeline.vocab(pages1).cache()
-    kb1 = store.kbest_table(pipeline, v1)
-    assert kb1.count() == v1.count()
-
-    # second run: overlapping vocab; store computes only unseen words
-    pages2 = synth_pages(spark, 10, seed=42, start=500).cache()
-    v2 = pipeline.vocab(pages2).cache()
-    kb2 = store.kbest_table(pipeline, v2)
-    assert kb2.count() == v2.count()
-    stored = spark.read.parquet(str(tmp_path / "kb"))
-    union_vocab = v1.union(v2).distinct().count()
-    assert stored.count() == union_vocab  # no duplicate computation
-
-    # stored kbest matches direct computation bitwise
-    direct = {r["cons_word"]: r["kbest"] for r in pipeline.kbest_table(v2).collect()}
-    via_store = {r["cons_word"]: r["kbest"] for r in kb2.collect()}
-    assert direct == via_store
-
-
 def test_term_index_runs(spark):
     from correctocr_spark.spark.sources import term_index
 

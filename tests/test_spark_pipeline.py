@@ -219,39 +219,43 @@ def test_one_pass_across_tasks_and_batches(spark, resources, use_html):
 
 @pytest.mark.parametrize("use_html", [False, True])
 def test_join_plan_across_tasks_and_batches(spark, resources, use_html):
-    """The token plan over 3 tasks and Arrow batches of 7 rows (so urls
-    span batches) equals the one-pass plan and the scalar-beam kernel url
-    by url, on every output column."""
+    """The token table over 3 tasks and Arrow batches of 7 rows,
+    reassembled by ``finalize`` (the path of ``report`` and
+    ``correct --apply``), equals the scalar-beam kernel url by url, on
+    every output column."""
     from correctocr_spark.spark.pipeline import CORRECTED_SCHEMA, CorrectionPipeline
 
     res, rows, pages = hard_pages(spark, resources, use_html)
     with arrow_batches_of(spark, 7):
         pipe = CorrectionPipeline(spark, res, use_html=use_html, parallelism=3)
-        join = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="join").collect()}
-        auto = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="auto").collect()}
+        got = {r["url"]: r.asDict() for r in pipe.finalize(pipe.tokens(pages)).collect()}
 
-    assert join == auto
     columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
-    assert len(join) == len(rows)
+    assert len(got) == len(rows)
     for url, source in page_sources(rows, use_html):
         exp = correct_document(source, res.params, res.dictionary, res.settings, k=res.k)
-        assert {c: join[url][c] for c in columns} == {c: exp[c] for c in columns}, url
+        assert {c: got[url][c] for c in columns} == {c: exp[c] for c in columns}, url
 
 
 def test_token_table_equals_kernel(spark, resources):
-    """Every token-table row holds the kernel's k-best, candidate
-    dictionary flags, bin, heuristic, selection and gold: one row per
-    token, null k-best on hyphen tails, one all-null row per token-less
-    page."""
-    from correctocr_spark.kernels.pipeline import consolidated
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    """Every token-table row holds the kernel's tokenized and
+    dehyphenated token (original, gold0, head, tail, consolidated word),
+    its k-best, candidate dictionary flags, bin, heuristic, selection and
+    gold: one row per token, null k-best on hyphen tails, one all-null
+    row with ``discarded=False`` per token-less page."""
+    from correctocr_spark.kernels.pipeline import consolidated, dehyphenate, tokenize_doc
+    from correctocr_spark.spark.pipeline import TOKEN_TABLE_SCHEMA, CorrectionPipeline
 
     res, rows, pages = hard_pages(spark, resources, use_html=False)
     with arrow_batches_of(spark, 7):
         pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=3)
         table = pipe.tokens(pages).collect()
 
-    columns = ["kbest", "cand_in_dict", "bin", "heuristic", "sel_rank", "selection", "gold"]
+    columns = [f.name for f in TOKEN_TABLE_SCHEMA.fields if f.name not in ("url", "idx")]
+    assert set(columns) == {
+        "original", "gold0", "head", "tail", "cons_word", "discarded",
+        "kbest", "cand_in_dict", "bin", "heuristic", "sel_rank", "selection", "gold",
+    }
     got = {}
     for r in table:
         row = {c: r[c] for c in columns}
@@ -263,13 +267,23 @@ def test_token_table_equals_kernel(spark, resources):
     for url, text in page_sources(rows, use_html=False):
         toks = correct_document(text, res.params, res.dictionary, res.settings, k=res.k)["tokens"]
         if not toks:
-            expected[(url, None)] = dict.fromkeys(columns)
-        beamed = {id(t) for _w, _g, t in consolidated(toks)}  # not hyphen tails
-        for t in toks:
+            expected[(url, None)] = dict(dict.fromkeys(columns), discarded=False)
+        # the state before correction: tokenized and dehyphenated
+        before = tokenize_doc(text)
+        dehyphenate(before)
+        merged = {t.index: w for w, _g, t in consolidated(before)}  # not hyphen tails
+        for t, t0 in zip(toks, before):
+            beamed = t.index in merged
             sel = t.selection
             expected[(url, t.index)] = {
-                "kbest": t.kbest if id(t) in beamed else None,
-                "cand_in_dict": [c in res.dictionary for c, _p in t.kbest] if id(t) in beamed else None,
+                "original": t0.original,
+                "gold0": t0.gold,
+                "head": t0.is_hyphenated,
+                "tail": not beamed,
+                "cons_word": merged.get(t0.index),
+                "discarded": False,
+                "kbest": t.kbest if beamed else None,
+                "cand_in_dict": [c in res.dictionary for c, _p in t.kbest] if beamed else None,
                 "bin": t.bin,
                 "heuristic": t.heuristic,
                 "sel_rank": sel if t.heuristic in ("kbest", "kdict") else None,
@@ -283,9 +297,8 @@ def test_token_table_equals_kernel(spark, resources):
 
 
 def test_hot_word_join_and_salting(spark, resources):
-    """One word is a third of all tokens: the token plan equals the
-    one-pass plan on every column, and salting the word shuffle leaves the
-    token table and its reassembly unchanged."""
+    """One word is a third of all tokens: both strategy names give the
+    same rows on every column."""
     import numpy as np
 
     from correctocr_spark.spark.pipeline import CorrectionPipeline
@@ -308,14 +321,6 @@ def test_hot_word_join_and_salting(spark, resources):
     join = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="join").collect()}
     auto = {r["url"]: r.asDict() for r in pipe.corrected(pages, strategy="auto").collect()}
     assert len(join) == len(texts) and join == auto
-
-    tables = [pipe.tokens(pages, salt=salt) for salt in (0, 4)]
-    plain, salted = (
-        {(r["url"], r["idx"]): r.asDict(recursive=True) for r in t.collect()} for t in tables
-    )
-    assert plain == salted
-    plain, salted = ({r["url"]: r.asDict() for r in pipe.finalize(t).collect()} for t in tables)
-    assert plain == salted == join
     pages.unpersist()
 
 
@@ -411,19 +416,6 @@ def test_audited_resume(spark, pipeline, tmp_path):
     assert {"pkey", "bin", "token_count", "run_id"} <= set(bins.columns)
     total_binned = sum(r["token_count"] for r in bins.collect())
     assert total_binned > 0
-
-
-def test_salted_join_equivalent(spark):
-    from correctocr_spark.spark.pipeline import CorrectionPipeline
-    from correctocr_spark.spark.synth import synth_pages
-
-    pipe = CorrectionPipeline(spark, use_html=False)
-    pages = synth_pages(spark, 30, seed=72).cache()
-    plain = pipe.finalize(pipe.tokens(pages, salt=0))
-    salted = pipe.finalize(pipe.tokens(pages, salt=4))
-    a = {r["url"]: tuple(r) for r in plain.collect()}
-    b = {r["url"]: tuple(r) for r in salted.collect()}
-    assert a == b
 
 
 def test_join_strategy_short_kbest_matches_kernel(spark):
