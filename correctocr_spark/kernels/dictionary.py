@@ -14,9 +14,15 @@ from __future__ import annotations
 import string
 from typing import Iterable, Optional, Set
 
+import regex
+
 from .textutils import letterRE
 
 _STRIP_CHARS = string.punctuation + string.whitespace + "»«“”„›‹"
+
+# matches iff a word has two letters or more; the search stops at the
+# second letter instead of listing them all
+_TWO_LETTERS_RE = regex.compile(r"\p{L}[^\p{L}]*\p{L}")
 
 
 def clean_word(word: str) -> str:
@@ -44,7 +50,7 @@ class Dictionary:
 
     def __contains__(self, word: str) -> bool:
         word = clean_word(word)
-        if word == "" or len(letterRE.findall(word)) <= 1:
+        if _TWO_LETTERS_RE.search(word) is None:
             return True
         if self.ignore_case:
             word = word.lower()

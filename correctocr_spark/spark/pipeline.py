@@ -36,6 +36,19 @@ The task-local map is the reference's per-process LRU cache
   on partition size. Hot words are beamed once per task, as the
   reference beams them once per process; there is no shuffle key for a
   hot word to skew.
+
+Every task also pays a fixed cost to enter its Python worker. Before
+CPython 3.13 most of it was ``importlib.invalidate_caches()``, which a
+reused worker calls at the start of every task: it re-parses the central
+directories of ``pyspark.zip`` and of the spark-core jar on the worker's
+path, 17 reads and about 0.2 s of worker CPU per task. ``run`` first
+calls ``session.keep_zip_directories``, after which a worker re-reads an
+archive only when it changed. In an identity ``mapInPandas`` over 600
+pages in 4 tasks, from each worker's third task on, no zip directory is
+read and the worker CPU between tasks fell from 0.16-0.30 s to
+0.04-0.05 s (4 vCPUs, CPython 3.11). In perfbench (seed 1, 10
+alternating pairs in one window) the job went from 752 to 1,214 doc/s on
+``text_longtail`` and from 1,907 to 2,823 doc/s on ``html_zipf``.
 """
 
 from __future__ import annotations
@@ -65,6 +78,7 @@ from ..kernels.pipeline import (
 )
 from ..kernels.extract import extract_text
 from .resources import Resources, default_resources
+from .session import keep_zip_directories
 
 KBEST_STRUCT = T.StructType(
     [
@@ -135,19 +149,12 @@ class CorrectionPipeline:
         resources: Optional[Resources] = None,
         dehyphenate: bool = True,
         use_html: bool = True,
-        parallelism: int = 0,
     ):
         self.spark = spark
         self.resources = resources or default_resources()
         self.k = self.resources.k
         self.use_html = use_html
         self.dehyphenate = dehyphenate
-        # CPU-dense UDF stages must NOT be partitioned by shuffle bytes:
-        # AQE's coalescing targets ~64MB/partition, which serializes a
-        # stage whose cost is compute-per-row (the beam runs ~10^4 flops
-        # per word on a few dozen bytes). An explicit repartition pins the
-        # parallelism of kbest_table's exchange.
-        self.parallelism = parallelism or spark.sparkContext.defaultParallelism * 2
         self._b_res = spark.sparkContext.broadcast(self.resources)
 
     # -- stage 1: extraction ----------------------------------------------
@@ -190,7 +197,9 @@ class CorrectionPipeline:
             tokens.where(F.col("cons_word").isNotNull())
             .select("cons_word")
             .distinct()
-            .repartition(self.parallelism)  # compute-dense: see __init__
+            # the beam's cost is per word, not per byte: pin the stage's
+            # parallelism so AQE cannot coalesce it by shuffle bytes
+            .repartition(2 * self.spark.sparkContext.defaultParallelism)
         )
         return words.select(
             "cons_word", kbest_udf(F.col("cons_word")).alias("kb")
@@ -226,6 +235,7 @@ class CorrectionPipeline:
         columns = [f.name for f in schema.fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            keep_zip_directories()  # this worker's later tasks skip the zip re-reads
             res: Resources = b_res.value
             in_dict = _InDict(res.dictionary)
             kbest_map: dict = {}  # this task's words only

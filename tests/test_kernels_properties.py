@@ -104,6 +104,23 @@ def test_clean_word_idempotent(word):
     assert clean_word(clean_word(word)) == clean_word(word)
 
 
+# letters of several scripts (Latin, Greek, Cyrillic, Arabic, CJK,
+# combining marks), digits, soft and hard hyphens, quotes, punctuation
+_WORD = st.text(alphabet=list("aZæßΩж漢ا́١٢09-\xad'\"«»“„.,;!? \t"), max_size=12)
+
+
+@given(_WORD)
+@settings(max_examples=500, deadline=None)
+def test_at_most_one_letter_is_in_any_dictionary(word):
+    """A word whose cleaned form has at most one letter is in the
+    dictionary by fiat (``dictionary.py:49-58``): the two-letter search
+    agrees with counting every letter, and nothing else is in an empty
+    dictionary."""
+    from correctocr_spark.kernels.textutils import letterRE
+
+    assert (word in Dictionary()) == (len(letterRE.findall(clean_word(word))) <= 1)
+
+
 @given(st.text(max_size=20), st.lists(st.tuples(st.text(max_size=10), st.floats(0, 1)), min_size=1, max_size=4))
 @settings(max_examples=300, deadline=None)
 def test_bin_always_assigned(word, kbest):

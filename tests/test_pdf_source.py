@@ -77,7 +77,7 @@ def test_pdf_feeds_correction_pipeline(spark, tmp_path):
     d.mkdir()
     shutil.copy(REF_PDF, d / "doc1.pdf")
     pages = pdf_page_texts(pdf_tokens(read_pdf_files(spark, str(d))))
-    pipe = CorrectionPipeline(spark, use_html=False, parallelism=2)
+    pipe = CorrectionPipeline(spark, use_html=False)
     out = pipe.corrected(pages, strategy="join").collect()
     assert len(out) == 1
     assert out[0]["hyphenated_count"] == 1  # 'ti-' head
@@ -232,6 +232,6 @@ def test_hocr_tokens_to_pipeline(spark, tmp_path):
         "Once", "upen", "a", "ti-", "me.",
     ]
     pages = pdf_page_texts(toks)
-    pipe = CorrectionPipeline(spark, use_html=False, parallelism=2)
+    pipe = CorrectionPipeline(spark, use_html=False)
     out = pipe.corrected(pages, strategy="join").collect()
     assert out[0]["merged"] == "Once upen a time."

@@ -49,14 +49,15 @@ def test_topk_window_group_limit(spark):
 
 def test_kbest_stage_parallelism_pinned(spark):
     """The compute-dense beam stage must not be AQE-coalesced to 1
-    partition (cost is per-row compute, not bytes)."""
+    partition (cost is per-row compute, not bytes): it runs in twice the
+    session's default parallelism."""
     from correctocr_spark.spark.pipeline import CorrectionPipeline
     from correctocr_spark.spark.synth import synth_pages
 
-    pipe = CorrectionPipeline(spark, use_html=False, parallelism=8)
+    pipe = CorrectionPipeline(spark, use_html=False)
     pages = synth_pages(spark, 50, seed=3)
     kb = pipe.kbest_table(pipe.vocab(pages))
-    assert kb.rdd.getNumPartitions() == 8
+    assert kb.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
 
 
 def test_pipeline_shuffle_count_join_path(spark):

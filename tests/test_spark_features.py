@@ -245,7 +245,7 @@ def test_train_then_correct_lifecycle(spark):
     params = train_hmm(docs, dictionary=vocab, character_set="abcdefghijklmnopqrstuvwxyz013")
 
     res = Resources(params, Dictionary(set(vocab)), AGGRESSIVE_SETTINGS, k=4)
-    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
+    pipe = CorrectionPipeline(spark, res, use_html=False)
     pages = spark.createDataFrame([("u1", "th3 1in3 gr0up tab13 unseen")], ["url", "text"])
     out = pipe.corrected(pages, strategy="join").collect()[0]
     assert out["corrected"] == "the line group table unseen"

@@ -227,7 +227,7 @@ def test_join_plan_across_tasks_and_batches(spark, resources, use_html):
 
     res, rows, pages = hard_pages(spark, resources, use_html)
     with arrow_batches_of(spark, 7):
-        pipe = CorrectionPipeline(spark, res, use_html=use_html, parallelism=3)
+        pipe = CorrectionPipeline(spark, res, use_html=use_html)
         got = {r["url"]: r.asDict() for r in pipe.finalize(pipe.tokens(pages)).collect()}
 
     columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
@@ -248,7 +248,7 @@ def test_token_table_equals_kernel(spark, resources):
 
     res, rows, pages = hard_pages(spark, resources, use_html=False)
     with arrow_batches_of(spark, 7):
-        pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=3)
+        pipe = CorrectionPipeline(spark, res, use_html=False)
         table = pipe.tokens(pages).collect()
 
     columns = [f.name for f in TOKEN_TABLE_SCHEMA.fields if f.name not in ("url", "idx")]
@@ -434,7 +434,7 @@ def test_join_strategy_short_kbest_matches_kernel(spark):
         [], ["ab", "ba", "ab"],
     )
     res = Resources(params, Dictionary({"ab", "ba"}), DEFAULT_SETTINGS, k=4)
-    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
+    pipe = CorrectionPipeline(spark, res, use_html=False)
     pages = spark.createDataFrame([("u1", "ab ba aa b")], ["url", "text"])
 
     join_rows = {
@@ -465,7 +465,7 @@ def test_join_strategy_kdict_zero_in_dict_raises(spark):
     # bin 5 (k1 != original, nothing in dict) mapped to kdict
     settings = normalize_settings({5: "d", 2: "d"})
     res = Resources(params, Dictionary(set()), settings, k=2)
-    pipe = CorrectionPipeline(spark, res, use_html=False, parallelism=2)
+    pipe = CorrectionPipeline(spark, res, use_html=False)
     pages = spark.createDataFrame([("u1", "zz qq")], ["url", "text"])
     from py4j.protocol import Py4JJavaError
 
