@@ -5846,26 +5846,31 @@ def _sqd_sql(c):
     )
 
 
+def _cq_sqd_cols():
+    """``q0, q1, ...``: each centroid's fold-exact squared distance,
+    computed once per row as a column."""
+    return ", ".join(
+        f"{_sqd_sql(c)} AS q{i}" for i, c in enumerate(_IVF_CENTROIDS)
+    )
+
+
 def _cq_argmin_sql():
-    """Strict-< iterative argmin over the squared distances — the
-    _ivf_sql pattern with the fold-exact expressions."""
-    dists = [_sqd_sql(c) for c in _IVF_CENTROIDS]
-    best_id, best_d = "0", dists[0]
-    for cid in range(1, len(dists)):
+    """Strict-< iterative argmin over the ``q{i}`` columns of
+    :func:`_cq_sqd_cols` — the _ivf_sql pattern; the nesting repeats
+    column names, not distance expressions."""
+    best_id, best_d = "0", "q0"
+    for cid in range(1, len(_IVF_CENTROIDS)):
         best_id = (
-            f"(case when {dists[cid]} < {best_d} then {cid}"
+            f"(case when q{cid} < {best_d} then {cid}"
             f" else {best_id} end)"
         )
-        best_d = f"least({dists[cid]}, {best_d})"
+        best_d = f"least(q{cid}, {best_d})"
     return best_id
 
 
 def _cq_base_sql():
     k = len(_IVF_CENTROIDS)
-    dcols = ", ".join(
-        f"sqrt({_sqd_sql(c)}) AS d{i}"
-        for i, c in enumerate(_IVF_CENTROIDS)
-    )
+    dcols = ", ".join(f"sqrt(q{i}) AS d{i}" for i in range(k))
     a_case = (
         "CASE cid "
         + " ".join(f"WHEN {i} THEN d{i}" for i in range(k))
@@ -5886,9 +5891,10 @@ def _cq_base_sql():
             raw AS (
               SELECT embedding::DOUBLE[] AS e FROM embeddings
             ),
+            q AS (SELECT {_cq_sqd_cols()} FROM raw),
             d AS (
               SELECT {dcols}, ({_cq_argmin_sql()})::INTEGER AS cid
-              FROM raw
+              FROM q
             ),
             ab AS (
               SELECT cid, {a_case} AS a, {b_case} AS b FROM d
@@ -5962,11 +5968,12 @@ def _cluster_purity_sql():
         WITH raw AS (
           SELECT embedding::DOUBLE[] AS e, label FROM embeddings
         ),
+        q AS (SELECT {_cq_sqd_cols()}, label FROM raw),
         asg AS (
           SELECT ({_cq_argmin_sql()})::INTEGER AS c, label AS l
-          FROM raw
+          FROM q
         ),
-        cells AS (
+        cells AS MATERIALIZED (
           SELECT c, l, count(*)::BIGINT AS nn FROM asg GROUP BY 1, 2
         ),
         cm AS (SELECT c, sum(nn)::BIGINT AS nc FROM cells GROUP BY 1),

@@ -25,6 +25,7 @@ from .pipeline import (
     doc_to_string,
     gold_sink_text,
     correct_document,
+    correct_words,
 )
 from .extract import extract_text
 
@@ -52,5 +53,6 @@ __all__ = [
     "doc_to_string",
     "gold_sink_text",
     "correct_document",
+    "correct_words",
     "extract_text",
 ]

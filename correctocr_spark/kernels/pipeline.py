@@ -1,10 +1,16 @@
 """Per-document pipeline kernel with reference-exact semantics.
 
-This is the code that runs inside the vectorized Spark UDFs and, run
-standalone, serves as the differential-test oracle. It reproduces the
-reference's step chain (document.py:166-242):
+It reproduces the reference's step chain (document.py:166-242):
 
     tokenize -> dehyphenate -> kbest -> bin -> autocorrect -> reassemble
+
+in two forms. The ``Tok`` functions (:func:`tokenize_doc` to
+:func:`correct_tokens`, :func:`correct_document`) walk a list of mutable
+token records step by step, as the reference does; they are the
+differential-test oracle. :func:`correct_words` is the code the Spark
+plan runs: one loop over a document's split words, no token records, and
+one memo hit per repeated word; tests check it against
+:func:`correct_document` on every output column.
 
 Reference quirks deliberately carried over (each pinned by a test):
 
@@ -36,7 +42,7 @@ Reference quirks deliberately carried over (each pinned by a test):
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Callable, Dict, Iterable, Iterator, List, Mapping, Optional, Tuple
 
 from .dictionary import Dictionary
 from .heuristics import bin_for_word
@@ -325,3 +331,143 @@ def correct_document(
             return memo[w]
 
     return correct_tokens(tokens, lookup, dictionary, settings, k, decision_memo)
+
+
+# -- the flat kernel: the chain above in one loop over the split words -------
+
+#: ``hyphenRE.search(w) is not None`` for a token ``w`` without whitespace:
+#: the regex's ``\{Pd}`` alternative is the literal ``{Pd}`` (see
+#: ``textutils.hyphenRE``), so a token is a hyphen head iff it ends with
+#: one of these.
+HYPHEN_ENDS = ("-", "\xad", "{Pd}")
+
+
+def merged_words(words: List[str], dehyphenate_doc: bool = True) -> Iterator[str]:
+    """The consolidated words of a split document in order: a hyphen head
+    joined to the token after it (or to ``-`` when it ends the document),
+    every other token as it is; the words :func:`consolidated` yields."""
+    it = iter(words)
+    for w in it:
+        if dehyphenate_doc and w.endswith(HYPHEN_ENDS):
+            w += next(it, "-")
+        yield w
+
+
+def _decide(original: str, merged: str, kbest_of, dictionary, settings) -> tuple:
+    """The outcome of :func:`bin_tokens` and :func:`autocorrect` for a
+    token that is not a hyphen tail, a pure function of ``(original,
+    merged)``::
+
+        (piece, stat, bin, heuristic, selection, gold0, gold, kbest, merged)
+
+    ``piece`` is the token's text on both surfaces (``gold or original``),
+    ``gold0`` its gold before correction, and ``stat`` is ``16 * kind +
+    bin`` with kind 0 uncorrected, 1 corrected by the annotator, 2 by the
+    model (:func:`doc_stats`)."""
+    kbest = kbest_of[merged]
+    heuristic, selection, number = bin_for_word(original, kbest, dictionary, settings)
+    gold0 = gold = original if is_punctuation(original) else None
+    if not gold:
+        if heuristic in ("kbest", "kdict"):
+            gold = _kbest_get(kbest, int(selection))[0]
+        elif heuristic == "original":
+            gold = original
+    kind = 0 if gold is None else 1 if heuristic == "annotator" else 2
+    stat = 16 * kind + number
+    return (gold or original, stat, number, heuristic, selection, gold0, gold, kbest, merged)
+
+
+def _tail_decision(tail: str, head: tuple) -> tuple:
+    """A hyphen tail's decision: the head's (bin, heuristic, selection),
+    gold cleared by dehyphenation and refilled only under 'original' (a
+    tail's own k-best is empty), no stat, k-best or consolidated word."""
+    gold = tail if head[3] == "original" else ""
+    return (tail, None, head[2], head[3], head[4], "", gold, None, None)
+
+
+def _merge_heads(pieces: List[str], heads: List[int]) -> List[str]:
+    """``TokenList.__str__``'s pieces: each head's piece drops its last
+    character and takes the next token's piece (``-`` past the end)."""
+    out: List[str] = []
+    start = 0
+    for p in heads:
+        out += pieces[start:p]
+        start = p + 2
+        out.append(pieces[p][:-1] + (pieces[p + 1] if start <= len(pieces) else "-"))
+    out += pieces[start:]
+    return out
+
+
+def correct_words(
+    words: List[str],
+    kbest_of: Mapping[str, KBest],
+    dictionary,
+    settings: Dict[int, str],
+    dehyphenate_doc: bool = True,
+    decision_memo: Optional[dict] = None,
+) -> Tuple[Dict[str, object], List[tuple]]:
+    """The chain of :func:`correct_document` on one document's split
+    words in one loop, without ``Tok`` records.
+
+    ``kbest_of`` maps every consolidated word (:func:`merged_words`) to
+    its k-best. ``decision_memo``, shared across documents, maps a
+    token's ``(original, merged)`` (a non-head's key is its word alone)
+    to its whole decision and final gold, so a repeated word costs one
+    dict hit; a memo serves one ``dehyphenate_doc`` setting.
+
+    Returns ``(record, decisions)``: the ``CORRECTED_SCHEMA`` columns but
+    ``url`` of :func:`correct_tokens`' record, and one decision tuple per
+    token (see :func:`_decide`; hyphen tails get :func:`_tail_decision`).
+    No step of the chain discards a token, so ``discarded_count`` is 0."""
+    memo = {} if decision_memo is None else decision_memo
+    get = memo.get
+    decisions: List[tuple] = []
+    add = decisions.append
+    heads: List[int] = []
+    tally: Dict[int, int] = {}  # stat -> consolidated tokens, first-seen order
+    it = iter(words)
+    for w in it:
+        d = get(w)  # a hit is a word that is not a hyphen head
+        if d is None:
+            if dehyphenate_doc and w.endswith(HYPHEN_ENDS):
+                tail = next(it, None)
+                key = (w, w + ("-" if tail is None else tail))
+                d = get(key)
+                if d is None:
+                    d = memo[key] = _decide(w, key[1], kbest_of, dictionary, settings)
+                heads.append(len(decisions))
+                add(d)
+                if tail is not None:
+                    add(_tail_decision(tail, d))
+                s = d[1]
+                tally[s] = tally.get(s, 0) + 1
+                continue
+            d = memo[w] = _decide(w, w, kbest_of, dictionary, settings)
+        add(d)
+        s = d[1]
+        tally[s] = tally.get(s, 0) + 1
+
+    kinds = [0, 0, 0]
+    bin_counts: Dict[int, int] = {}
+    for s, c in tally.items():
+        kinds[s >> 4] += c
+        b = s & 15
+        bin_counts[b] = bin_counts.get(b, 0) + c
+    pieces = [d[0] for d in decisions]
+    spaced = " ".join(pieces)
+    token_count = kinds[0] + kinds[1] + kinds[2]
+    corrected_count = kinds[1] + kinds[2]
+    record = {
+        "corrected": spaced.replace("_NEWLINE_N_", "\n").replace(" \n ", "\n"),
+        "merged": " ".join(_merge_heads(pieces, heads)) if heads else spaced,
+        "index_count": len(words),
+        "token_count": token_count,
+        "corrected_count": corrected_count,
+        "corrected_by_annotator_count": kinds[1],
+        "corrected_by_model_count": kinds[2],
+        "hyphenated_count": len(heads),
+        "discarded_count": 0,
+        "done": token_count > 0 and corrected_count == token_count,
+        "bin_counts": bin_counts,
+    }
+    return record, decisions

@@ -9,18 +9,22 @@ and per Arrow batch:
 
 1. extract each page once (``kernels/extract.py``), or take ``text``
    when ``use_html=False``;
-2. tokenize and dehyphenate it once;
-3. beam the batch's consolidated words that the task has not seen yet in
-   one ``kbest_for_words`` call (the prefix-shared batched beam, bitwise
-   equal to the scalar beam) into a task-local word -> k-best map;
-4. run ``kernels.pipeline.correct_tokens`` on those same tokens, with
-   the task's dictionary answers memoized per word (``_InDict``); the
-   differential oracle ``correct_document`` runs the same function.
+2. split it into words once, and collect the batch's consolidated words
+   (``kernels.pipeline.merged_words``) that the task has not seen yet;
+3. beam those words in one ``kbest_for_words`` call (the prefix-shared
+   batched beam, bitwise equal to the scalar beam) into a task-local
+   word -> k-best map;
+4. run the flat kernel ``kernels.pipeline.correct_words`` on each page's
+   words: one loop, no token records, with the task's decisions memoized
+   per ``(original, merged)`` word and its dictionary answers per word
+   (``_InDict``). The ``Tok`` chain ``correct_document`` is the oracle
+   the tests check it against, column by column.
 
-``corrected()`` emits one ``CORRECTED_SCHEMA`` row per url. ``tokens()``
-emits the token table instead: one ``TOKEN_TABLE_SCHEMA`` row per token
-from the same ``correct_tokens`` call (null k-best on hyphen tails) and
-one all-null placeholder row per token-less page.
+``corrected()`` emits the kernel's record as one ``CORRECTED_SCHEMA`` row
+per url. ``tokens()`` emits the token table instead: one
+``TOKEN_TABLE_SCHEMA`` row per token from the kernel's per-token
+decisions (null k-best on hyphen tails) and one all-null placeholder row
+per token-less page.
 
 The task-local map is the reference's per-process LRU cache
 (hmm.py:82-88) scoped to one task:
@@ -67,16 +71,15 @@ from pyspark.sql.pandas.types import to_arrow_type
 from ..kernels.hmm import kbest_arrays, kbest_for_words
 from ..kernels.pipeline import (
     Tok,
-    consolidated,
-    correct_tokens,
-    dehyphenate,
+    correct_words,
     doc_bin_counts,
     doc_stats,
     doc_to_string,
     gold_sink_text,
-    tokenize_doc,
+    merged_words,
 )
 from ..kernels.extract import extract_text
+from ..kernels.textutils import tokenize_text
 from .resources import Resources, default_resources
 from .session import keep_zip_directories
 
@@ -225,7 +228,7 @@ class CorrectionPipeline:
 
     def _correct(self, pages: DataFrame, per_token: bool) -> DataFrame:
         """The one plan: a ``mapInPandas`` that corrects each page with
-        ``correct_tokens`` and emits its ``CORRECTED_SCHEMA`` row, or its
+        ``correct_words`` and emits its ``CORRECTED_SCHEMA`` row, or its
         ``TOKEN_TABLE_SCHEMA`` rows when ``per_token``."""
         b_res = self._b_res
         k = self.k
@@ -241,26 +244,21 @@ class CorrectionPipeline:
             kbest_map: dict = {}  # this task's words only
             decision_memo: dict = {}
             for pdf in batches:
-                docs = []
+                docs = [tokenize_text(text or "") for text in texts_of(pdf)]
                 fresh: dict = {}  # insertion-ordered set
-                for text in texts_of(pdf):
-                    toks = tokenize_doc(text or "")
-                    if dehyph:
-                        dehyphenate(toks)
-                    docs.append(toks)
-                    for word, _gold, _tok in consolidated(toks):
+                for words in docs:
+                    for word in merged_words(words, dehyph):
                         if word not in kbest_map:
                             fresh[word] = None
                 if fresh:
                     kbest_map.update(zip(fresh, kbest_for_words(res.params, list(fresh), k)))
                 out = []
-                for url, toks in zip(pdf["url"], docs):
-                    gold0 = [t.gold for t in toks] if per_token else None
-                    r = correct_tokens(
-                        toks, kbest_map.__getitem__, in_dict, res.settings, k, decision_memo
+                for url, words in zip(pdf["url"], docs):
+                    r, decisions = correct_words(
+                        words, kbest_map, in_dict, res.settings, dehyph, decision_memo
                     )
                     if per_token:
-                        out.extend(_token_rows(url, toks, gold0, in_dict))
+                        out.extend(_token_rows(url, words, decisions, in_dict))
                     else:
                         r["url"] = url
                         out.append(r)
@@ -281,11 +279,7 @@ class CorrectionPipeline:
             for pdf in batches:
                 words = set()
                 for text in texts_of(pdf):
-                    toks = tokenize_doc(text or "")
-                    if dehyph:
-                        dehyphenate(toks)
-                    for original, _gold, _t in consolidated(toks):
-                        words.add(original)
+                    words.update(merged_words(tokenize_text(text or ""), dehyph))
                 fresh = words - seen
                 seen |= fresh
                 yield pd.DataFrame({"cons_word": sorted(fresh)})
@@ -378,8 +372,8 @@ class _InDict(dict):
         hit = self[word] = word in self.dictionary
         return hit
 
-    def __contains__(self, word: str) -> bool:
-        return self[word]
+    # ``word in memo`` is ``memo[word]``, without a Python frame per probe
+    __contains__ = dict.__getitem__
 
 
 def _kbest_lists(cands, probs, offsets, in_dict: _InDict) -> List[pa.Array]:
@@ -416,31 +410,26 @@ def _restored_tok(index: int, original: str, gold: Optional[str], head: bool) ->
     return t
 
 
-def _token_rows(url: str, toks: List[Tok], gold0: List[Optional[str]], in_dict: _InDict) -> list:
+def _token_rows(url: str, words: List[str], decisions: List[tuple], in_dict: _InDict) -> list:
     """One corrected document's token-table rows in ``TOKEN_TABLE_SCHEMA``
-    order; ``gold0`` holds each token's gold before correction. A hyphen
-    tail (a token ``consolidated`` does not yield) has no consolidated
-    word and null k-best columns. A token-less page has one placeholder
-    row."""
-    if not toks:
+    order, from ``correct_words``' per-token decisions. A hyphen tail has
+    no consolidated word and null k-best columns. A token-less page has
+    one placeholder row."""
+    if not words:
         return [(url,) + (None,) * 6 + (False,) + (None,) * 7]
-    merged = {t.index: w for w, _g, t in consolidated(toks)}
     rows = []
-    for t, g0 in zip(toks, gold0):
-        word = merged.get(t.index)
-        kbest = flags = None
-        if word is not None:
-            kbest = t.kbest
-            flags = [in_dict[c] for c, _p in kbest]
-        h, sel = t.heuristic, t.selection
+    for i, (w, d) in enumerate(zip(words, decisions)):
+        _piece, _stat, b, h, sel, gold0, gold, kbest, word = d
+        flags = None if kbest is None else [in_dict[c] for c, _p in kbest]
         if h in ("kbest", "kdict"):
             sel_rank, selection = sel, str(sel)
         elif h == "annotator":
             sel_rank, selection = None, json.dumps(sel)
         else:
             sel_rank, selection = None, sel
+        head = word is not None and word != w
         rows.append(
-            (url, t.index, t.original, g0, t.is_hyphenated, word is None, word, t.is_discarded)
-            + (kbest, flags, t.bin, h, sel_rank, selection, t.gold)
+            (url, i, w, gold0, head, word is None, word, False)
+            + (kbest, flags, b, h, sel_rank, selection, gold)
         )
     return rows

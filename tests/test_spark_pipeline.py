@@ -296,6 +296,50 @@ def test_token_table_equals_kernel(spark, resources):
     assert tails and (("u://one-pass/5", None) in got) and (("u://one-pass/50", None) in got)
 
 
+def test_plan_without_dehyphenation_equals_kernel(spark, resources):
+    """``CorrectionPipeline(dehyphenate=False)``: ``corrected()`` and
+    ``tokens()`` over pages with hyphen heads (3 tasks, Arrow batches of
+    7) equal ``correct_document(..., dehyphenate_doc=False)``, every
+    token its own consolidated word."""
+    from correctocr_spark.spark.pipeline import (
+        CORRECTED_SCHEMA,
+        TOKEN_TABLE_SCHEMA,
+        CorrectionPipeline,
+    )
+    from tests.test_flat_kernel import oracle_token_rows
+
+    res, rows, pages = hard_pages(spark, resources, use_html=False)
+    with arrow_batches_of(spark, 7):
+        pipe = CorrectionPipeline(spark, res, dehyphenate=False, use_html=False)
+        got = {r["url"]: r.asDict() for r in pipe.corrected(pages).collect()}
+        table = pipe.tokens(pages).collect()
+
+    columns = [f.name for f in CORRECTED_SCHEMA.fields if f.name != "url"]
+    names = [f.name for f in TOKEN_TABLE_SCHEMA.fields]
+    got_rows = sorted(
+        (
+            tuple(r[c] for c in names[:8])
+            + (None if r["kbest"] is None else [tuple(c) for c in r["kbest"]],)
+            + tuple(r[c] for c in names[9:])
+            for r in table
+        ),
+        key=lambda row: (row[0], row[1] is not None, row[1]),
+    )
+    expected_rows = []
+    heads = 0
+    for url, text in page_sources(rows, use_html=False):
+        exp = correct_document(
+            text, res.params, res.dictionary, res.settings, k=res.k, dehyphenate_doc=False
+        )
+        assert {c: got[url][c] for c in columns} == {c: exp[c] for c in columns}, url
+        assert exp["hyphenated_count"] == 0
+        heads += sum(w.endswith("-") for w in text.split())
+        expected_rows += oracle_token_rows(url, text, res, res.settings, dehyphenate_doc=False)
+    expected_rows.sort(key=lambda row: (row[0], row[1] is not None, row[1]))
+    assert heads > 0 and len(got) == len(rows)
+    assert got_rows == expected_rows
+
+
 def test_hot_word_join_and_salting(spark, resources):
     """One word is a third of all tokens: both strategy names give the
     same rows on every column."""
