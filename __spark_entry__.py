@@ -2875,8 +2875,8 @@ def q_outlink_profile(spark, sf_dir):
 def q_extraction_blocks(spark, sf_dir):
     """Per-block extraction lineage over deterministic synthetic html
     (nav menu = link-density drop, article body = kept, a short linky
-    trailer = short_linky drop) — rows-only: the block parser is the
-    flagship's HTMLParser kernel, not SQL-expressible; the
+    trailer = short_linky drop) — rows-only: the blocks come from the
+    flagship's extraction kernel, not SQL-expressible; the
     reconstruction invariant vs extract_text is pinned in pytest."""
     _ship(spark)
     from correctocr_spark.spark.warc import extraction_block_audit
@@ -6941,7 +6941,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SQL-expressible; semantics pinned in TestBpe
         "bpe_token_counts": q_bpe_token_counts,
         # per-block extraction lineage — the flagship density
-        # extractor's audit table (HTMLParser kernel in the sanctioned
+        # extractor's audit table (extraction kernel in the sanctioned
         # mapInPandas family; reconstruction == extract_text pinned in
         # TestExtractionBlockAudit)
         "extraction_blocks": q_extraction_blocks,

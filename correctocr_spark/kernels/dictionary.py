@@ -83,6 +83,11 @@ class Dictionary:
 
     @classmethod
     def from_frozen(cls, words: frozenset, ignore_case: bool = False) -> "Dictionary":
+        """A read-only view over ``words``, which it shares instead of
+        copying: membership is answered as by any ``Dictionary``, and
+        ``add`` raises ``AttributeError``. A broadcast word set is viewed
+        once per task, so a copy there would cost O(|dictionary|) each
+        time."""
         d = cls(ignore_case=ignore_case)
-        d.words = set(words)
+        d.words = words
         return d

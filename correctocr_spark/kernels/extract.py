@@ -5,8 +5,8 @@ the target pipeline: Common-Crawl-style pages carry ``html binary`` and
 the extraction stage must yield the candidate text that the CorrectOCR
 stages then correct.
 
-Design: a single-pass, dependency-free DOM-ish scan (stdlib
-``html.parser``) with classic text-density heuristics:
+Design: a page is decoded, cut into text blocks, and the blocks are
+scored with classic text-density heuristics:
 
 1. prune boilerplate subtrees: script/style/noscript/template/head/nav/
    header/footer/aside/form/iframe/svg/button/select/option;
@@ -18,15 +18,49 @@ Design: a single-pass, dependency-free DOM-ish scan (stdlib
 4. join kept blocks with ``'\\n'`` and whitespace-normalize within blocks
    (runs of whitespace -> single space).
 
+Blocks come from one of two tokenizers with the same prune, link and
+block-break rules:
+
+- ``_scan_blocks``, the fast path: one match of one compiled regex per
+  construct. Its grammar is what stdlib ``html.parser`` (CPython 3.11)
+  makes of a strict subset of HTML:
+
+  * start tags ``<name( attr(=value)?)*[ws]*/?>``, name
+    ``[A-Za-z][A-Za-z0-9-]*``, lowercased; ``[ws]`` is ASCII
+    `` \\t\\n\\r\\f`` only (html.parser's tag-name class accepts the other
+    Unicode spaces, so ``<p\\xa0>`` is the tag ``p\\xa0``, not a block);
+    values are quoted without ``<``/``>``, or bare ``[^\\s"'=<>`]+``,
+    whose ``/`` stays in the value (``<a href=x/>`` is not
+    self-closing); ``/>`` is a start tag and then its end tag;
+  * end tags ``</name[ws]*>``;
+  * comments to the first ``--\\s*>`` at or after ``<!--`` + 4,
+    declarations and doctypes (not ``<![``) to the next ``>``,
+    processing instructions ``<?`` to the next ``>``;
+  * a ``<`` not followed by ``[A-Za-z/!?]`` and not last on the page is
+    the text ``<``;
+  * ``<script>``/``<style>`` skip to html.parser's own
+    ``</\\s*script\\s*>`` (``re.I``), which ends them;
+  * text between constructs goes through ``html.unescape``, chunked as
+    html.parser chunks it (an entity never spans a ``<``).
+
+  Anything else, or any construct left open, makes it return ``None``.
+- ``_Extractor``, an ``html.parser`` subclass: the oracle the scanner is
+  tested against, bitwise, and the fallback for every page the scanner
+  declines. A parser exception keeps the blocks collected so far.
+
+``_page_blocks`` picks between them, so ``extract_text``,
+``block_records`` and ``classify_blocks`` read the same blocks of a page.
+
 Deterministic, pure-Python, Arrow-batch friendly: the Spark stage maps
 this over ``pd.Series`` of bytes inside ``mapInPandas``.
 """
 
 from __future__ import annotations
 
+import re
 from html import unescape
 from html.parser import HTMLParser
-from typing import Dict, List, Optional, Union
+from typing import Dict, Iterator, List, Optional, Tuple, Union
 
 _PRUNE_TAGS = frozenset(
     "script style noscript template head nav header footer aside form "
@@ -91,20 +125,136 @@ class _Extractor(HTMLParser):
         if self._link_depth:
             block.link_chars += len(data)
 
-    def text(self, min_block_chars: int, max_link_density: float) -> str:
-        kept: List[str] = []
-        for block in self._blocks:
-            raw = "".join(block.chars)
-            norm = " ".join(raw.split())
-            if not norm:
+
+#: a block: its raw text (chunks joined) and how many of its chars sit
+#: inside ``<a>``
+Blocks = List[Tuple[str, int]]
+
+_WS = "[ \t\n\r\f]"
+_NAME = "([A-Za-z][A-Za-z0-9-]*)"
+_ATTR = (
+    rf"{_WS}+[^\s\"'<>/=`]+"
+    rf"(?:{_WS}*={_WS}*(?:\"[^\"<>]*\"|'[^'<>]*'|[^\s\"'=<>`]+))?"
+)
+#: the text up to the next ``<``, then one construct or the end of the page
+_CONSTRUCT = re.compile(
+    r"([^<]*)(?:"
+    rf"<{_NAME}(?:{_ATTR})*{_WS}*(/?)>"  # 2: start tag, 3: "/" if self-closing
+    rf"|</{_NAME}{_WS}*>"  # 4: end tag
+    r"|<!--(?s:.*?)--\s*>"  # comment, as _markupbase's parse_comment ends it
+    r"|<!(?!--|\[)[^>]*>"  # doctype, other declaration (bogus comment)
+    r"|<\?[^>]*>"  # processing instruction
+    r"|(<)(?=[^A-Za-z/!?])"  # 5: a stray "<", the text "<"
+    r"|()\Z)"  # 6: the end of the page
+)
+#: html.parser's end of a script/style element (``set_cdata_mode``)
+_CDATA_END = {tag: re.compile(r"</\s*%s\s*>" % tag, re.I) for tag in ("script", "style")}
+
+
+def _scan_blocks(html: str) -> Optional[Blocks]:
+    """The blocks ``_Extractor`` builds from ``html``, in one regex match
+    per construct, or ``None`` when the page holds anything outside the
+    grammar in the module docstring. Never raises."""
+    blocks: Blocks = []
+    chunks: List[str] = []
+    link_chars = 0
+    prune = link = 0
+    match = _CONSTRUCT.match
+    i = 0
+    while True:
+        m = match(html, i)
+        if m is None:
+            return None
+        text, start, closing, end, stray, eof = m.groups()
+        if not prune:
+            if "&" in text:
+                text = unescape(text)  # may leave nothing: "&#6" is ""
+            if text:
+                chunks.append(text)
+                if link:
+                    link_chars += len(text)
+            if stray:
+                chunks.append(stray)
+                if link:
+                    link_chars += 1
+        if eof is not None:
+            break
+        i = m.end()
+        if start is not None:
+            tag = start.lower()
+            if tag in _PRUNE_TAGS:
+                if closing:
+                    continue
+                if tag in _CDATA_END:  # its content is pruned; skip to its end tag
+                    m = _CDATA_END[tag].search(html, i)
+                    if m is None or not m.group().isascii():
+                        return None
+                    i = m.end()
+                    continue
+                prune += 1
+            elif prune:
                 continue
-            density = block.link_chars / max(1, len(raw.strip()))
-            if density >= max_link_density:
+            elif tag == "a":
+                if not closing:
+                    link += 1
+            elif tag in _BLOCK_TAGS and chunks:
+                blocks.append(("".join(chunks), link_chars))
+                chunks = []
+                link_chars = 0
+        elif end is not None:
+            tag = end.lower()
+            if tag in _PRUNE_TAGS:
+                if prune:
+                    prune -= 1
+            elif prune:
                 continue
-            if len(norm) < min_block_chars and density > 0.0:
-                continue
-            kept.append(norm)
-        return "\n".join(kept)
+            elif tag == "a":
+                if link:
+                    link -= 1
+            elif tag in _BLOCK_TAGS and chunks:
+                blocks.append(("".join(chunks), link_chars))
+                chunks = []
+                link_chars = 0
+    blocks.append(("".join(chunks), link_chars))
+    return blocks
+
+
+def _parsed_blocks(html: str) -> Blocks:
+    """The blocks of ``html`` through ``_Extractor``."""
+    parser = _Extractor()
+    try:
+        parser.feed(html)
+        parser.close()
+    except Exception:
+        pass  # malformed markup: keep the blocks collected so far
+    return [("".join(b.chars), b.link_chars) for b in parser._blocks]
+
+
+def _decode(html: Union[bytes, bytearray, memoryview, str], encoding: Optional[str]) -> str:
+    """Bytes decoded via :func:`detect_encoding` unless an encoding is
+    given (the reference's sniffing policy, fileio.py:56-66); str as is."""
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        data = bytes(html)
+        return data.decode(encoding or detect_encoding(data), errors="replace")
+    return html
+
+
+def _page_blocks(html: Union[bytes, str, None], encoding: Optional[str]) -> Iterator[Tuple[str, float]]:
+    """``(text, link density)`` of each non-empty block of a page, text
+    whitespace-normalized: the scanner's blocks, or ``_Extractor``'s when
+    the scanner declines the page."""
+    if html is None:
+        return
+    html = _decode(html, encoding)
+    if not html:
+        return
+    blocks = _scan_blocks(html)
+    if blocks is None:
+        blocks = _parsed_blocks(html)
+    for raw, link_chars in blocks:
+        norm = " ".join(raw.split())
+        if norm:
+            yield norm, link_chars / max(1, len(raw.strip()))
 
 
 def block_records(
@@ -123,29 +273,10 @@ def block_records(
 
     INVARIANT (pinned by tests): joining the kept records' ``text``
     with ``\n`` reproduces :func:`extract_text`'s output byte for
-    byte — same parser, same thresholds, same order.
+    byte — same blocks (``_page_blocks``), same thresholds, same order.
     """
-    if html is None:
-        return []
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        data = bytes(html)
-        html = data.decode(encoding or detect_encoding(data), errors="replace")
-    if not html:
-        return []
-    parser = _Extractor()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        pass
     out: List[dict] = []
-    idx = 0
-    for block in parser._blocks:
-        raw = "".join(block.chars)
-        norm = " ".join(raw.split())
-        if not norm:
-            continue
-        density = block.link_chars / max(1, len(raw.strip()))
+    for idx, (norm, density) in enumerate(_page_blocks(html, encoding)):
         if density >= max_link_density:
             kept, reason = False, "link_density"
         elif len(norm) < min_block_chars and density > 0.0:
@@ -162,7 +293,6 @@ def block_records(
                 "text": norm,
             }
         )
-        idx += 1
     return out
 
 
@@ -189,21 +319,11 @@ def extract_text(
     Bytes are decoded via :func:`detect_encoding` unless an encoding is
     given (mirrors the reference's sniffing policy, fileio.py:56-66).
     """
-    if html is None:
-        return ""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        data = bytes(html)
-        html = data.decode(encoding or detect_encoding(data), errors="replace")
-    if not html:
-        return ""
-    parser = _Extractor()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        # malformed markup: fall back to the text collected so far
-        pass
-    return parser.text(min_block_chars, max_link_density)
+    return "\n".join(
+        norm
+        for norm, density in _page_blocks(html, encoding)
+        if density < max_link_density and not (len(norm) < min_block_chars and density > 0.0)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -252,27 +372,9 @@ def classify_blocks(
     {good, near_good, short, bad} REFLECTING PASS 1 for the middle
     classes — the final keep-set is pass 2's, exposed via
     :func:`justext_extract`."""
-    if html is None:
-        return []
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        data = bytes(html)
-        html = data.decode(encoding or detect_encoding(data), errors="replace")
-    if not html:
-        return []
-    parser = _Extractor()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        pass
     sw = stopwords if stopwords is not None else _default_stopwords()
     blocks = []
-    for block in parser._blocks:
-        raw = "".join(block.chars)
-        norm = " ".join(raw.split())
-        if not norm:
-            continue
-        density = block.link_chars / max(1, len(raw.strip()))
+    for norm, density in _page_blocks(html, encoding):
         words = norm.lower().split()
         sw_density = sum(1 for w in words if w in sw) / max(1, len(words))
         if density >= max_link_density:
@@ -411,9 +513,7 @@ def table_records(
     decoding mirrors :func:`block_records` (sniff + replace)."""
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        data = bytes(html)
-        html = data.decode(encoding or detect_encoding(data), errors="replace")
+    html = _decode(html, encoding)
     if not html:
         return []
     parser = _TableParser()

@@ -7,8 +7,10 @@ Reference chain (document.py:166-242):
 over the pages, and no Spark job before the caller's action. Per task,
 and per Arrow batch:
 
-1. extract each page once (``kernels/extract.py``), or take ``text``
-   when ``use_html=False``;
+1. extract each page once (``kernels/extract.py``: a regex block
+   scanner, one match per tag, with stdlib ``html.parser`` as the
+   fallback for any page outside the scanner's grammar), or take
+   ``text`` when ``use_html=False``;
 2. split it into words once, and collect the batch's consolidated words
    (``kernels.pipeline.merged_words``) that the task has not seen yet;
 3. beam those words in one ``kbest_for_words`` call (the prefix-shared
@@ -81,7 +83,7 @@ from ..kernels.pipeline import (
 from ..kernels.extract import extract_text
 from ..kernels.textutils import tokenize_text
 from .resources import Resources, default_resources
-from .session import keep_zip_directories
+from .session import freeze_worker_heap, keep_zip_directories
 
 KBEST_STRUCT = T.StructType(
     [
@@ -240,6 +242,7 @@ class CorrectionPipeline:
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             keep_zip_directories()  # this worker's later tasks skip the zip re-reads
             res: Resources = b_res.value
+            freeze_worker_heap()  # the daemon's per-task gc.collect() skips the model
             in_dict = _InDict(res.dictionary)
             kbest_map: dict = {}  # this task's words only
             decision_memo: dict = {}

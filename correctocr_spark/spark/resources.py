@@ -95,6 +95,8 @@ class Resources:
 
     @property
     def dictionary(self) -> Dictionary:
+        """A read-only ``Dictionary`` view over ``dict_words`` (shared,
+        not copied)."""
         return Dictionary.from_frozen(self.dict_words, self.ignore_case)
 
     # -- persistence (reference artifact shapes) --------------------------

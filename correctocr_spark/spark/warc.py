@@ -598,7 +598,7 @@ def extraction_block_audit(
     the extractor drop this paragraph" is answerable without
     re-parsing: one row per non-empty DOM block with length, link
     density (floored bp) and the keep decision + reason, via
-    :func:`~..kernels.extract.block_records` (the SAME parser and
+    :func:`~..kernels.extract.block_records` (the SAME blocks and
     thresholds as the flagship's ``extract_text``; joining the kept
     rows' text with ``\\n`` rebuilds its output byte-identically —
     pinned by tests).

@@ -121,6 +121,32 @@ def test_at_most_one_letter_is_in_any_dictionary(word):
     assert (word in Dictionary()) == (len(letterRE.findall(clean_word(word))) <= 1)
 
 
+@pytest.fixture(scope="module")
+def dictionary_views(mini_hmm):
+    """``(Dictionary, Resources)`` over the same words, case-sensitive and
+    not."""
+    from correctocr_spark.spark.resources import Resources
+
+    words = ["word", "Æble", "ab", "«quoted»", "soft\xadhyphen", "two words", "ΩЖ"]
+    dictionaries = [Dictionary(words), Dictionary(words, ignore_case=True)]
+    return [(d, Resources(mini_hmm, d)) for d in dictionaries]
+
+
+@given(_WORD)
+@settings(max_examples=300, deadline=None)
+def test_resources_dictionary_is_a_shared_read_only_view(dictionary_views, word):
+    """``Resources.dictionary`` shares the broadcast word set instead of
+    copying it per access, and answers membership as the dictionary it
+    was built from."""
+    for d, res in dictionary_views:
+        view = res.dictionary
+        assert view.words is res.dict_words
+        assert view.ignore_case == d.ignore_case
+        assert (word in view) == (word in d)
+        with pytest.raises(AttributeError):
+            view.add("new")
+
+
 @given(st.text(max_size=20), st.lists(st.tuples(st.text(max_size=10), st.floats(0, 1)), min_size=1, max_size=4))
 @settings(max_examples=300, deadline=None)
 def test_bin_always_assigned(word, kbest):
