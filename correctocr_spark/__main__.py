@@ -439,13 +439,13 @@ def main(argv=None) -> int:
             print(f"model: {len(params.states)} states -> {args.output}")
         elif args.command == "report":
             from .spark.pipeline import CorrectionPipeline
-            from .spark.report import heuristics_report
+            from .spark.report import doc_totals, heuristics_report
 
             res = load_resources(args.resources)
             pipe = CorrectionPipeline(spark, res)
             pages = spark.read.parquet(args.input)
             tokens = pipe.tokens(pages).cache()
-            print(heuristics_report(tokens, pipe.finalize(tokens), res, spark))
+            print(heuristics_report(tokens, doc_totals(tokens), res, spark))
         elif args.command == "dictionary":
             if args.corpus_dir:
                 from .spark.corpus import corpus_dictionary_df

@@ -11,6 +11,12 @@ Sandbox storage is parquet with hash-bucketed url partitions (``pkey``);
 on a real deployment the same layout maps to an Iceberg table with
 ``overwritePartitions()`` — REPLACE-by-PK ≙ partition overwrite keyed by
 url bucket (reference ``_db.py:232-331``).
+
+``AuditedRun.write`` computes a run's corrected rows once: it stages them,
+with their ``pkey``, in ``<output>/_staging``, then appends that staged
+read to ``corrected/`` and derives the run's lineage and bin metrics from
+the same read. Correction is never repeated for the audit, and the audit
+counts exactly the rows this run appended.
 """
 
 from __future__ import annotations
@@ -48,11 +54,11 @@ def bin_metrics(tokens: DataFrame) -> DataFrame:
     )
 
 
-def partition_lineage(corrected: DataFrame, run_id: str, buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Per-partition lineage: url bucket -> doc/token counts + run id."""
+def partition_lineage(staged: DataFrame, run_id: str) -> DataFrame:
+    """Per-partition lineage of rows that carry their ``pkey``: url bucket
+    -> doc/token counts + run id."""
     return (
-        with_partition_key(corrected, buckets)
-        .groupBy("pkey")
+        staged.groupBy("pkey")
         .agg(
             F.count(F.lit(1)).alias("url_count"),
             F.sum("index_count").alias("index_count"),
@@ -65,12 +71,12 @@ def partition_lineage(corrected: DataFrame, run_id: str, buckets: int = DEFAULT_
     )
 
 
-def partition_bin_metrics(corrected: DataFrame, run_id: str, buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+def partition_bin_metrics(staged: DataFrame, run_id: str) -> DataFrame:
     """Token-bin metrics per url partition (north rule): explode the
-    per-doc ``bin_counts`` map and sum per (pkey, bin)."""
+    per-doc ``bin_counts`` map of rows that carry their ``pkey`` and sum
+    per (pkey, bin)."""
     return (
-        with_partition_key(corrected, buckets)
-        .select("pkey", F.explode_outer("bin_counts").alias("bin", "n"))
+        staged.select("pkey", F.explode_outer("bin_counts").alias("bin", "n"))
         .where(F.col("bin").isNotNull())
         .groupBy("pkey", "bin")
         .agg(F.sum("n").alias("token_count"))
@@ -89,6 +95,7 @@ class AuditedRun:
         self.corrected_path = os.path.join(output_dir, "corrected")
         self.audit_path = os.path.join(output_dir, "audit")
         self.bin_metrics_path = os.path.join(output_dir, "audit_bins")
+        self.staging_path = os.path.join(output_dir, "_staging")
 
     def completed_urls(self) -> Optional[DataFrame]:
         """The urls already written, or ``None`` when ``corrected/`` does
@@ -116,19 +123,27 @@ class AuditedRun:
         return pages.join(done, on="url", how="left_anti")
 
     def write(self, corrected: DataFrame) -> None:
-        out = with_partition_key(corrected, self.buckets)
-        (
-            out.write.mode("append")
-            .partitionBy("pkey")
-            .parquet(self.corrected_path)
+        """Append ``corrected`` to ``corrected/`` and this run's lineage
+        and bin metrics to ``audit/`` and ``audit_bins/``, computing
+        ``corrected`` once. A write that fails leaves ``_staging`` behind;
+        the next write replaces it."""
+        # Stage first. The append below refreshes every cached plan that
+        # reads corrected/ (``pending`` among them), so nothing after it
+        # may recompute ``corrected``; the audit reads the staged rows.
+        keyed = with_partition_key(corrected, self.buckets)
+        keyed.write.mode("overwrite").parquet(self.staging_path)
+        staged = self.spark.read.parquet(self.staging_path)
+        # The parquet reader makes every column nullable; appending under
+        # the run's own schema keeps corrected/'s non-null columns REQUIRED.
+        jspark = self.spark._jsparkSession
+        rows = jspark.createDataFrame(staged._jdf.javaRDD(), jspark.parseDataType(keyed.schema.json()))
+        DataFrame(rows, self.spark).write.mode("append").partitionBy("pkey").parquet(
+            self.corrected_path
         )
-        done = self.spark.read.parquet(self.corrected_path).join(
-            corrected.select("url"), on="url", how="left_semi"
-        )
-        partition_lineage(done, self.run_id, self.buckets).write.mode("append").parquet(
-            self.audit_path
-        )
-        if "bin_counts" in corrected.columns:
-            partition_bin_metrics(done, self.run_id, self.buckets).write.mode(
-                "append"
-            ).parquet(self.bin_metrics_path)
+        partition_lineage(staged, self.run_id).write.mode("append").parquet(self.audit_path)
+        if "bin_counts" in staged.columns:
+            partition_bin_metrics(staged, self.run_id).write.mode("append").parquet(
+                self.bin_metrics_path
+            )
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.staging_path)
+        path.getFileSystem(jspark.sparkContext().hadoopConfiguration()).delete(path, True)

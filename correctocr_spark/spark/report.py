@@ -68,6 +68,25 @@ def report_counters(tokens: DataFrame, resources: Resources, spark) -> DataFrame
     )
 
 
+def doc_totals(tokens: DataFrame) -> DataFrame:
+    """Per-url ``index_count``, ``token_count`` and ``hyphenated_count`` of
+    a pipeline token table, equal to those ``CorrectionPipeline.finalize``
+    computes (``doc_stats``), as one JVM aggregation: no token structs
+    shuffled to Python and no second kernel pass.
+
+    ``index_count`` counts the tokens, ``token_count`` the tokens that are
+    not a hyphen tail, and ``hyphenated_count`` the hyphen heads; a
+    token-less page's placeholder row is null in ``idx``, ``tail`` and
+    ``head`` and counts in none. The pipeline's token table marks no token
+    discarded.
+    """
+    return tokens.groupBy("url").agg(
+        F.count("idx").alias("index_count"),
+        F.count(F.when(~F.col("tail"), 1)).alias("token_count"),
+        F.count(F.when(F.col("head"), 1)).alias("hyphenated_count"),
+    )
+
+
 def render_report(counters_rows, totals: dict) -> str:
     """Driver-side text rendering (heuristics.py:213-274 shape)."""
     total_tokens = max(1, totals.get("token_count", 1))
@@ -89,7 +108,8 @@ def render_report(counters_rows, totals: dict) -> str:
 
 
 def heuristics_report(tokens: DataFrame, corrected: DataFrame, resources: Resources, spark) -> str:
-    """End-to-end A2: aggregate + render."""
+    """End-to-end A2: aggregate + render. ``corrected`` holds one row per
+    url with its counts: ``doc_totals(tokens)`` or ``finalize(tokens)``."""
     counters = report_counters(tokens, resources, spark).collect()
     t = corrected.agg(
         F.count(F.lit(1)).alias("doc_count"),

@@ -75,6 +75,30 @@ def test_cli_prepare_and_resume(tmp_path, spark):
 
 
 @pytest.mark.slow
+@pytest.mark.engine
+def test_cli_report(tmp_path, spark):
+    """`report` prints the evaluation report, with the document totals
+    that the token table's ``finalize`` reassembly gives."""
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.synth import synth_pages
+
+    inp = str(tmp_path / "pages")
+    synth_pages(spark, 20, seed=21).write.parquet(inp)
+    r = run_cli("report", "--input", inp)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "BIN 1" in r.stdout and "(A) gold == orig" in r.stdout
+
+    pipe = CorrectionPipeline(spark)
+    t = pipe.finalize(pipe.tokens(spark.read.parquet(inp))).agg(
+        F.sum("index_count"), F.sum("token_count"), F.sum("hyphenated_count")
+    ).first()
+    assert f"Total documents included in evaluation: {20:10d}" in r.stdout
+    assert f"Total tokens included in evaluation: {t[0]:10d}" in r.stdout
+    assert f"Hyphenated: {t[2]:10d}" in r.stdout
+    assert f"Tokens available for evaluation: {t[1]:10d}" in r.stdout
+
+
+@pytest.mark.slow
 def test_cli_dictionary(tmp_path, spark):
     spark.createDataFrame([("hello brave new-world",)], ["text"]).write.parquet(
         str(tmp_path / "docs")

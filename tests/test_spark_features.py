@@ -143,6 +143,43 @@ def test_heuristics_report(spark, pipeline):
     tokens.unpersist()
 
 
+@pytest.mark.engine
+def test_doc_totals_equal_finalize(spark):
+    """``doc_totals`` gives each url the ``index_count``, ``token_count``
+    and ``hyphenated_count`` that ``finalize`` gives it: hyphen chains, a
+    final head and token-less pages included."""
+    import datetime
+
+    from correctocr_spark.spark.pipeline import CorrectionPipeline
+    from correctocr_spark.spark.report import doc_totals
+    from correctocr_spark.spark.synth import PAGES_SCHEMA, synth_pages
+
+    ts = datetime.datetime(2024, 1, 1)
+    texts = [
+        "the A- B- C chain and more",
+        "one- two- three- four",
+        "a page that ends on a head-",
+        "soft\xadhyphen\xad end",
+        "",
+        "   ",
+        None,
+    ]
+    edge = spark.createDataFrame(
+        [(f"u://edge/{i}", ts, None, t, "en") for i, t in enumerate(texts)], PAGES_SCHEMA
+    )
+    pipe = CorrectionPipeline(spark, use_html=False)
+    pages = edge.unionByName(synth_pages(spark, 20, seed=21))
+    tokens = pipe.tokens(pages).cache()
+    cols = ["index_count", "token_count", "hyphenated_count"]
+    got = {r["url"]: tuple(r[c] for c in cols) for r in doc_totals(tokens).collect()}
+    want = {r["url"]: tuple(r[c] for c in cols) for r in pipe.finalize(tokens).collect()}
+    tokens.unpersist()
+    assert got == want
+    assert len(got) == 27
+    assert any(h > 1 for _i, _t, h in got.values())
+    assert got["u://edge/4"] == (0, 0, 0)
+
+
 # --- sources (S7/S10/S15, S14, J7) ---------------------------------------------
 
 
