@@ -292,9 +292,8 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     """Grouped (explode + partial-agg min) signature path: whole-stage
     codegen'd md5, and the groupBy shuffle carries only the map-side
     partial mins (~n_docs x num_hashes rows) — measured 3x faster than
-    the row-local array form, whose higher-order functions are
-    interpreted. The row-local twin (minhash_signatures_local) exists
-    for streaming, where a grouped aggregation is illegal."""
+    a row-local array form, whose higher-order functions are
+    interpreted."""
     _ship(spark)
     from correctocr_spark.ops.dedup import lsh_candidate_pairs, minhash_signatures, shingles_df
 

@@ -306,12 +306,17 @@ def get_session(args):
     return get_spark(cores=args.cores or None)
 
 
-def load_resources(path: str, k: int = 4):
+def load_resources(path: str, k: int = 4, settings: str = "shipped"):
+    """The model at ``path`` (the default model when empty) under a
+    ``--settings`` profile: ``aggressive`` replaces its settings with
+    ``AGGRESSIVE_SETTINGS``."""
+    from .kernels.heuristics import AGGRESSIVE_SETTINGS
     from .spark.resources import Resources, default_resources
 
-    if path:
-        return Resources.load(path, k=k)
-    return default_resources(k=k)
+    res = Resources.load(path, k=k) if path else default_resources(k=k)
+    if settings == "aggressive":
+        res = Resources(res.params, res.dictionary, AGGRESSIVE_SETTINGS, k=res.k)
+    return res
 
 
 def write_gold_files(corrected, out_dir: str) -> None:
@@ -375,14 +380,10 @@ def main(argv=None) -> int:
     spark = get_session(args)
     try:
         if args.command == "prepare":
-            from .kernels.heuristics import AGGRESSIVE_SETTINGS
             from .spark.audit import AuditedRun
             from .spark.pipeline import CorrectionPipeline
-            from .spark.resources import Resources
 
-            res = load_resources(args.resources, k=args.k)
-            if args.settings == "aggressive":
-                res = Resources(res.params, res.dictionary, AGGRESSIVE_SETTINGS, k=res.k)
+            res = load_resources(args.resources, k=args.k, settings=args.settings)
             use_html = not args.no_html
             if args.format == "pages":
                 pages = spark.read.parquet(args.input)
@@ -467,9 +468,7 @@ def main(argv=None) -> int:
         elif args.command == "correct":
             from pyspark.sql import functions as F
 
-            from .kernels.heuristics import AGGRESSIVE_SETTINGS
             from .spark.pipeline import CorrectionPipeline
-            from .spark.resources import Resources
 
             if bool(args.input) == bool(args.apply):
                 raise SystemExit("correct: need exactly one of --input / --apply")
@@ -479,9 +478,7 @@ def main(argv=None) -> int:
                 tokens = import_tokens_csv(spark, args.apply, k=args.k)
                 corrected = CorrectionPipeline.finalize(tokens)
             else:
-                res = load_resources(args.resources, k=args.k)
-                if args.settings == "aggressive":
-                    res = Resources(res.params, res.dictionary, AGGRESSIVE_SETTINGS, k=res.k)
+                res = load_resources(args.resources, k=args.k, settings=args.settings)
                 pipe = CorrectionPipeline(
                     spark, res,
                     dehyphenate=not args.no_dehyphenate,

@@ -138,16 +138,14 @@ def generate_kbest(
     tokens: List[Tok],
     lookup: Callable[[str], KBest],
     k: int = 4,
-    force: bool = False,
 ) -> None:
     """model/hmm.py:235-257 — k-best for each consolidated token.
 
-    ``lookup`` maps a (merged) original to its rank-ordered candidates —
-    in Spark it reads the task-local map of the one-pass plan; standalone
-    it calls the beam.
+    ``lookup`` maps a (merged) original to its rank-ordered candidates:
+    a precomputed map or a memoized beam (see :func:`correct_document`).
     """
     for original, _gold, token in consolidated(tokens):
-        if force or not token.kbest or len(token.kbest) != k:
+        if not token.kbest or len(token.kbest) != k:
             token.kbest = lookup(original)
 
 
@@ -155,20 +153,19 @@ def bin_tokens(
     tokens: List[Tok],
     dictionary: Dictionary,
     settings: Dict[int, str],
-    force: bool = False,
     memo: Optional[dict] = None,
 ) -> None:
     """heuristics.py:95-123 (tail inherits head's decision).
 
     ``memo`` caches the (pure) decision per ``(raw original, merged
     original)`` — the token's kbest is a function of the merged word, so
-    the key fully determines the result; sharing one memo across a
-    worker's documents turns the dominant dictionary predicate into a
-    per-distinct-word cost (the same Zipf argument as the k-best stage).
+    the key fully determines the result. A memo shared across documents
+    makes the dictionary predicate a per-distinct-word cost; the kernel
+    probe of perfbench shares one.
     """
     n = len(tokens)
     for merged, _gold, token in consolidated(tokens):
-        if force or token.bin is None:
+        if token.bin is None:
             if memo is None:
                 decision = bin_for_word(token.original, token.kbest, dictionary, settings)
             else:
@@ -186,10 +183,10 @@ def bin_tokens(
                 nxt.bin = token.bin
 
 
-def autocorrect(tokens: List[Tok], force: bool = False) -> None:
+def autocorrect(tokens: List[Tok]) -> None:
     """document.py:231-239."""
     for t in tokens:
-        if force or not t.gold:
+        if not t.gold:
             if t.heuristic in ("kbest", "kdict"):
                 t.gold = _kbest_get(t.kbest, int(t.selection))[0]
             elif t.heuristic == "original":
@@ -277,20 +274,19 @@ def correct_tokens(
     dictionary: Dictionary,
     settings: Dict[int, str],
     k: int = 4,
-    decision_memo: Optional[dict] = None,
 ) -> Dict[str, object]:
     """The reference chain after tokenization on one document's tokens:
     k-best, bins, autocorrect, both text surfaces and the stats.
 
-    ``correct_document`` and the Spark executor both run it, so the
-    oracle and the job share one implementation. ``lookup`` maps a
-    consolidated word to its k-best; ``decision_memo`` is shared across
-    documents (see :func:`bin_tokens`). Returns :func:`doc_stats` with
-    ``done`` as a bool, plus ``corrected`` (gold-sink text), ``merged``
-    (``__str__`` text), ``bin_counts`` and ``tokens``.
+    :func:`correct_document` runs it; the Spark plan runs
+    :func:`correct_words` instead, which tests check against it.
+    ``lookup`` maps a consolidated word to its k-best. Returns
+    :func:`doc_stats` with ``done`` as a bool, plus ``corrected``
+    (gold-sink text), ``merged`` (``__str__`` text), ``bin_counts`` and
+    ``tokens``.
     """
     generate_kbest(tokens, lookup, k)
-    bin_tokens(tokens, dictionary, settings, memo=decision_memo)
+    bin_tokens(tokens, dictionary, settings)
     autocorrect(tokens)
     out: Dict[str, object] = doc_stats(tokens)  # a fresh dict
     out["done"] = bool(out["done"])
@@ -309,7 +305,6 @@ def correct_document(
     k: int = 4,
     dehyphenate_doc: bool = True,
     kbest_map: Optional[Dict[str, KBest]] = None,
-    decision_memo: Optional[dict] = None,
 ) -> Dict[str, object]:
     """The full reference chain on one document (the differential oracle).
 
@@ -330,7 +325,7 @@ def correct_document(
                 memo[w] = kbest_for_word(params, w, k)
             return memo[w]
 
-    return correct_tokens(tokens, lookup, dictionary, settings, k, decision_memo)
+    return correct_tokens(tokens, lookup, dictionary, settings, k)
 
 
 # -- the flat kernel: the chain above in one loop over the split words -------

@@ -92,48 +92,6 @@ def shingles_col(text_col: str = "text", k: int = 3):
     return F.array_distinct(F.filter(sh, lambda s: s != ""))
 
 
-def minhash_signatures_local(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 3, num_hashes: int = 12,
-) -> DataFrame:
-    """MinHash with ZERO shuffle: the signature is computed row-locally
-    in a SINGLE pass over the shingle array —
-    ``aggregate(transform(sh, s -> [md5(0|s)..md5(H-1|s)]), [U+FFFF...],
-    (acc, x) -> zip_with(acc, x, least))`` — identical values to the
-    explode+groupBy form (min over the same distinct-shingle set), but
-    the exploded shingle table never exists. Higher-order functions are
-    interpreted (no codegen), so the one-pass shape matters: a naive
-    ``array_min(transform(sh, hash_i))`` per hash re-evaluates the
-    shingle construction num_hashes times (measured 5x slower).
-
-    Trade-off, measured at sf0.1: this form is still ~3x slower than the
-    grouped twin, whose md5s run inside whole-stage codegen and whose
-    groupBy shuffle carries only map-side partial mins — so BATCH code
-    should use :func:`minhash_signatures`. This form exists because it
-    is the STREAMING-legal one (stateless narrow op; a grouped
-    aggregation upstream of applyInPandasWithState is illegal) — see
-    spark/streaming.py:streaming_lsh_candidates. Docs with no shingles
-    are dropped, matching the grouped form. U+FFFF sorts above every
-    md5 hex char.
-    """
-    sh = shingles_col(text_col, k)
-    hashed = F.transform(
-        sh,
-        lambda s: F.array(
-            *[F.md5(F.concat(F.lit(f"{i}|"), s)) for i in range(num_hashes)]
-        ),
-    )
-    sig = F.aggregate(
-        hashed,
-        F.array(*[F.lit("￿") for _ in range(num_hashes)]),
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
-        .where(F.element_at("sig", 1) != "￿")
-    )
-
-
 def lsh_band_keys_col(sig_col, num_hashes: int = 12, bands: int = 4):
     """Band-key ARRAY column over a signature array — the row-local twin
     of the banding inside :func:`lsh_candidate_pairs` (same key format)."""

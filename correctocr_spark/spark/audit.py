@@ -85,13 +85,15 @@ def partition_bin_metrics(staged: DataFrame, run_id: str) -> DataFrame:
 
 
 class AuditedRun:
-    """Resumable run: anti-join completed urls, write results + audit."""
+    """Resumable run: anti-join completed urls, write results + audit.
 
-    def __init__(self, spark: SparkSession, output_dir: str, run_id: str = "run", buckets: int = DEFAULT_BUCKETS):
+    Rows are keyed into :data:`DEFAULT_BUCKETS` url buckets, one layout
+    per output, so the per-bucket lineage of every run lines up."""
+
+    def __init__(self, spark: SparkSession, output_dir: str, run_id: str = "run"):
         self.spark = spark
         self.output_dir = output_dir
         self.run_id = run_id
-        self.buckets = buckets
         self.corrected_path = os.path.join(output_dir, "corrected")
         self.audit_path = os.path.join(output_dir, "audit")
         self.bin_metrics_path = os.path.join(output_dir, "audit_bins")
@@ -130,7 +132,7 @@ class AuditedRun:
         # Stage first. The append below refreshes every cached plan that
         # reads corrected/ (``pending`` among them), so nothing after it
         # may recompute ``corrected``; the audit reads the staged rows.
-        keyed = with_partition_key(corrected, self.buckets)
+        keyed = with_partition_key(corrected)
         keyed.write.mode("overwrite").parquet(self.staging_path)
         staged = self.spark.read.parquet(self.staging_path)
         # The parquet reader makes every column nullable; appending under

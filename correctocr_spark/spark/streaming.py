@@ -1,11 +1,18 @@
-"""Structured Streaming front-end.
+"""Structured Streaming front-end: page input and the correction stream.
 
 The reference has no streaming (SURVEY.md §2.11) — its closest analog is
 a background thread incrementally ingesting documents
-(server.py:505-551). Here that becomes the same batch pipeline applied
-per micro-batch via ``foreachBatch`` (pure composition — no new
-semantics to match), plus a genuinely streaming-native operator:
-watermarked windowed crawl-rate metrics over ``warc_ts``.
+(server.py:505-551). What is here:
+
+- input streams: :func:`pages_stream` over a pages parquet directory,
+  and :func:`warc_pages_stream` over landing WARC segments, which runs
+  the batch parse and extraction stages of ``spark.warc`` unchanged
+  (:func:`warc_ingest_stream` appends its pages to a parquet table);
+- :func:`correct_stream`: the batch correction pipeline and audited
+  writer applied per micro-batch via ``foreachBatch`` (pure composition
+  — no new semantics to match);
+- :func:`crawl_rate_metrics`: watermarked windowed crawl-rate metrics
+  over ``warc_ts``.
 
 At production scale the source is the Iceberg/parquet pages table with
 new files landing per crawl segment; ``availableNow`` gives catch-up
@@ -13,10 +20,6 @@ batch semantics, a continuous trigger gives tailing.
 """
 
 from __future__ import annotations
-
-from typing import Optional
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,205 +60,6 @@ def correct_stream(
             return
         pending = run.pending(batch_df)
         run.write(pipeline.corrected(pending))
-
-    writer = (
-        pages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_dedup(
-    pages: DataFrame,
-    state_timeout_ms: int = 0,
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: emit each
-    content fingerprint's FIRST page only, across micro-batches.
-
-    State per md5(text) fingerprint = the first url seen; subsequent
-    pages with the same fingerprint are dropped. This is the streaming
-    form of exact dedup (ops/dedup.py) — state is bounded by distinct
-    content, optionally aged out with a processing-time timeout.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("fp", T.StringType(), False),
-            T.StructField("url", T.StringType(), False),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("first_url", T.StringType(), True)])
-
-    def dedup_fn(key, batches, state: GroupState):
-        if state.exists:
-            # fingerprint already emitted in an earlier batch
-            for _ in batches:
-                pass
-            yield pd.DataFrame({"fp": [], "url": [], "text": []})
-            return
-        first = None
-        for pdf in batches:
-            if len(pdf) and first is None:
-                pdf = pdf.sort_values("url")
-                first = (pdf.iloc[0]["url"], pdf.iloc[0]["text"])
-        if first is None:
-            yield pd.DataFrame({"fp": [], "url": [], "text": []})
-            return
-        state.update((first[0],))
-        if state_timeout_ms:
-            state.setTimeoutDuration(state_timeout_ms)
-        yield pd.DataFrame({"fp": [key[0]], "url": [first[0]], "text": [first[1]]})
-
-    keyed = pages.select(F.md5("text").alias("fp"), "url", "text").groupBy("fp")
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return keyed.applyInPandasWithState(
-        dedup_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-def streaming_lsh_candidates(
-    pages: DataFrame,
-    k: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    state_timeout_ms: int = 0,
-) -> DataFrame:
-    """Streaming MinHash-LSH near-dup CANDIDATE stream.
-
-    Signatures and band keys are computed row-locally (the zero-shuffle
-    array MinHash, ops/dedup.py:minhash_signatures_local — stateless
-    narrow ops, streaming-legal); the only stateful piece is one
-    ``applyInPandasWithState`` keyed by band key: state holds the FIRST
-    url seen per bucket, and every later arrival in the same bucket
-    emits a ``(band_key, doc_a, doc_b)`` candidate pair. Downstream
-    (foreachBatch or batch) verifies candidates with exact Jaccard —
-    the same two-phase shape as the batch path, with the candidate
-    generation running continuously. State is bounded by distinct band
-    keys (optionally TTL'd via processing-time timeout) — O(buckets),
-    not O(bucket members), which is the point at crawl scale.
-
-    Pairing is deliberately a STAR, not a clique: arrivals pair only
-    against the bucket's first url, so a b-member bucket emits b-1 pairs
-    instead of b(b-1)/2. For the downstream grouping this loses nothing:
-    connected components over the star equals connected components over
-    the full same-bucket pair set (every member is connected through the
-    hub — pinned by test_streaming_star_equals_clique_components). Only
-    a consumer of raw *pairs* (not groups) would see the difference; it
-    must verify candidates pairwise anyway.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..ops.dedup import lsh_band_keys_col, minhash_signatures_local
-
-    out_schema = T.StructType(
-        [
-            T.StructField("band_key", T.StringType(), False),
-            T.StructField("doc_a", T.StringType(), False),
-            T.StructField("doc_b", T.StringType(), False),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("first_url", T.StringType(), True)])
-
-    def emit_fn(key, batches, state: GroupState):
-        first = state.get[0] if state.exists else None
-        pairs = []
-        for pdf in batches:
-            for url in sorted(pdf["url"]):
-                if first is None:
-                    first = url
-                elif url != first:
-                    pairs.append((key[0], first, url))
-        if first is not None and not state.exists:
-            state.update((first,))
-        if state_timeout_ms and state.exists:
-            state.setTimeoutDuration(state_timeout_ms)
-        yield pd.DataFrame(pairs, columns=["band_key", "doc_a", "doc_b"])
-
-    sigs = minhash_signatures_local(
-        pages, id_col="url", text_col="text", k=k, num_hashes=num_hashes
-    )
-    banded = sigs.select(
-        F.col("doc_id").alias("url"),
-        F.explode(lsh_band_keys_col(F.col("sig"), num_hashes, bands)).alias("band_key"),
-    )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return banded.groupBy("band_key").applyInPandasWithState(
-        emit_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-def streaming_index_candidates(
-    pages: DataFrame,
-    index_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    max_bucket: Optional[int] = None,
-    available_now: bool = True,
-):
-    """Near-dup candidate stream bridged to the DURABLE MinHash index —
-    cross-RUN continuity that the in-memory
-    :func:`streaming_lsh_candidates` state cannot give (its
-    applyInPandasWithState buckets die with the query).
-
-    Per micro-batch (foreachBatch): (1) the batch's candidates come
-    from ``MinHashIndex.candidate_pairs`` — new-vs-new within the batch
-    PLUS new-vs-old against every document any previous batch OF ANY
-    RUN indexed; (2) the pairs are appended to ``output_path`` parquet
-    (an ACTION, so the result is materialized BEFORE the index append —
-    the ordering contract of ``MinHashIndex.add``, no recache-by-path
-    hazard); (3) the batch is added to the index. After a restart, new
-    batches still pair against pre-restart documents (pinned by
-    test_streaming_index_candidates_survives_restart).
-
-    Delivery semantics: the streaming checkpoint makes source progress
-    exactly-once, but foreachBatch side effects are AT-LEAST-ONCE — a
-    batch replayed after a crash re-adds its bands (idempotent:
-    deterministic rows the index's distinct/semi-joins absorb) and
-    re-appends its pairs, so consumers of ``output_path`` read with
-    ``.distinct()`` (pairs are already normalized doc_a < doc_b).
-    """
-    from ..ops.dedup import MinHashIndex
-
-    spark = pages.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = MinHashIndex(
-            spark,
-            index_path,
-            k=k,
-            num_hashes=num_hashes,
-            bands=bands,
-            max_bucket=max_bucket,
-        )
-        pairs = idx.candidate_pairs(batch_df, id_col="url", text_col="text")
-        pairs.write.mode("append").parquet(output_path)
-        idx.add(batch_df, id_col="url", text_col="text")
-        idx.release()
 
     writer = (
         pages.writeStream.foreachBatch(process)
@@ -348,61 +152,6 @@ def warc_ingest_stream(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_shard_manifest(
-    pages: DataFrame,
-    manifest_path: str,
-    shard_col: str = "shard",
-    id_col: str = "url",
-    text_col: str = "text",
-    checkpoint: Optional[str] = None,
-    available_now: bool = True,
-):
-    """Streaming twin of :func:`~..ops.cleaning.shard_manifest`: a
-    foreachBatch sink that maintains a durable per-shard manifest
-    (n_docs, byte_mass, mod-2^61 checksum) ACROSS micro-batches — the
-    exactly-once verification artifact for streaming ingest. Because
-    the checksum is an order-independent modular SUM, per-batch
-    manifests merge with the stored one by re-summing (the same merge
-    the batch op's sub-manifest test pins): read stored, union the
-    batch's manifest, re-aggregate, overwrite. No per-row state, no
-    growing state store — the manifest is shard-cardinality-sized.
-
-    Returns the started StreamingQuery.
-    """
-    from ..ops.cleaning import shard_manifest
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bm = shard_manifest(batch_df, shard_col, id_col=id_col, text_col=text_col)
-        try:
-            stored = spark.read.parquet(manifest_path)
-        except Exception:
-            stored = None
-        if stored is not None:
-            bm = stored.unionByName(bm)
-        merged = (
-            bm.groupBy("shard")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("byte_mass").cast("long").alias("byte_mass"),
-                (F.sum(F.col("checksum").cast("decimal(38,0)")) % F.lit(1 << 61))
-                .cast("long")
-                .alias("checksum"),
-            )
-        )
-        # materialize BEFORE overwriting the path the plan reads from
-        # (the MinHashIndex recache-by-path discipline)
-        rows = merged.localCheckpoint(eager=True)
-        rows.write.mode("overwrite").parquet(manifest_path)
-
-    writer = pages.writeStream.foreachBatch(upsert).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -16,11 +16,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "correctocr_spark"
 
 
-def _sources():
-    for dirpath, _dirs, files in os.walk(os.path.join(REPO, PACKAGE)):
+def _py_files(*parts):
+    for dirpath, _dirs, files in os.walk(os.path.join(REPO, *parts)):
         for name in sorted(files):
             if name.endswith(".py"):
                 yield os.path.join(dirpath, name)
+
+
+def _sources():
+    yield from _py_files(PACKAGE)
     yield os.path.join(REPO, "__spark_entry__.py")
 
 
@@ -48,14 +52,16 @@ def _optional(tree):
     return guarded
 
 
-def _imports():
-    """``(file:line, module, imported names)`` for every import statement."""
-    for path in _sources():
+def _imports(paths=None, include_optional=False):
+    """``(file:line, module, imported names)`` for every import statement
+    in ``paths`` (default: :func:`_sources`); those guarded by ``except
+    ImportError`` only when ``include_optional``."""
+    for path in _sources() if paths is None else paths:
         modname = _module_name(path)
         is_pkg = path.endswith("__init__.py")
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read(), path)
-        guarded = _optional(tree)
+        guarded = set() if include_optional else _optional(tree)
         for node in ast.walk(tree):
             if id(node) in guarded:
                 continue
@@ -103,3 +109,24 @@ def test_every_import_resolves():
             if _spec(f"{module}.{name}") is None:
                 missing.append(f"{where}: {module} has no {name}")
     assert not missing, "\n".join(missing)
+
+
+def test_engine_does_not_import_ops():
+    """The dependency runs one way: ``ops/`` may use the engine
+    (``kernels/``, ``spark/``), never the reverse, so the engine stands
+    without ``ops/``."""
+    ops = f"{PACKAGE}.ops"
+    paths = [*_py_files(PACKAGE, "kernels"), *_py_files(PACKAGE, "spark")]
+    imports = list(_imports(paths, include_optional=True))
+    assert {where.rsplit(":", 1)[0] for where, _m, _n in imports} >= {
+        os.path.join(PACKAGE, "kernels", "pipeline.py"),
+        os.path.join(PACKAGE, "spark", "streaming.py"),
+    }
+    named = [
+        f"{where}: {module}"
+        for where, module, names in imports
+        if module == ops
+        or module.startswith(ops + ".")
+        or (module == PACKAGE and "ops" in names)
+    ]
+    assert not named, "\n".join(named)

@@ -128,67 +128,6 @@ def test_embedding_dup_bucketed_requires_planes(spark):
     assert not any(".first(" in ln for ln in code_lines)
 
 
-# ---------------------------------------------------------------------------
-# streaming LSH star-pairing == clique for grouping purposes
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_star_equals_clique_components(spark, tmp_path):
-    """A 4-member bucket arriving across two micro-batches emits a STAR
-    (3 pairs against the first url) — connected components over that
-    star must equal components over the full 6-pair clique."""
-    import datetime
-    from itertools import combinations
-
-    from correctocr_spark.ops.dedup import connected_components
-    from correctocr_spark.spark.streaming import pages_stream, streaming_lsh_candidates
-    from correctocr_spark.spark.synth import PAGES_SCHEMA
-
-    ts = datetime.datetime(2024, 1, 1)
-    text = "identical boilerplate text repeated across mirror hosts again and again"
-    inp = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    b1 = [("u://m1", ts, None, text, "en"), ("u://m2", ts, None, text, "en")]
-    spark.createDataFrame(b1, PAGES_SCHEMA).write.parquet(inp)
-
-    def run():
-        q = (
-            streaming_lsh_candidates(pages_stream(spark, inp))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    b2 = [("u://m3", ts, None, text, "en"), ("u://m4", ts, None, text, "en")]
-    spark.createDataFrame(b2, PAGES_SCHEMA).write.mode("append").parquet(inp)
-    run()
-
-    star = (
-        spark.read.parquet(out_dir).select("doc_a", "doc_b").distinct()
-    )
-    star_pairs = {(r["doc_a"], r["doc_b"]) for r in star.collect()}
-    members = {"u://m1", "u://m2", "u://m3", "u://m4"}
-    # star shape: every pair involves the first-seen hub
-    assert star_pairs and all("u://m1" in p for p in star_pairs)
-
-    clique = spark.createDataFrame(
-        sorted(combinations(sorted(members), 2)), "doc_a string, doc_b string"
-    )
-    cc_star = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(star, a_col="doc_a", b_col="doc_b").collect()
-    }
-    cc_clique = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(clique, a_col="doc_a", b_col="doc_b").collect()
-    }
-    assert cc_star == cc_clique == {m: "u://m1" for m in members}
-
-
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """The cluster-grade checkpoint path (survives executor loss on long
     multi-round jobs) produces identical labels."""

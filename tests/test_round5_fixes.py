@@ -285,58 +285,6 @@ def test_cli_curate_quality_incremental(tmp_path, spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming bridge to the durable MinHash index
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_index_candidates_survives_restart(spark, tmp_path):
-    """Candidates found AFTER a restart include PRE-restart docs, even
-    with a FRESH checkpoint (so the continuity comes from the durable
-    index, not the state store): run 1 indexes batch A; run 2 — new
-    query, new checkpoint — sees a near-dup of an A doc and pairs it."""
-    import datetime
-
-    from correctocr_spark.spark.streaming import (
-        pages_stream,
-        streaming_index_candidates,
-    )
-    from correctocr_spark.spark.synth import PAGES_SCHEMA
-
-    ts = datetime.datetime(2024, 1, 1)
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    in1 = str(tmp_path / "in1")
-    in2 = str(tmp_path / "in2")
-    idx = str(tmp_path / "idx")
-    out = str(tmp_path / "pairs")
-    b1 = [
-        ("u://a", ts, None, base, "en"),
-        ("u://b", ts, None, "totally unrelated words here now", "en"),
-    ]
-    spark.createDataFrame(b1, PAGES_SCHEMA).write.parquet(in1)
-    q = streaming_index_candidates(
-        pages_stream(spark, in1), idx, out, str(tmp_path / "ck1")
-    )
-    q.awaitTermination(120)
-
-    # restart: separate input dir AND checkpoint — only the index links
-    # the runs
-    b2 = [("u://c", ts, None, base.replace("lazy", "sleepy"), "en")]
-    spark.createDataFrame(b2, PAGES_SCHEMA).write.parquet(in2)
-    q2 = streaming_index_candidates(
-        pages_stream(spark, in2), idx, out, str(tmp_path / "ck2")
-    )
-    q2.awaitTermination(120)
-
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.read.parquet(out).distinct().collect()
-    }
-    assert ("u://a", "u://c") in pairs
-    assert all("u://b" not in p for p in pairs)
-    spark.catalog.clearCache()
-
-
-# ---------------------------------------------------------------------------
 # unicode normalization (vectorized pandas UDF)
 # ---------------------------------------------------------------------------
 

@@ -76,49 +76,6 @@ def test_correct_stream(spark, pipeline, tmp_path):
     assert done.select("url").distinct().count() == 35
 
 
-def test_streaming_dedup_stateful(spark, tmp_path):
-    """applyInPandasWithState: cross-batch exact dedup keeps only the
-    first page per content fingerprint."""
-    import datetime
-
-    from correctocr_spark.spark.streaming import pages_stream, streaming_dedup
-    from correctocr_spark.spark.synth import PAGES_SCHEMA
-
-    ts = datetime.datetime(2024, 1, 1)
-    inp = str(tmp_path / "in")
-    b1 = [("u://a", ts, None, "same text", "en"), ("u://b", ts, None, "other", "en")]
-    spark.createDataFrame(b1, PAGES_SCHEMA).write.parquet(inp)
-
-    out_dir = str(tmp_path / "out")
-    q = (
-        streaming_dedup(pages_stream(spark, inp))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 2
-
-    # batch 2: a duplicate of "same text" and one new doc
-    b2 = [("u://c", ts, None, "same text", "en"), ("u://d", ts, None, "fresh", "en")]
-    spark.createDataFrame(b2, PAGES_SCHEMA).write.mode("append").parquet(inp)
-    q = (
-        streaming_dedup(pages_stream(spark, inp))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["url"] for r in spark.read.parquet(out_dir).collect()}
-    assert "u://d" in rows and "u://c" not in rows  # state dropped the dup
-    assert len(rows) == 3
-
-
 def test_crawl_rate_metrics_watermark(spark):
     from correctocr_spark.spark.streaming import crawl_rate_metrics
     from correctocr_spark.spark.synth import synth_pages
@@ -286,45 +243,6 @@ def test_train_then_correct_lifecycle(spark):
     pages = spark.createDataFrame([("u1", "th3 1in3 gr0up tab13 unseen")], ["url", "text"])
     out = pipe.corrected(pages, strategy="join").collect()[0]
     assert out["corrected"] == "the line group table unseen"
-
-
-def test_streaming_lsh_candidates(spark, tmp_path):
-    """Cross-batch near-dup candidate stream: batch-2 docs sharing a band
-    with batch-1 docs emit pairs against the bucket's first-seen url."""
-    import datetime
-
-    from correctocr_spark.spark.streaming import pages_stream, streaming_lsh_candidates
-
-    from correctocr_spark.spark.synth import PAGES_SCHEMA
-
-    ts = datetime.datetime(2024, 1, 1)
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    inp = str(tmp_path / "in")
-    b1 = [("u://a", ts, None, base, "en"), ("u://b", ts, None, "totally unrelated words here now", "en")]
-    spark.createDataFrame(b1, PAGES_SCHEMA).write.parquet(inp)
-
-    out_dir = str(tmp_path / "out")
-
-    def run():
-        q = (
-            streaming_lsh_candidates(pages_stream(spark, inp))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    # batch 2: a near-duplicate of base (one word changed) + a fresh doc
-    b2 = [("u://c", ts, None, base.replace("lazy", "sleepy"), "en")]
-    spark.createDataFrame(b2, PAGES_SCHEMA).write.mode("append").parquet(inp)
-    run()
-
-    pairs = {(r["doc_a"], r["doc_b"]) for r in spark.read.parquet(out_dir).collect()}
-    assert ("u://a", "u://c") in pairs          # cross-batch candidate found
-    assert all("u://b" not in p for p in pairs)  # unrelated doc never paired
 
 
 class TestQuantizeEmbeddings:
@@ -656,56 +574,3 @@ class TestWinnowing:
         assert all(a < b for a, b in got)
         assert not any(a < 6 and b < 6 for a, b in got), got
 
-
-def test_streaming_shard_manifest_matches_batch(spark, tmp_path):
-    """foreachBatch manifest maintenance across two restarts equals the
-    batch shard_manifest of the full union — the modular checksum's
-    mergeability carried into streaming ingest."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from correctocr_spark.ops.cleaning import shard_manifest
-    from correctocr_spark.spark.streaming import (
-        pages_stream,
-        streaming_shard_manifest,
-    )
-    from correctocr_spark.spark.synth import PAGES_SCHEMA
-
-    ts = datetime.datetime(2024, 1, 1)
-    inp = str(tmp_path / "in")
-    man = str(tmp_path / "manifest")
-    b1 = [(f"u://{i}", ts, None, f"text {i}", "en") for i in range(20)]
-    spark.createDataFrame(b1, PAGES_SCHEMA).write.parquet(inp)
-
-    def with_shard(df):
-        return df.withColumn(
-            "shard", F.substring(F.md5(F.col("url")), 1, 1)
-        )
-
-    q = streaming_shard_manifest(
-        with_shard(pages_stream(spark, inp)),
-        man,
-        checkpoint=str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-
-    b2 = [(f"u://{i}", ts, None, f"text {i}", "en") for i in range(20, 50)]
-    spark.createDataFrame(b2, PAGES_SCHEMA).write.mode("append").parquet(inp)
-    q = streaming_shard_manifest(
-        with_shard(pages_stream(spark, inp)),
-        man,
-        checkpoint=str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["shard"]: (r["n_docs"], r["byte_mass"], r["checksum"])
-        for r in spark.read.parquet(man).collect()
-    }
-    full = spark.createDataFrame(b1 + b2, PAGES_SCHEMA)
-    want = {
-        r["shard"]: (r["n_docs"], r["byte_mass"], r["checksum"])
-        for r in shard_manifest(with_shard(full), "shard", id_col="url").collect()
-    }
-    assert got == want
